@@ -39,6 +39,7 @@ from typing import List, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from . import stage_cache
 from .similarity import (bucket_expr, cosine_topk, lsh_planes, norm,
                          probe_buckets)
 
@@ -154,17 +155,14 @@ def probe_index_batch(spark: SparkSession, path: str, queries: DataFrame,
     driver/executor broadcast build.
     """
     planes = planes or lsh_planes()
-    from .dedup import _adopt_slot
-    qb = _adopt_slot(
+    qb = stage_cache.persist(
         "ann_probe_qb",
-        (queries.select(F.col(qid_col).alias("qid"),
-                        F.col(vec_col).alias("qv"))
-         .withColumn("qbucket", bucket_expr(F.col("qv"), planes))
-         .withColumn("qnrm", norm(F.col("qv"))))
-        .persist())
-    # census the PERSISTED probe side (ADVICE r6: counting the raw query
-    # lineage evaluated it twice — once for the census, once in the join)
-    bcast_ok = qb.count() <= max_broadcast_queries
+        queries.select(F.col(qid_col).alias("qid"), F.col(vec_col).alias("qv"))
+        .withColumn("qbucket", bucket_expr(F.col("qv"), planes))
+        .withColumn("qnrm", norm(F.col("qv"))))
+    # census = the persist's count (counting the raw query lineage would
+    # evaluate it twice — once for the census, once in the join)
+    bcast_ok = stage_cache.rows("ann_probe_qb", spark) <= max_broadcast_queries
     hint = F.broadcast if bcast_ok else (lambda df: df)
     idx = (spark.read.parquet(_sub(path, VECTORS))
            .withColumn("nrm", norm(F.col("v"))))

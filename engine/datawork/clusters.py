@@ -26,6 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from . import stage_cache
+
 #: propagation rounds used by the most recent duplicate_clusters call in
 #: this process — scale-soak telemetry (convergence must stay well under
 #: max_iterations; see tools/dedup_stress.py)
@@ -121,8 +123,7 @@ def duplicate_clusters(pairs: DataFrame, max_iterations: int = 15,
                                  F.col("id_a").alias("dst")))
              .distinct()
              .repartition(F.col("dst")))
-    from engine.datawork.dedup import _cache_slot
-    edges = _cache_slot("cluster_edges", edges)
+    edges = stage_cache.persist("cluster_edges", edges)
     labels = (edges.select(F.col("src").alias("id")).distinct()
               .withColumn("label", F.col("id")))
 

@@ -31,6 +31,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from . import stage_cache
+
 #: md5-hash bucket in [0, 1e6) — the corpus.hash_sample idiom at ppm
 #: resolution. Deterministic across engines (md5 of the decimal id string).
 _PPM = 1_000_000
@@ -255,13 +257,12 @@ def curate_survivors(docs: DataFrame, bench: DataFrame,
       3. decontamination — drop docs sharing >= contamination_max of
                           their 3-grams with the eval set
 
-    The quality and dedup stage boundaries are PERSISTED (bounded cache
-    slots, materialized by the count that doubles as the stage census):
-    left lazy, ``quality`` is re-evaluated by every consumer (the
+    The quality and dedup stage boundaries are stage-cache checkpoints
+    (``stage_cache.checkpoint``), materialized once when built: left lazy, ``quality`` is re-evaluated by every consumer (the
     candidate chain, the exact-fingerprint window, the anti-join base —
     a full quality-regex pass each) and ``deduped`` by both the
     decontamination scan and the final anti-join. This is the
-    persist-the-stage-boundaries tradeoff the funnel report needs anyway
+    store-the-stage-boundaries tradeoff the funnel report needs anyway
     — each stage is re-run exactly once per wave, never per consumer.
     """
     _, _, clean = _funnel_stages(docs, bench, contamination_max,
@@ -271,29 +272,28 @@ def curate_survivors(docs: DataFrame, bench: DataFrame,
 
 def _funnel_stages(docs: DataFrame, bench: DataFrame,
                    contamination_max: float, id_col: str, text_col: str):
-    """(quality, deduped, clean) with the first two PERSISTED and counted
-    — the shared construction behind curate_survivors / curate_funnel."""
+    """(quality, deduped, clean) with the first two checkpointed — the
+    shared construction behind curate_survivors / curate_funnel."""
     from .clusters import duplicate_clusters
     from .corpus import deduplicated_corpus_full
-    from .dedup import _keyed_slot, _stage_slot, minhash_lsh_candidates
+    from .dedup import minhash_lsh_candidates
     from .textstats import with_quality_flags
     cols = docs.columns
-    # every boundary is a lineage-TRUNCATING _stage_slot: the funnel is
-    # deep, and each un-truncated downstream action re-analyzes the whole
-    # upstream tree on the driver (measured 4 s to count a cached 4k-row
-    # stage). Truncated, every later stage/count plans over a tiny scan.
-    quality = _stage_slot(
+    # every boundary is a checkpoint: the funnel is deep, and each
+    # un-truncated downstream action re-analyzes the whole upstream tree on
+    # the driver (measured 4 s to count a cached 4k-row stage)
+    quality = stage_cache.checkpoint(
         "curate_quality",
         (with_quality_flags(docs, text_col=text_col)
          .filter(F.col("pass_quality")).select(*cols)))
-    # the cluster labels come out of pointer doubling already truncated
-    # (checkpoint scan) and could never sameSemantics-match across calls —
-    # keyed on the INPUT (candidate) plan instead, a funnel report reuses
-    # the labels a curate call just converged
+    # the cluster labels come out of pointer doubling as a checkpoint scan
+    # that never sameSemantics-matches across calls — keyed on the INPUT
+    # (candidate) plan instead, a funnel report reuses the labels a curate
+    # call just converged
     cand = minhash_lsh_candidates(quality, id_col=id_col, text_col=text_col)
-    clusters = _keyed_slot("curate_clusters", cand,
-                           lambda: duplicate_clusters(cand))
-    deduped = _stage_slot(
+    clusters = stage_cache.checkpoint("curate_clusters", cand,
+                                      lambda: duplicate_clusters(cand))
+    deduped = stage_cache.checkpoint(
         "curate_deduped",
         deduplicated_corpus_full(quality, clusters, id_col=id_col,
                                  text_col=text_col))
@@ -310,14 +310,13 @@ def curate_corpus(docs: DataFrame, bench: DataFrame, budget: int,
                   text_col: str = "text") -> DataFrame:
     """quality → dedup → decontaminate → temperature-sample: the final
     sampled mixture (see curate_survivors for the funnel stages)."""
-    from .dedup import _stage_slot
     survivors = curate_survivors(docs, bench, contamination_max,
                                  id_col, text_col)
     # temperature_sample consumes its input twice (group census + keep
     # join) and needs only (id, group) — truncate that narrow projection
     # so the decontamination anti-join runs once, not per consumer
-    keyed = _stage_slot("curate_keyed",
-                        survivors.select(id_col, group_col))
+    keyed = stage_cache.checkpoint("curate_keyed",
+                                   survivors.select(id_col, group_col))
     return temperature_sample(keyed, budget=budget,
                               group_col=group_col, id_col=id_col)
 
@@ -331,18 +330,18 @@ def curate_funnel(docs: DataFrame, bench: DataFrame, budget: int,
     dedup / decontaminated / sampled.
 
     Stages are materialized in order through ``curate_survivors``'s
-    persisted boundaries, so each count reads a cached stage instead of
+    checkpointed boundaries, so each count reads a cached stage instead of
     re-running the overlapping funnel lineage per stage (the lazy
     union-of-aggregates spelling re-evaluated 1+1+2+3+4 stage plans; this
     evaluates each exactly once). The counts are collected as the stages
     materialize and returned as a local relation — same rows, same
     schema."""
-    from .dedup import _stage_slot
     spark = docs.sparkSession
     n_input = docs.count()
     quality, deduped, clean = _funnel_stages(docs, bench, contamination_max,
                                              id_col, text_col)
-    keyed = _stage_slot("curate_keyed", clean.select(id_col, group_col))
+    keyed = stage_cache.checkpoint("curate_keyed",
+                                   clean.select(id_col, group_col))
     n_clean = keyed.count()
     sampled = temperature_sample(keyed, budget=budget, group_col=group_col,
                                  id_col=id_col)

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from . import stage_cache
 from .textstats import fingerprint
 
 MINHASH_K = 64      # signature length (production-scale; 8 was demo-sized)
@@ -30,235 +31,6 @@ MINHASH_BANDS = 16  # bands of 4 → s-curve midpoint (1/16)^(1/4) = 0.5;
 #                     J=0.5 ≈ 0.64 (measured: tools/recall_report.py)
 SIMHASH_BITS = 32
 SIMHASH_BANDS = 4   # bands of 8 bits → all pairs with Hamming ≤ 3 share ≥1 band
-
-# Bounded-cache registry: each helper persists one small intermediate table
-# per slot; re-invocations (bench loops, long driver sessions) would leak
-# cached blocks forever, so each slot unpersists its predecessor. Keyed by
-# (applicationId, name) so two sessions sharing one driver process do not
-# thrash each other's slots.
-_CACHE_SLOTS: dict = {}
-
-
-def _prune_dead_slots(current_app: str) -> None:
-    """Drop slot entries whose owning application has stopped (their
-    cached blocks died with the context; only the dict references
-    remain). Entries of OTHER live applications — concurrent sessions in
-    one driver — are kept: that isolation is the point of the app-scoped
-    key."""
-    for key in list(_CACHE_SLOTS):
-        app, _ = key
-        if app == current_app:
-            continue
-        try:
-            if _CACHE_SLOTS[key].sparkSession.sparkContext.applicationId == app:
-                continue  # still live
-        except Exception:
-            pass
-        _CACHE_SLOTS.pop(key, None)
-    for key in list(_KEYED_SLOTS):
-        if key[0] != current_app:
-            _KEYED_SLOTS.pop(key, None)
-
-
-def report_cache_health(spark) -> list:
-    """Eviction visibility for the cache slots (ROUND5 lead: the DSIR
-    bucket slot holds ~2 ints × grams; under memory pressure Spark can
-    evict partitions mid-job and the plan silently recomputes them —
-    correct, but the cost is invisible without this). One JVM call:
-    every persisted RDD with fewer cached partitions than it owns is
-    returned as (name, cached, total) and logged at WARNING."""
-    import logging
-    out = []
-    try:
-        for info in spark.sparkContext._jsc.sc().getRDDStorageInfo():
-            cached, total = info.numCachedPartitions(), info.numPartitions()
-            if 0 < cached < total:
-                row = (info.name(), cached, total)
-                out.append(row)
-                logging.getLogger(__name__).warning(
-                    "cache slot partially evicted: %s — %d/%d partitions "
-                    "cached (evicted parts recompute from lineage)", *row)
-    except Exception:
-        pass  # py4j surface drift must never fail the job it observes
-    return out
-
-
-def clear_cache_slots(spark=None) -> None:
-    """Unpersist and drop every slot owned by ``spark`` (or all slots when
-    None). Long-lived driver sessions whose INPUT FILES are rewritten in
-    place must call this between runs: sameSemantics matches on the plan
-    (including the path), not the file contents, so a matching slot would
-    otherwise serve the pre-rewrite data (ADVICE r3 — the documented
-    staleness contract of _cache_slot)."""
-    app = spark.sparkContext.applicationId if spark is not None else None
-    for key in list(_CACHE_SLOTS):
-        if app is not None and key[0] != app:
-            continue
-        try:
-            _CACHE_SLOTS[key].unpersist()
-        except Exception:
-            pass
-        _CACHE_SLOTS.pop(key, None)
-    for key in list(_KEYED_SLOTS):
-        if app is None or key[0] == app:
-            _KEYED_SLOTS.pop(key, None)
-
-
-def _cache_slot(name: str, df: DataFrame) -> DataFrame:
-    """Fill slot ``name`` with ``df`` persisted — UNLESS the slot already
-    holds a semantically identical plan, in which case the existing
-    (possibly already materialized) table is returned. That reuse is how
-    e.g. guard_report shares the band-bucket aggregate that
-    minhash_lsh_candidates just built instead of paying the k-min
-    signature aggregation twice in a combined run.
-
-    Staleness contract: reuse is by PLAN equality — if the files under an
-    input path are rewritten in place during one driver session, a
-    matching slot keeps serving the data it materialized first. Callers
-    with mutable inputs call ``clear_cache_slots`` between runs."""
-    key = (df.sparkSession.sparkContext.applicationId, name)
-    _prune_dead_slots(key[0])
-    prev = _CACHE_SLOTS.get(key)
-    if prev is not None:
-        try:
-            if prev.sameSemantics(df):
-                return prev
-        except Exception:
-            pass
-        try:
-            prev.unpersist()
-        except Exception:
-            pass
-    cached = df.persist()
-    # EAGER materialization: consumers of a slot run as concurrent stages
-    # of one action (hot-key agg + both self-join sides), and Spark does
-    # not dedup in-flight computation of a not-yet-populated cache — each
-    # concurrent stage recomputes the full lineage. Measured at the 500k
-    # soak: the k-min signature aggregate ran up to 3× per cold candidates
-    # call (185-268 s observed) vs once when the cache is populated first
-    # (~97 s). The count's work is not wasted — it IS the one computation
-    # the consumers then share.
-    cached.count()
-    _CACHE_SLOTS[key] = cached
-    return _CACHE_SLOTS[key]
-
-
-def _adopt_slot(name: str, df: DataFrame) -> DataFrame:
-    """Register an ALREADY-persisted DataFrame under slot ``name``,
-    evicting (unpersisting) the slot's previous occupant — for callers
-    that materialize the table themselves as part of their own census
-    (e.g. the incremental probe counts its bucket table anyway). Same
-    bounded-memory contract as ``_cache_slot``, without the eager count."""
-    key = (df.sparkSession.sparkContext.applicationId, name)
-    _prune_dead_slots(key[0])
-    prev = _CACHE_SLOTS.get(key)
-    if prev is not None and prev is not df:
-        try:
-            if prev.sameSemantics(df):
-                # identical plan already cached (e.g. the funnel report
-                # re-deriving the stage a curate call just materialized):
-                # keep the warm occupant, drop the new persist
-                df.unpersist()
-                return prev
-        except Exception:
-            pass
-        try:
-            prev.unpersist()
-        except Exception:
-            pass
-    _CACHE_SLOTS[key] = df
-    return df
-
-
-#: (applicationId, name) → (key_plan, result) — for results whose OWN plan
-#: cannot sameSemantics-match across calls (checkpoint/localCheckpoint
-#: truncates lineage to an opaque RDD scan), keyed on the INPUT plan that
-#: deterministically produced them instead. Same bounded one-per-slot,
-#: session-scoped contract as _CACHE_SLOTS.
-_KEYED_SLOTS: dict = {}
-
-
-def _keyed_slot(name: str, key_df: DataFrame, builder) -> DataFrame:
-    """Return the slot's stored result when its stored KEY plan is
-    semantically identical to ``key_df``; else run ``builder()`` and store
-    (key plan, result). For deterministic derivations that materialize via
-    checkpoints (e.g. duplicate_clusters' pointer doubling), where the
-    result's plan is an opaque checkpoint scan that can never match."""
-    key = (key_df.sparkSession.sparkContext.applicationId, name)
-    _prune_dead_slots(key[0])
-    prev = _KEYED_SLOTS.get(key)
-    if prev is not None:
-        prev_key, prev_df = prev
-        try:
-            if prev_key.sameSemantics(key_df):
-                return prev_df
-        except Exception:
-            pass
-    out = builder()
-    _KEYED_SLOTS[key] = (key_df, out)
-    return out
-
-
-def _stage_slot(name: str, df: DataFrame,
-                key_df: DataFrame | None = None) -> DataFrame:
-    """LINEAGE-TRUNCATING stage boundary: materialize ``df`` once (eager
-    localCheckpoint) and return a frame whose plan is a tiny RDD scan.
-
-    Deep pipelines (the curation funnel) otherwise pay seconds of DRIVER
-    analysis per action — every count/join over a late stage re-analyzes
-    the full upstream tree even when the data itself is cached (measured:
-    4 s to count a cached 2-column, 4k-row stage at sf0.1). Truncation
-    makes every downstream action's tree small. Cross-call reuse is keyed
-    on the DEFINING plan (_keyed_slot) because the truncated result can
-    never sameSemantics-match. NOTE: truncation drops outputPartitioning
-    — use _cache_slot where consumers rely on the cache's partitioning
-    (minhash buckets, the LSH base)."""
-    # ``key_df``: a cache-state-INDEPENDENT twin of ``df``'s defining
-    # plan, for builders whose plan embeds opportunistically-peeked
-    # caches (the minhash signature slot peeks the shingles slot, so
-    # its build plan changes when another operator fills that cache —
-    # the raw un-peeked plan is the stable identity)
-    return _keyed_slot(name, key_df if key_df is not None else df,
-                       lambda: df.localCheckpoint(eager=True))
-
-
-def _slot_matches(name: str, df: DataFrame) -> bool:
-    """True when slot ``name`` already holds a semantically identical plan
-    (i.e. a consumer of this plan would reuse the cache, paying nothing).
-    Checks both registries: persisted slots match on the stored plan,
-    keyed (lineage-truncated) slots on their stored KEY plan."""
-    key = (df.sparkSession.sparkContext.applicationId, name)
-    prev = _CACHE_SLOTS.get(key)
-    try:
-        if prev is not None and prev.sameSemantics(df):
-            return True
-    except Exception:
-        pass
-    kv = _KEYED_SLOTS.get(key)
-    try:
-        return kv is not None and kv[0].sameSemantics(df)
-    except Exception:
-        return False
-
-
-def _cache_slot_peek(name: str, df: DataFrame) -> DataFrame:
-    """Opportunistic reuse: the slot's persisted table when it already holds
-    a semantically identical plan, else ``df`` UN-persisted — for consumers
-    that profit from another op's cache but must not pay the persist when
-    running standalone (e.g. the minhash candidate join reuses exploded
-    shingles that ngram_jaccard_pairs/guard_report cached, but a standalone
-    run streams the explode straight into the signature aggregation —
-    materializing ~400 shingle rows/doc there measured 2.8× slower at 50k
-    docs)."""
-    key = (df.sparkSession.sparkContext.applicationId, name)
-    prev = _CACHE_SLOTS.get(key)
-    try:
-        if prev is not None and prev.sameSemantics(df):
-            return prev
-    except Exception:
-        pass
-    return df
-
 
 # driver-side count of reactive rebalances — the proactive path
 # (engine.spark.job.tune_input_splits, set by the CLIs/soaks before the
@@ -356,7 +128,7 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
     """
     # one shared "shingles" slot across the dedup family: jaccard, the
     # minhash bucket build, and guard_report all explode the same table
-    sh = _cache_slot("shingles", shingles(df, id_col, text_col, n))  # consumed 4×
+    sh = stage_cache.persist("shingles", shingles(df, id_col, text_col, n))
     sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
     hot = (sh.groupBy("shingle").agg(F.count("*").alias("df_count"))
              .filter(F.col("df_count") > max_df).select("shingle"))
@@ -392,7 +164,7 @@ def ngram_containment_pairs(df: DataFrame, id_col: str = "doc_id",
     work is a second division. Both directions are evaluated and each
     row names its roles: (id_contained, id_container, containment,
     jaccard) with ``containment`` = |∩| / |shingles(id_contained)|."""
-    sh = _cache_slot("shingles", shingles(df, id_col, text_col, n))
+    sh = stage_cache.persist("shingles", shingles(df, id_col, text_col, n))
     sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
     hot = (sh.groupBy("shingle").agg(F.count("*").alias("df_count"))
              .filter(F.col("df_count") > max_df).select("shingle"))
@@ -477,20 +249,17 @@ def minhash_band_buckets(df: DataFrame, id_col: str = "doc_id",
 def _minhash_sig_slot(df: DataFrame, id_col: str, text_col: str, n: int,
                       k: int = MINHASH_K) -> DataFrame:
     """The shared, cached signature table (id, mh0..mhk-1) — 1 row/doc,
-    so the persist is cheap, and EVERY signature consumer (bucket build,
+    so storing it is cheap, and EVERY signature consumer (bucket build,
     verified-pairs' both verify sides) reads it instead of re-running the
     shingle explode + k-min aggregation."""
-    sh = _cache_slot_peek("shingles", shingles(df, id_col, text_col, n))
-    # lineage-truncating slot (same defining-plan matching as _cache_slot):
-    # every consumer of the signature table — the bucket build and BOTH
-    # verify sides of minhash_verified_pairs — then plans over a tiny RDD
-    # scan instead of re-analyzing the shingle+k-min aggregation tree per
-    # action (no consumer keys on a signature partitioning, so nothing is
-    # lost by dropping outputPartitioning)
-    return _stage_slot(
-        "minhash_sigs",
-        minhash_signatures(df, id_col, text_col, n, k, shingles_df=sh),
-        key_df=minhash_signatures(df, id_col, text_col, n, k))
+    # checkpointed: every consumer of the signature table — the bucket
+    # build and BOTH verify sides of minhash_verified_pairs — then plans
+    # over a tiny RDD scan instead of re-analyzing the shingle+k-min
+    # aggregation tree per action (no consumer keys on a signature
+    # partitioning, so nothing is lost by dropping outputPartitioning). A
+    # persisted "shingles" entry feeds it through Spark's cache lookup.
+    return stage_cache.checkpoint(
+        "minhash_sigs", minhash_signatures(df, id_col, text_col, n, k))
 
 
 def _minhash_bucket_slot(df: DataFrame, id_col: str, text_col: str, n: int,
@@ -507,7 +276,7 @@ def _minhash_bucket_slot(df: DataFrame, id_col: str, text_col: str, n: int,
     helper — the slot reuses via sameSemantics, so a shape drift would
     silently double the signature aggregation in combined runs."""
     sig = _minhash_sig_slot(df, id_col, text_col, n, k)
-    return _cache_slot(
+    return stage_cache.persist(
         "minhash_buckets",
         _band_explode(sig, k, bands).repartition("band", "bucket"))
 
@@ -546,7 +315,7 @@ def minhash_lsh_candidates(df: DataFrame, id_col: str = "doc_id",
     # Shingles are reused from the shared slot when jaccard/guard_report
     # already cached them, but never persisted by this path (the explode
     # streams into the signature aggregation; materializing ~400 rows/doc
-    # costs more than it saves — see _cache_slot_peek). The signature and
+    # costs more than it saves). The signature and
     # bucket slots are shared with guard_report and minhash_verified_pairs,
     # so a combined run pays the k-min aggregation exactly once; buckets
     # are pre-partitioned by (band, bucket) so the self-join adds no
@@ -636,14 +405,10 @@ def guard_report(docs: DataFrame, emb: DataFrame | None = None,
     # shingle consumers: census + sig aggregation) — when signatures are
     # already cached, the census is the shingles' sole consumer and
     # streaming it beats materializing ~400 rows/doc.
-    sh_plan = shingles(docs, id_col, text_col, n)
-    sig_plan = minhash_signatures(
-        docs, id_col, text_col, n,
-        shingles_df=_cache_slot_peek("shingles", sh_plan))
-    if _slot_matches("minhash_sigs", sig_plan):
-        sh = _cache_slot_peek("shingles", sh_plan)
-    else:
-        sh = _cache_slot("shingles", sh_plan)
+    sh = shingles(docs, id_col, text_col, n)
+    sig_plan = minhash_signatures(docs, id_col, text_col, n)
+    if stage_cache.peek("minhash_sigs", sig_plan) is sig_plan:
+        sh = stage_cache.persist("shingles", sh)
     # census keys on md5(shingle), not the raw string: identical counts
     # (md5 is injective for practical purposes; the oracle groups by the
     # same digest), but the shuffle moves 16-byte keys instead of ~60-byte
@@ -711,7 +476,8 @@ def simhash_near_pairs(df: DataFrame, id_col: str = "doc_id",
     """Pairs with Hamming(simhash) ≤ max_hamming. Candidates via banded
     exact-match join (pigeonhole: ≤3 differing bits over 4 bands leaves ≥1
     identical band), then exact bit_count verify."""
-    sh = _cache_slot("simhash_sigs", simhash(df, id_col, text_col, bits))
+    sh = stage_cache.persist("simhash_sigs",
+                             simhash(df, id_col, text_col, bits))
     width = bits // bands
     mask = (1 << width) - 1
     # ONE explode over band structs (same shape as minhash_band_buckets —

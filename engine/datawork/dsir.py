@@ -29,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from . import stage_cache
+
 DSIR_BUCKETS = 4096
 
 
@@ -66,9 +68,9 @@ def dsir_weights(raw: DataFrame, target: DataFrame,
     AFTER the per-doc sum, the established engine-exactness pattern for
     double reductions.
     """
-    from .dedup import _cache_slot, _ensure_parallelism
+    from .dedup import _ensure_parallelism
     # the raw gram stream feeds BOTH the model counts and the scoring —
-    # persist the bucketed stream (two ints/row) in a bounded cache slot
+    # persist the bucketed stream (two ints/row) in a bounded cache entry
     # so the explode+md5 runs once per job; uncached (evicted) the plan
     # recomputes, which is the same two-pass shape and still never
     # shuffles grams. An alternative one-pass spelling (aggregate by
@@ -88,7 +90,7 @@ def dsir_weights(raw: DataFrame, target: DataFrame,
     grams = F.when(
         F.trim(F.coalesce(F.col(text_col), F.lit(""))) != "",
         F.concat(w, bi))
-    bstream = _cache_slot(
+    bstream = stage_cache.persist(
         "dsir_raw_buckets",
         _ensure_parallelism(raw)
         .select(F.col(id_col).alias("id"),

@@ -37,6 +37,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from . import stage_cache
 from .incremental import MAX_BROADCAST_ROWS
 from .similarity import LSH_BANDS, LSH_ROWS, norm
 
@@ -268,10 +269,9 @@ def semdedup_wave_losers(new_emb: DataFrame, index_path: str,
     censused with the same fallback as incremental_embedding_pairs."""
     from pyspark.sql import Window
     spark = new_emb.sparkSession
-    from .dedup import _stage_slot
     cent = spark.read.parquet(_sub(index_path, CELLS))
-    wave = _stage_slot("sem_wave",
-                       _semantic_assign(new_emb, cent, id_col, vec_col))
+    wave = stage_cache.checkpoint(
+        "sem_wave", _semantic_assign(new_emb, cent, id_col, vec_col))
 
     n_wave = wave.count()
     hint = F.broadcast if n_wave <= max_broadcast_rows else (lambda df: df)
@@ -350,10 +350,9 @@ def retroactive_wave_losers(new_emb: DataFrame, index_path: str,
     to this ``threshold``."""
     from pyspark.sql import Window
     spark = new_emb.sparkSession
-    from .dedup import _stage_slot
     cent = spark.read.parquet(_sub(index_path, CELLS))
-    wave = _stage_slot("sem_wave",
-                       _semantic_assign(new_emb, cent, id_col, vec_col))
+    wave = stage_cache.checkpoint(
+        "sem_wave", _semantic_assign(new_emb, cent, id_col, vec_col))
     n_wave = wave.count()
     hint = F.broadcast if n_wave <= max_broadcast_rows else (lambda df: df)
 
@@ -409,22 +408,19 @@ def incremental_embedding_pairs(new_emb: DataFrame, index_path: str,
     persisted + wave population exceeds it is dropped from candidate
     generation on BOTH sides — exactly what the full recompute's guard
     would do, so exactness survives the cap."""
-    from .dedup import _adopt_slot, _stage_slot
     spark = new_emb.sparkSession
     bands, rows = read_layout(spark, index_path)
-    wave = _stage_slot("embincr_wave",
-                       _base(new_emb, id_col, vec_col, bands, rows))
+    wave = stage_cache.checkpoint(
+        "embincr_wave", _base(new_emb, id_col, vec_col, bands, rows))
     # pre-partitioned by (band, bucket) so the occupancy aggregate and both
-    # candidate joins reuse the cache's partitioning (no extra Exchange);
-    # slot registration bounds the session's cached blocks (ADVICE r6)
-    b_new = _adopt_slot("embincr_b_new",
-                        _explode(wave, bands, rows)
-                        .repartition("band", "bucket").persist())
+    # candidate joins reuse the cache's partitioning (no extra Exchange)
+    b_new = stage_cache.persist(
+        "embincr_b_new",
+        _explode(wave, bands, rows).repartition("band", "bucket"))
 
-    # one census count materializes b_new AND its cached parent wave;
-    # _explode emits exactly ``bands`` rows/vector, so the count IS
-    # n_wave·bands — the broadcast-size variable
-    bcast_ok = b_new.count() <= max_broadcast_rows
+    # the persist's count: _explode emits exactly ``bands`` rows/vector,
+    # so it IS n_wave·bands — the broadcast-size variable
+    bcast_ok = stage_cache.rows("embincr_b_new", spark) <= max_broadcast_rows
     hint = F.broadcast if bcast_ok else (lambda df: df)
 
     touched = b_new.select("band", "bucket").distinct()
@@ -460,10 +456,10 @@ def incremental_embedding_pairs(new_emb: DataFrame, index_path: str,
                   F.greatest(F.col("w.id"), F.col("c.id")).alias("id_b")))
     cand = nn.unionByName(no).distinct()
     # cand feeds five subtrees of the verify plan (both verify joins plus
-    # both arms of the id semi-join) — persist the wave-proportional set so
+    # both arms of the id semi-join) — store the wave-proportional set so
     # AQE materializes the nn/no/distinct lineage once, not per consumer
-    # (the incremental.py probe lesson; same bounded-slot contract)
-    cand = _stage_slot("embincr_cand", cand)
+    # (the incremental.py probe lesson)
+    cand = stage_cache.checkpoint("embincr_cand", cand)
 
     # exact-cosine verify: corpus vectors read ONLY for candidate ids
     # (id-sorted layout → row-group pruning); wave membership rides the

@@ -45,8 +45,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .dedup import (MINHASH_BANDS, MINHASH_K, _adopt_slot, _band_explode,
-                    _stage_slot, minhash_signatures)
+from . import stage_cache
+from .dedup import (MINHASH_BANDS, MINHASH_K, _band_explode,
+                    minhash_signatures)
 
 SIGS = "sigs"
 BUCKETS = "buckets"
@@ -151,7 +152,7 @@ def stream_dedup_ingest(stream_docs: DataFrame, index_path: str,
         # sign the wave ONCE: the probe's verify side and the index fold
         # read the same persisted signature table (r6 #7 — the old shape
         # paid the shingle+k-min pass twice per micro-batch)
-        sig = _stage_slot(
+        sig = stage_cache.checkpoint(
             "incr_sig_new", minhash_signatures(batch_df, id_col, text_col))
         pairs = incremental_verified_pairs(
             batch_df, index_path, id_col=id_col, text_col=text_col,
@@ -254,23 +255,22 @@ def incremental_verified_pairs(new_docs: DataFrame, index_path: str,
     # ``presigned`` = the wave's ALREADY-persisted signature table (must be
     # minhash_signatures(new_docs, ...) rows) — the probe-then-fold loop
     # signs the wave once and shares it with append_to_index (r6 #7)
-    sig_new = presigned if presigned is not None else _stage_slot(
+    sig_new = presigned if presigned is not None else stage_cache.checkpoint(
         "incr_sig_new", minhash_signatures(new_docs, id_col, text_col, n, k))
     # repartitioned by (band, bucket) BEFORE the persist (the
     # _minhash_bucket_slot trick): touched/distinct, the wave occupancy
     # aggregate, and both candidate joins all key on (band, bucket), so
     # they read the cache's outputPartitioning instead of each adding an
     # Exchange of the wave buckets
-    b_new = _adopt_slot("incr_b_new",
-                        _band_explode(sig_new, k, bands)
-                        .repartition("band", "bucket").persist())
+    b_new = stage_cache.persist(
+        "incr_b_new",
+        _band_explode(sig_new, k, bands).repartition("band", "bucket"))
 
-    # census: ONE count of the persisted bucket table — _band_explode emits
-    # exactly ``bands`` rows/doc, so b_new.count() IS the broadcast-size
-    # variable (n_wave·bands), and the count materializes b_new AND its
-    # cached parent sig_new in the same pass (the broadcast decision must
-    # come from the wave's REAL size, not a hope)
-    bcast_ok = b_new.count() <= max_broadcast_rows
+    # census: the persist's own count — _band_explode emits exactly
+    # ``bands`` rows/doc, so it IS the broadcast-size variable
+    # (n_wave·bands): the broadcast decision comes from the wave's REAL
+    # size, not a hope
+    bcast_ok = stage_cache.rows("incr_b_new", spark) <= max_broadcast_rows
     hint = F.broadcast if bcast_ok else (lambda df: df)
 
     # the wave's probe set — ≤ bands rows/doc, broadcast while small
@@ -318,11 +318,11 @@ def incremental_verified_pairs(new_docs: DataFrame, index_path: str,
     # Catalyst replans and AQE re-materializes the whole nn/no/distinct
     # lineage once per consumer (measured at sf0.1: a 228-job probe, ~60
     # redundant shuffle stages and seconds of driver planning). cand is
-    # wave-proportional by construction, so the lineage-truncating slot is
-    # bounded by the same contract as the broadcasts above — and the
-    # truncation keeps the verify join's analyzed tree small (the
-    # _stage_slot rationale).
-    cand = _stage_slot("incr_cand", cand)
+    # wave-proportional by construction, so the checkpoint is bounded by
+    # the same contract as the broadcasts above, and it keeps the verify
+    # join's analyzed tree small. Its plan reads the index, so an append
+    # or compaction of the index rebuilds it.
+    cand = stage_cache.checkpoint("incr_cand", cand)
 
     # verify via the signature estimate — corpus signatures are read ONLY
     # for candidate ids (semi-join; candidate volume ∝ wave, so the same

@@ -33,6 +33,8 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from . import stage_cache
+
 
 def pack_shards(docs: DataFrame, budget: int, id_col: str = "doc_id",
                 tokens: Optional[Column] = None,
@@ -50,8 +52,6 @@ def pack_shards(docs: DataFrame, budget: int, id_col: str = "doc_id",
     be non-null and unique (the dedup family's contract); the stream order
     is ascending ``id_col``. NULL token counts pack as 0.
     """
-    from .dedup import _cache_slot
-
     if budget < 1:
         raise ValueError(f"budget must be >= 1, got {budget}")
     if tokens is None:
@@ -80,8 +80,8 @@ def pack_shards(docs: DataFrame, budget: int, id_col: str = "doc_id",
             pdf["_cum"] = c
             yield pdf
 
-    local = _cache_slot("pack_cumsum",
-                        parted.mapInPandas(_running, schema=cum_schema))
+    local = stage_cache.persist(
+        "pack_cumsum", parted.mapInPandas(_running, schema=cum_schema))
     totals = (local.groupBy("_pid").agg(F.sum("n_tokens").alias("t"))
               .collect())
     offsets, acc = [], 0

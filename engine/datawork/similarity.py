@@ -29,6 +29,8 @@ from typing import List, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from . import stage_cache
+
 LSH_PLANES_SEED = 42
 LSH_N_PLANES = 8
 EMBED_DIM = 64
@@ -211,8 +213,7 @@ def train_kmeans(df: DataFrame, n_cells: int = IVF_CELLS,
     iteration so the plan stays flat over any iteration count. The base
     (v, nrm, fx) projection is computed once and cached."""
     from pyspark.sql import Window
-    from .dedup import _cache_slot, _keyed_slot
-    base = _cache_slot(
+    base = stage_cache.persist(
         "ivf_kmeans_base",
         df.select(F.col(id_col).alias("id"),
                   F.col(vec_col).cast("array<double>").alias("v"))
@@ -221,10 +222,9 @@ def train_kmeans(df: DataFrame, n_cells: int = IVF_CELLS,
     # the trained codebook is a deterministic function of (base, n_cells,
     # iters) and is re-derived by every consumer in a combined run (IVF
     # assignment + top-k + both SemDeDup index builds each call
-    # train_kmeans): memoize it keyed on the base plan, one slot per
-    # parameterization. The result is localCheckpoint-flat already (the
-    # per-iteration truncation), so the slot returns a tiny-scan frame.
-    return _keyed_slot(
+    # train_kmeans): memoize it keyed on the base plan, one entry per
+    # parameterization
+    return stage_cache.checkpoint(
         f"kmeans_cent_{n_cells}_{iters}_{dim}", base,
         lambda: _train_kmeans_loop(base, n_cells, iters, dim))
 
@@ -585,10 +585,9 @@ def banded_buckets_shared(df: DataFrame, id_col: str = "vec_id",
     """(id, band, bucket) derived from the ``embed_lsh_base`` cache slot
     when a cosine_pairs_above run already populated it (opportunistic —
     a standalone telemetry run computes the signatures fresh WITHOUT
-    paying a persist; see dedup._cache_slot_peek). Values are identical
+    paying a persist; see stage_cache.peek). Values are identical
     to banded_buckets: both slice the same banded_sig_expr string."""
-    from .dedup import _cache_slot_peek
-    base = _cache_slot_peek(
+    base = stage_cache.peek(
         "embed_lsh_base", _lsh_base_plan(df, id_col, vec_col, bands, rows))
     return _explode_bands(base.select("id", "sig"), bands, rows)
 
@@ -685,10 +684,9 @@ def cosine_pairs_above(df: DataFrame, threshold: float = 0.95,
 
     # sign bits for all bands·rows planes computed once; cached because the
     # candidate join consumes the banded table twice and the verify join
-    # consumes base twice (bounded slot, see dedup._cache_slot). The plan
-    # is built by _lsh_base_plan so guard telemetry can share the slot.
-    from .dedup import _cache_slot
-    base = _cache_slot(
+    # consumes base twice. The plan is built by _lsh_base_plan so guard
+    # telemetry can share the entry.
+    base = stage_cache.persist(
         "embed_lsh_base", _lsh_base_plan(df, id_col, vec_col, bands, rows))
     banded = _explode_bands(base.select("id", "sig"), bands, rows)
     cand = candidate_pairs_from_banded(banded, max_bucket)

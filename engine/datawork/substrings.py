@@ -50,6 +50,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import stage_cache
+
 
 def _tokens(text_col: str):
     """Whitespace tokens with empties dropped — identical spelling to the
@@ -192,13 +194,12 @@ def winnow_similar_pairs(docs: DataFrame, k: int = 4, w: int = 5,
     evidence — the same hot-key guard as dedup's MinHash-LSH buckets,
     bounding the per-gram pair fan-out at max_df^2).
     """
-    from .dedup import _cache_slot
     # the selection pass (gram explode + two window functions) feeds the
     # df-count AND both self-join sides — persist it once (repartitioned
     # by gram so the count, the guard join, and the pair join all run on
     # one co-partitioning; the fingerprint table is ~2/(w+1) of the gram
     # table, signature-sized like dedup's minhash sigs, not corpus-sized)
-    fp = _cache_slot(
+    fp = stage_cache.persist(
         "winnow_fp",
         winnow_fingerprints(docs, k=k, w=w, id_col=id_col,
                             text_col=text_col)

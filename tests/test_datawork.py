@@ -376,35 +376,46 @@ def test_cache_slot_reuses_semantically_equal_plan(spark, docs):
     """VERDICT r2 #6: guard_report must reuse the band-bucket table
     minhash_lsh_candidates built (one signature aggregation per combined
     run); shingles are only reused opportunistically (standalone minhash
-    must not pay the persist); slots are keyed per application."""
-    from engine.datawork import dedup
-    from engine.datawork.dedup import (
-        _CACHE_SLOTS, clear_cache_slots, minhash_lsh_candidates,
-        guard_report, ngram_jaccard_pairs)
-    clear_cache_slots(spark)  # isolate from slots other tests filled
-    minhash_lsh_candidates(docs).collect()
+    must not pay the persist); entries are keyed per application, and a
+    replaced entry's blocks are released."""
+    from engine.datawork import dedup, stage_cache
+    from engine.datawork.dedup import (guard_report, minhash_lsh_candidates,
+                                       ngram_jaccard_pairs)
+    stage_cache.clear(spark)  # isolate from entries other tests stored
     app = spark.sparkContext.applicationId
-    bucket_obj = _CACHE_SLOTS[(app, "minhash_buckets")]
+
+    def stored(name):
+        entry = stage_cache._ENTRIES.get((app, name))
+        return entry.frame if entry is not None else None
+
+    minhash_lsh_candidates(docs).collect()
+    bucket_obj = stored("minhash_buckets")
     guard_report(docs).collect()
     # same object: guard_report did NOT rebuild the signature aggregate
-    assert _CACHE_SLOTS[(app, "minhash_buckets")] is bucket_obj
+    assert stored("minhash_buckets") is bucket_obj
     # buckets were already cached → the shingle census was guard_report's
-    # only shingle consumer, so it STREAMED instead of filling the slot
-    assert (app, "shingles") not in _CACHE_SLOTS
-    # jaccard fills the shingles slot; a re-run of minhash then PEEKS it
-    # and still lands on the same cached buckets
+    # only shingle consumer, so it STREAMED instead of storing an entry
+    assert stored("shingles") is None
+    # jaccard stores the shingles; a re-run of minhash still lands on the
+    # same cached buckets
     ngram_jaccard_pairs(docs).collect()
-    shingle_obj = _CACHE_SLOTS[(app, "shingles")]
-    assert dedup._cache_slot_peek(
-        "shingles", dedup.shingles(docs)) is shingle_obj
+    shingle_obj = stored("shingles")
+    assert stage_cache.peek("shingles", dedup.shingles(docs)) is shingle_obj
     minhash_lsh_candidates(docs).collect()
-    assert _CACHE_SLOTS[(app, "minhash_buckets")] is bucket_obj
-    # a different input does NOT peek-match and DOES replace on fill
-    other = docs.limit(10)
-    assert dedup._cache_slot_peek(
-        "shingles", dedup.shingles(other)) is not shingle_obj
-    dedup._cache_slot("shingles", dedup.shingles(other))
-    assert _CACHE_SLOTS[(app, "shingles")] is not shingle_obj
+    assert stored("minhash_buckets") is bucket_obj
+    # a different input does NOT peek-match, and the peek stores nothing
+    other = dedup.shingles(docs.limit(10))
+    assert stage_cache.peek("shingles", other) is other
+    assert stored("shingles") is shingle_obj
+    assert not other.storageLevel.useMemory
+    # a store of a different plan replaces the entry and evicts the old
+    # occupant's blocks at once
+    evictions = stage_cache.COUNTERS["evictions"]
+    stage_cache.persist("shingles", other)
+    assert stored("shingles") is other
+    assert not shingle_obj.storageLevel.useMemory
+    assert stage_cache.COUNTERS["evictions"] == evictions + 1
+    assert stage_cache.stats(spark)["partially_evicted"] == []
 
 
 def test_deduplicated_corpus_full_layers_exact_over_guarded_lsh(spark):

@@ -42,9 +42,7 @@ def _split(emb, lo, hi):
 
 
 def _full_pairs_touching(emb, wave_ids, threshold=THRESH, max_bucket=None):
-    from engine.datawork.dedup import clear_cache_slots
     from engine.datawork.similarity import LSH_ROWS, cosine_pairs_above
-    clear_cache_slots()
     full = cosine_pairs_above(emb, threshold=threshold, bucketed=True,
                               rows=LSH_ROWS, max_bucket=max_bucket)
     rows = sorted((r.id_a, r.id_b, r.cosine) for r in full.collect()
@@ -178,9 +176,7 @@ def test_layout_frozen_in_index(spark, idx_path):
 
 
 def _semantic_full_losers(emb, cent, wave_ids, threshold=THRESH):
-    from engine.datawork.dedup import clear_cache_slots
     from engine.datawork.similarity import semdedup_losers
-    clear_cache_slots()
     full = semdedup_losers(emb, threshold=threshold, centroids=cent)
     return sorted((r.id, r.cell, r.kept_id, r.cosine)
                   for r in full.collect() if r.id in wave_ids)
@@ -290,7 +286,6 @@ def test_retroactive_losers_equal_full_minus_old(spark, idx_path):
     """retroactive == (losers(old ∪ new) − losers(old)) ∩ corpus, with
     identical (kept_id, cosine); every kept_id must be a wave doc (a
     newly-lost corpus doc's shadowers are all wave docs by definition)."""
-    from engine.datawork.dedup import clear_cache_slots
     from engine.datawork.embed_incremental import (retroactive_wave_losers,
                                                    write_semantic_index)
     from engine.datawork.similarity import semdedup_losers, train_kmeans
@@ -304,11 +299,9 @@ def test_retroactive_losers_equal_full_minus_old(spark, idx_path):
     got = _semantic_wave(retroactive_wave_losers(wave, idx_path,
                                                  threshold=THRESH))
 
-    clear_cache_slots()
     full = {r.id: (r.cell, r.kept_id, r.cosine)
             for r in semdedup_losers(emb, threshold=THRESH,
                                      centroids=cent).collect()}
-    clear_cache_slots()
     old = {r.id for r in semdedup_losers(corpus, threshold=THRESH,
                                          centroids=cent).collect()}
     exp = sorted((i, c, k, cs) for i, (c, k, cs) in full.items()

@@ -31,8 +31,7 @@ def _split(docs, lo, hi):
 
 
 def _full_pairs_touching(docs, wave_ids, threshold=0.5, max_bucket=100):
-    from engine.datawork.dedup import clear_cache_slots, minhash_verified_pairs
-    clear_cache_slots()
+    from engine.datawork.dedup import minhash_verified_pairs
     full = minhash_verified_pairs(docs, threshold=threshold,
                                   max_bucket=max_bucket)
     rows = sorted((r.id_a, r.id_b, r.est_jaccard) for r in full.collect()
@@ -82,6 +81,31 @@ def test_append_then_second_wave(spark, idx_path):
     got = [(r.id_a, r.id_b, r.est_jaccard, r.origin) for r in inc.collect()]
     exp = _full_pairs_touching(docs, wave2_ids)
     assert got == exp
+
+
+def test_reprobe_after_append_sees_appended_docs(spark, idx_path):
+    """The same probe plan re-submitted after append_to_index, with no
+    cache clear, must see the appended docs: cached probe stages are keyed
+    on the index files as well as on the plan."""
+    from engine.datawork import stage_cache
+    from engine.datawork.incremental import (append_to_index,
+                                             incremental_verified_pairs,
+                                             write_minhash_index)
+    docs = _mk_docs(spark, seed=23)
+    corpus, appended = _split(docs, 0, 5), _split(docs, 5, 8)
+    wave = _split(docs, 8, 10)
+
+    def probe():
+        return sorted(tuple(r) for r in
+                      incremental_verified_pairs(wave, idx_path).collect())
+
+    write_minhash_index(corpus, idx_path)
+    before = probe()
+    append_to_index(appended, idx_path)
+    after = probe()
+    stage_cache.clear(spark)
+    assert after == probe()
+    assert after != before
 
 
 def test_combined_occupancy_guard(spark, idx_path):
@@ -295,8 +319,7 @@ def test_stream_dedup_ingest_partitions_full_pair_set(spark, idx_path,
     from engine.datawork.incremental import (incremental_verified_pairs,
                                              stream_dedup_ingest,
                                              write_minhash_index)
-    from engine.datawork.dedup import (clear_cache_slots,
-                                       minhash_verified_pairs)
+    from engine.datawork.dedup import minhash_verified_pairs
     from engine.spark.streaming import stage_ordered_batches
 
     docs = _mk_docs(spark, n=120, seed=83)
@@ -312,14 +335,20 @@ def test_stream_dedup_ingest_partitions_full_pair_set(spark, idx_path,
               .option("pathGlobFilter", "*.parquet")
               .option("maxFilesPerTrigger", "1").parquet(stage))
     pairs_path = str(tmp_path / "pairs")
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    n_before = len(persistent())
     q = stream_dedup_ingest(stream, idx_path, pairs_path,
                             str(tmp_path / "ckpt"), threshold=0.5,
                             max_bucket=100_000)
     q.awaitTermination()
+    # each micro-batch replaces the ingest's three stage-cache entries
+    # (wave signatures, wave buckets, candidates) and releases the blocks
+    # of the ones it replaced: the session's persisted RDDs do not grow
+    # with the number of waves
+    assert len(persistent()) - n_before <= 3
 
     got = sorted((r.id_a, r.id_b, r.est_jaccard)
                  for r in spark.read.parquet(pairs_path).collect())
-    clear_cache_slots()
     exp = sorted((r.id_a, r.id_b, r.est_jaccard)
                  for r in minhash_verified_pairs(
                      docs, threshold=0.5, max_bucket=100_000).collect())

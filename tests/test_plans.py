@@ -222,9 +222,9 @@ def test_embed_verify_joins_add_no_exchange_over_base_cache(spark):
     plan keeps exactly: candidate-join band/bucket exchanges (2 sides over
     the exploded 4-tuple rows... counted empirically: 5 total with
     broadcast off, was 7 before the co-partitioning)."""
-    from engine.datawork.dedup import clear_cache_slots
+    from engine.datawork import stage_cache
     from engine.datawork.similarity import cosine_pairs_above
-    clear_cache_slots(spark)
+    stage_cache.clear(spark)
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

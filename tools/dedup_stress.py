@@ -151,7 +151,7 @@ def main() -> int:
 
     from pyspark.sql import SparkSession, functions as F
 
-    from engine.datawork import clusters as clusters_mod
+    from engine.datawork import clusters as clusters_mod, stage_cache
     from engine.datawork.clusters import duplicate_clusters
     from engine.datawork.corpus import deduplicated_corpus
     from engine.datawork.dedup import (exact_duplicates, guard_report,
@@ -262,7 +262,7 @@ def main() -> int:
         timed("embed_clusters", run_clusters)
         from engine.datawork import dedup as dedup_mod
         out["rebalance_triggers"] = dedup_mod.REBALANCE_TRIGGERS
-        out["evicted_slots"] = dedup_mod.report_cache_health(spark)
+        out["stage_cache"] = stage_cache.stats(spark)
         if args.json:
             print(json.dumps(out))
         return 0
@@ -336,7 +336,7 @@ def main() -> int:
                 docs.filter(did < w1), threshold=thr).count()})
         from engine.datawork import dedup as dedup_mod
         out["rebalance_triggers"] = dedup_mod.REBALANCE_TRIGGERS
-        out["evicted_slots"] = dedup_mod.report_cache_health(spark)
+        out["stage_cache"] = stage_cache.stats(spark)
         if args.json:
             print(json.dumps(out))
         return 0
@@ -402,7 +402,7 @@ def main() -> int:
     # on idle cores (the silent 16× round-4 failure mode)
     from engine.datawork import dedup as dedup_mod
     out["rebalance_triggers"] = dedup_mod.REBALANCE_TRIGGERS
-    out["evicted_slots"] = dedup_mod.report_cache_health(spark)
+    out["stage_cache"] = stage_cache.stats(spark)
     assert dedup_mod.REBALANCE_TRIGGERS == 0, (
         f"reactive rebalance fired {dedup_mod.REBALANCE_TRIGGERS}× despite "
         f"proactive split sizing")
