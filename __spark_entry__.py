@@ -879,20 +879,12 @@ def q_dedup_clusters(spark, sf_dir):
 
 
 def q_ann_cosine_topk(spark, sf_dir):
+    from engine.datawork.similarity import cosine, norm
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
-    joined = emb.crossJoin(F.broadcast(q))
-    dot = F.aggregate(F.zip_with(F.col("embedding").cast("array<double>"),
-                                 F.col("qv").cast("array<double>"),
-                                 lambda x, y: x * y),
-                      F.lit(0.0), lambda a, x: a + x)
-    nrm = lambda c: F.sqrt(F.aggregate(  # noqa: E731
-        F.zip_with(F.col(c).cast("array<double>"),
-                   F.col(c).cast("array<double>"), lambda x, y: x * y),
-        F.lit(0.0), lambda a, x: a + x))
-    return (joined.select("vec_id",
-                          F.round(dot / (nrm("embedding") * nrm("qv")), 6)
-                           .alias("score"))
+    v, qv = F.col("embedding"), F.col("qv")
+    return (emb.crossJoin(F.broadcast(q))
+            .select("vec_id", cosine(v, norm(v), qv, norm(qv)).alias("score"))
             .orderBy(F.col("score").desc(), "vec_id").limit(10))
 
 

@@ -40,7 +40,7 @@ from typing import List, Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from . import stage_cache
-from .similarity import (bucket_expr, cosine_topk, lsh_planes, norm,
+from .similarity import (bucket_expr, cosine, cosine_topk, lsh_planes, norm,
                          probe_buckets)
 
 VECTORS = "vectors"
@@ -169,13 +169,10 @@ def probe_index_batch(spark: SparkSession, path: str, queries: DataFrame,
     j = idx.join(hint(qb),
                  (F.col("bucket") == F.col("qbucket"))
                  & (F.col("id") != F.col("qid")))
-    dotprod = F.aggregate(
-        F.zip_with(F.col("v").cast("array<double>"),
-                   F.col("qv").cast("array<double>"), lambda x, y: x * y),
-        F.lit(0.0), lambda acc, x: acc + x)
     scored = j.select(
         "qid", "id",
-        F.round(dotprod / (F.col("nrm") * F.col("qnrm")), 6).alias("score"))
+        cosine(F.col("v"), F.col("nrm"), F.col("qv"), F.col("qnrm"))
+        .alias("score"))
     rk = F.row_number().over(
         Window.partitionBy("qid").orderBy(F.col("score").desc(), "id"))
     return (scored.withColumn("rank", rk.cast("int"))

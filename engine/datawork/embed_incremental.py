@@ -39,7 +39,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import stage_cache
 from .incremental import MAX_BROADCAST_ROWS
-from .similarity import LSH_BANDS, LSH_ROWS, norm
+from .similarity import (LSH_BANDS, LSH_ROWS, _assign_cells, _explode_bands,
+                         _shadow_losers, banded_sig_udf, cosine, norm,
+                         semdedup_losers)
 
 VECTORS = "vectors"
 BUCKETS = "buckets"
@@ -56,19 +58,10 @@ def _base(emb: DataFrame, id_col: str, vec_col: str, bands: int,
     """(id, v, nrm, sig) — the signature kernel MUST be similarity's
     (banded_sig_udf, the bitwise-equal Arrow twin of banded_sig_expr) so
     the full-recompute equivalence holds bit-for-bit."""
-    from .similarity import banded_sig_udf
     return emb.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
         norm(F.col(vec_col)).alias("nrm"),
         banded_sig_udf(bands, rows)(F.col(vec_col)).alias("sig"))
-
-
-def _explode(base: DataFrame, bands: int, rows: int) -> DataFrame:
-    return (base.select("id", F.explode(F.array(*[
-        F.struct(F.lit(b).alias("band"),
-                 F.substring("sig", b * rows + 1, rows).alias("bucket"))
-        for b in range(bands)])).alias("bb"))
-        .select("id", "bb.band", "bb.bucket"))
 
 
 def _write_sorted_once(df: DataFrame, writes: list) -> None:
@@ -110,7 +103,7 @@ def write_embedding_index(emb: DataFrame, path: str,
     _write_sorted_once(base, [
         (lambda d: d, ["id"], _sub(path, VECTORS), "overwrite")])
     base_r = spark.read.parquet(_sub(path, VECTORS))
-    buckets = _explode(base_r, bands, rows)
+    buckets = _explode_bands(base_r, bands, rows)
     (buckets.repartitionByRange("band", "bucket")
             .sortWithinPartitions("band", "bucket")
             .write.mode("overwrite").parquet(_sub(path, BUCKETS)))
@@ -133,7 +126,7 @@ def append_to_embedding_index(new_emb: DataFrame, path: str,
         base.count()  # one signature pass for all three appends
         (base.repartitionByRange("id").sortWithinPartitions("id")
              .write.mode("append").parquet(_sub(path, VECTORS)))
-        buckets = _explode(base, bands, rows)
+        buckets = _explode_bands(base, bands, rows)
         (buckets.repartitionByRange("band", "bucket")
                 .sortWithinPartitions("band", "bucket")
                 .write.mode("append").parquet(_sub(path, BUCKETS)))
@@ -185,7 +178,6 @@ def _semantic_assign(emb: DataFrame, cent: DataFrame, id_col: str,
     """(id, v, nrm, cell, ccos) — THE assignment kernel
     (similarity._assign_cells at nprobe=1), so index rows and full
     recomputes rank identically."""
-    from .similarity import _assign_cells
     base = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
                       norm(F.col(vec_col)).alias("nrm"))
     return _assign_cells(base, cent, keep_score=True)
@@ -218,7 +210,6 @@ def write_semantic_index(emb: DataFrame, path: str, centroids: DataFrame,
         .groupBy("cell").agg(F.count("*").alias("cnt"))
         .write.mode("overwrite").parquet(_sub(path, CSTATS)))
     if losers_threshold is not None:
-        from .similarity import semdedup_losers
         (semdedup_losers(emb, threshold=losers_threshold, centroids=cent,
                          id_col=id_col, vec_col=vec_col)
          .select("id").write.mode("overwrite").parquet(_sub(path, LOSERS)))
@@ -246,6 +237,39 @@ def append_to_semantic_index(new_emb: DataFrame, path: str,
         asg.unpersist()
 
 
+def _open_wave_probe(new_emb: DataFrame, index_path: str, id_col: str,
+                     vec_col: str, max_broadcast_rows: int, restrict=None
+                     ) -> tuple[DataFrame, DataFrame]:
+    """The opening both SemDeDup wave probes share: assign the wave against
+    the frozen codebook (checkpointed), census it for the broadcast hint,
+    read the indexed members of the wave's touched cells, let
+    ``restrict(wave, members, hint) -> (wave, members)`` trim either side,
+    then fetch the surviving members' vectors by id (id-sorted layout →
+    row-group pruning; volume ∝ touched-cell population).
+
+    Returns (wave_side, corpus_side), both (id, cell, pcos, v, nrm) —
+    the shape ``similarity._shadow_losers`` joins."""
+    spark = new_emb.sparkSession
+    cent = spark.read.parquet(_sub(index_path, CELLS))
+    wave = stage_cache.checkpoint(
+        "sem_wave", _semantic_assign(new_emb, cent, id_col, vec_col))
+    n_wave = wave.count()
+    hint = F.broadcast if n_wave <= max_broadcast_rows else (lambda df: df)
+
+    touched = wave.select("cell").distinct()
+    cmem = (spark.read.parquet(_sub(index_path, MEMBERS))
+            .join(hint(touched), "cell", "left_semi"))
+    if restrict is not None:
+        wave, cmem = restrict(wave, cmem, hint)
+    cvec = (spark.read.parquet(_sub(index_path, VECTORS))
+            .join(hint(cmem.select("id")), "id", "left_semi"))
+    corpus_side = (cmem.join(cvec, "id")
+                   .select("id", "cell", "pcos", "v", "nrm"))
+    wave_side = wave.select("id", "cell", F.col("ccos").alias("pcos"),
+                            "v", "nrm")
+    return wave_side, corpus_side
+
+
 def semdedup_wave_losers(new_emb: DataFrame, index_path: str,
                          threshold: float = 0.95,
                          id_col: str = "vec_id",
@@ -267,21 +291,9 @@ def semdedup_wave_losers(new_emb: DataFrame, index_path: str,
     ``max_cluster`` uses COMBINED occupancy (persisted cstats + wave
     counts), mirroring the LSH hot-bucket guard. Wave-side broadcasts are
     censused with the same fallback as incremental_embedding_pairs."""
-    from pyspark.sql import Window
-    spark = new_emb.sparkSession
-    cent = spark.read.parquet(_sub(index_path, CELLS))
-    wave = stage_cache.checkpoint(
-        "sem_wave", _semantic_assign(new_emb, cent, id_col, vec_col))
-
-    n_wave = wave.count()
-    hint = F.broadcast if n_wave <= max_broadcast_rows else (lambda df: df)
-
-    touched = wave.select("cell").distinct()
-    cmem = (spark.read.parquet(_sub(index_path, MEMBERS))
-            .join(hint(touched), "cell", "left_semi"))
-
-    if max_cluster is not None:
-        old_cnt = (spark.read.parquet(_sub(index_path, CSTATS))
+    def drop_big(wave, cmem, hint):
+        touched = wave.select("cell").distinct()
+        old_cnt = (wave.sparkSession.read.parquet(_sub(index_path, CSTATS))
                    .join(hint(touched), "cell", "left_semi")
                    .groupBy("cell").agg(F.sum("cnt").alias("old_cnt")))
         new_cnt = wave.groupBy("cell").agg(F.count("*").alias("new_cnt"))
@@ -289,42 +301,14 @@ def semdedup_wave_losers(new_emb: DataFrame, index_path: str,
                .withColumn("cnt", F.coalesce("old_cnt", F.lit(0))
                            + F.col("new_cnt"))
                .filter(F.col("cnt") > max_cluster).select("cell"))
-        wave_k = wave.join(hint(big), "cell", "left_anti")
-        cmem = cmem.join(hint(big), "cell", "left_anti")
-    else:
-        wave_k = wave
+        return (wave.join(hint(big), "cell", "left_anti"),
+                cmem.join(hint(big), "cell", "left_anti"))
 
-    # corpus shadow set: members of touched cells, vectors fetched by id
-    # (id-sorted layout → row-group pruning; volume ∝ touched-cell pop)
-    cvec = (spark.read.parquet(_sub(index_path, VECTORS))
-            .join(hint(cmem.select("id")), "id", "left_semi"))
-    corpus_side = (cmem.join(cvec, "id")
-                   .select("id", "cell", "pcos", "v", "nrm"))
-    wave_side = wave_k.select("id", "cell", F.col("ccos").alias("pcos"),
-                              "v", "nrm")
-    shadowers = (wave_side.unionByName(corpus_side)).alias("a")
-    losers = wave_side.alias("b")
-    precedes = ((F.col("a.pcos") < F.col("b.pcos"))
-                | ((F.col("a.pcos") == F.col("b.pcos"))
-                   & (F.col("a.id") < F.col("b.id"))))
-    pair_cos = F.round(
-        F.aggregate(
-            F.zip_with(F.col("a.v").cast("array<double>"),
-                       F.col("b.v").cast("array<double>"),
-                       lambda x, y: x * y),
-            F.lit(0.0), lambda acc, x: acc + x)
-        / (F.col("a.nrm") * F.col("b.nrm")), 6)
-    pairs = (shadowers.join(losers,
-                            (F.col("a.cell") == F.col("b.cell")) & precedes)
-             .select(F.col("b.id").alias("id"),
-                     F.col("b.cell").alias("cell"),
-                     F.col("a.id").alias("kept_id"),
-                     F.col("a.pcos").alias("kp"),
-                     pair_cos.alias("cosine"))
-             .filter(F.col("cosine") >= threshold))
-    first = Window.partitionBy("id").orderBy("kp", "kept_id", "cell")
-    return (pairs.withColumn("_p", F.row_number().over(first))
-            .filter(F.col("_p") == 1).drop("_p", "kp"))
+    wave_side, corpus_side = _open_wave_probe(
+        new_emb, index_path, id_col, vec_col, max_broadcast_rows,
+        drop_big if max_cluster is not None else None)
+    return _shadow_losers(wave_side.unionByName(corpus_side), wave_side,
+                          threshold)
 
 
 def retroactive_wave_losers(new_emb: DataFrame, index_path: str,
@@ -348,47 +332,15 @@ def retroactive_wave_losers(new_emb: DataFrame, index_path: str,
     identical (kept_id, cosine) — equivalence test + oracle pin it.
     Requires the index to have been built with ``losers_threshold`` equal
     to this ``threshold``."""
-    from pyspark.sql import Window
-    spark = new_emb.sparkSession
-    cent = spark.read.parquet(_sub(index_path, CELLS))
-    wave = stage_cache.checkpoint(
-        "sem_wave", _semantic_assign(new_emb, cent, id_col, vec_col))
-    n_wave = wave.count()
-    hint = F.broadcast if n_wave <= max_broadcast_rows else (lambda df: df)
+    def drop_old_losers(wave, cmem, hint):
+        return wave, cmem.join(
+            wave.sparkSession.read.parquet(_sub(index_path, LOSERS)),
+            "id", "left_anti")
 
-    touched = wave.select("cell").distinct()
-    cmem = (spark.read.parquet(_sub(index_path, MEMBERS))
-            .join(hint(touched), "cell", "left_semi")
-            .join(spark.read.parquet(_sub(index_path, LOSERS)),
-                  "id", "left_anti"))
-    cvec = (spark.read.parquet(_sub(index_path, VECTORS))
-            .join(hint(cmem.select("id")), "id", "left_semi"))
-    corpus_side = (cmem.join(cvec, "id")
-                   .select("id", "cell", "pcos", "v", "nrm"))
-    shadowers = wave.select("id", "cell", F.col("ccos").alias("pcos"),
-                            "v", "nrm").alias("a")
-    losers = corpus_side.alias("b")
-    precedes = ((F.col("a.pcos") < F.col("b.pcos"))
-                | ((F.col("a.pcos") == F.col("b.pcos"))
-                   & (F.col("a.id") < F.col("b.id"))))
-    pair_cos = F.round(
-        F.aggregate(
-            F.zip_with(F.col("a.v").cast("array<double>"),
-                       F.col("b.v").cast("array<double>"),
-                       lambda x, y: x * y),
-            F.lit(0.0), lambda acc, x: acc + x)
-        / (F.col("a.nrm") * F.col("b.nrm")), 6)
-    pairs = (shadowers.join(losers,
-                            (F.col("a.cell") == F.col("b.cell")) & precedes)
-             .select(F.col("b.id").alias("id"),
-                     F.col("b.cell").alias("cell"),
-                     F.col("a.id").alias("kept_id"),
-                     F.col("a.pcos").alias("kp"),
-                     pair_cos.alias("cosine"))
-             .filter(F.col("cosine") >= threshold))
-    first = Window.partitionBy("id").orderBy("kp", "kept_id", "cell")
-    return (pairs.withColumn("_p", F.row_number().over(first))
-            .filter(F.col("_p") == 1).drop("_p", "kp"))
+    wave_side, corpus_side = _open_wave_probe(
+        new_emb, index_path, id_col, vec_col, max_broadcast_rows,
+        drop_old_losers)
+    return _shadow_losers(wave_side, corpus_side, threshold)
 
 
 def incremental_embedding_pairs(new_emb: DataFrame, index_path: str,
@@ -416,9 +368,9 @@ def incremental_embedding_pairs(new_emb: DataFrame, index_path: str,
     # candidate joins reuse the cache's partitioning (no extra Exchange)
     b_new = stage_cache.persist(
         "embincr_b_new",
-        _explode(wave, bands, rows).repartition("band", "bucket"))
+        _explode_bands(wave, bands, rows).repartition("band", "bucket"))
 
-    # the persist's count: _explode emits exactly ``bands`` rows/vector,
+    # the persist's count: _explode_bands emits exactly ``bands`` rows/vector,
     # so it IS n_wave·bands — the broadcast-size variable
     bcast_ok = stage_cache.rows("embincr_b_new", spark) <= max_broadcast_rows
     hint = F.broadcast if bcast_ok else (lambda df: df)
@@ -476,13 +428,9 @@ def incremental_embedding_pairs(new_emb: DataFrame, index_path: str,
                      F.col("nrm").alias("na"), F.col("_new").alias("a_new"))
     vb = vecs.select(F.col("id").alias("id_b"), F.col("v").alias("vb"),
                      F.col("nrm").alias("nb"), F.col("_new").alias("b_new"))
-    dotprod = F.aggregate(
-        F.zip_with(F.col("va").cast("array<double>"),
-                   F.col("vb").cast("array<double>"), lambda x, y: x * y),
-        F.lit(0.0), lambda acc, x: acc + x)
     return (cand.join(va, "id_a").join(vb, "id_b")
             .select("id_a", "id_b",
-                    F.round(dotprod / (F.col("na") * F.col("nb")), 6)
+                    cosine(F.col("va"), F.col("na"), F.col("vb"), F.col("nb"))
                      .alias("cosine"),
                     F.when(F.col("a_new") & F.col("b_new"),
                            F.lit("new_new")).otherwise(F.lit("new_old"))

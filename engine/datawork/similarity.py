@@ -21,13 +21,26 @@ Hyperplanes are fixed constants derived from numpy RandomState(42) — shared
 with the oracle-SQL generator so both engines compute identical buckets; the
 banded planes are the first B·r planes of the same stream, so the legacy
 8-plane single-table bucket (``with_lsh_bucket``) is bands 0–1 of it.
+
+Single spellings — every caller in engine/datawork and the driver queries
+goes through them, never a hand-copied twin:
+
+* ``cosine`` (over the private ``_fold`` that ``dot`` and ``norm`` share)
+  is THE pairwise cosine. The fold order must match the DuckDB oracle's
+  list fold (``acc = acc + a[i]·b[i]``, i ascending) for the rounded
+  values to agree bit for bit, so a second spelling is a second chance
+  to drift.
+* ``_shadow_losers`` is THE SemDeDup drop rule (keep-order predicate,
+  equi-join on cell, first shadower). ``semdedup_losers`` and both
+  incremental probes in embed_incremental call it, which is what keeps
+  the probes exactly equal to a full recompute.
 """
 
 from __future__ import annotations
 
 from typing import List, Sequence
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from . import stage_cache
 
@@ -53,83 +66,31 @@ def _lit_array(values: Sequence[float]) -> Column:
     return F.array(*[F.lit(float(v)) for v in values])
 
 
+def _fold(a: Column, b: Column) -> Column:
+    """Σ a[i]·b[i] as ``acc = acc + a[i]·b[i]`` for i = 0..n-1, in double
+    precision — the oracle's list fold order, so every dot, norm and
+    cosine matches it bit for bit. Null algebra: a NULL side → NULL;
+    unequal lengths → NULL (zip_with pads the short side with nulls);
+    two empty arrays → 0.0 (the init)."""
+    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
+                       F.lit(0.0), lambda acc, x: acc + x)
+
+
 def dot(vec: Column, const: Sequence[float]) -> Column:
-    """Σ vec[i]·const[i], left-to-right in double precision (matches the
-    oracle's list_sum(list_transform(...)) evaluation order)."""
-    return F.aggregate(
-        F.zip_with(vec.cast("array<double>"), _lit_array(const), lambda x, y: x * y),
-        F.lit(0.0), lambda acc, x: acc + x)
+    """Σ vec[i]·const[i] (see ``_fold``)."""
+    return _fold(vec.cast("array<double>"), _lit_array(const))
 
 
 def norm(vec: Column) -> Column:
-    return F.sqrt(F.aggregate(
-        F.zip_with(vec.cast("array<double>"), vec.cast("array<double>"),
-                   lambda x, y: x * y),
-        F.lit(0.0), lambda acc, x: acc + x))
+    v = vec.cast("array<double>")
+    return F.sqrt(_fold(v, v))
 
 
-def dot_pair_udf():
-    """Arrow-batched twin of the pairwise ``aggregate(zip_with(a, b,
-    x·y), 0.0, acc+x)`` spelling — BITWISE identical on every row both
-    engines produce (the banded_sig_udf pattern, VERDICT r6 #4 applied to
-    the dot products).
-
-    The Catalyst spelling is an interpreted higher-order fold per row (no
-    codegen for lambda functions) — the dominant per-row cost of every
-    assignment crossJoin and cosine verify join. This kernel vectorizes
-    ACROSS rows while looping the dims IN ORDER, so each accumulator
-    update is the same IEEE-754 double sequence the expression (and the
-    DuckDB oracle's list fold) performs: ``acc = acc + a[d]·b[d]`` for
-    d = 0..dim-1.
-
-    Null algebra (differential fuzz test pins it): a NULL array on either
-    side → NULL; arrays of UNEQUAL length → NULL (zip_with pads the short
-    side with nulls, poisoning the fold); two empty arrays → 0.0 (empty
-    fold = the init); a null ELEMENT inside an array → NULL (it reaches
-    the kernel as NaN, and the pandas→Arrow return conflates NaN with
-    null — which happens to be exactly the expression's fold-poisoning).
-    The one documented divergence: an input element that is a REAL NaN
-    yields NaN from the expression but NULL from the kernel; no declared
-    surface stores NaN vector elements (NaN cosines from zero-norm
-    vectors arise in the DIVISION, which stays a Spark expression and is
-    therefore identical on both paths)."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def dd(va, vb):
-        import pandas as pd
-        n = len(va)
-        out = [None] * n
-        by_len: dict = {}
-        for i in range(n):
-            a, b = va.iat[i], vb.iat[i]
-            if a is None or b is None or len(a) != len(b):
-                continue
-            by_len.setdefault(len(a), []).append(i)
-        for length, idxs in by_len.items():
-            if length == 0:
-                for i in idxs:
-                    out[i] = 0.0
-                continue
-            am = np.empty((len(idxs), length), dtype=np.float64)
-            bm = np.empty((len(idxs), length), dtype=np.float64)
-            for r, i in enumerate(idxs):
-                am[r, :] = va.iat[i]
-                bm[r, :] = vb.iat[i]
-            acc = np.zeros(len(idxs), dtype=np.float64)
-            for d in range(length):  # dim order = the expression's fold order
-                acc = acc + am[:, d] * bm[:, d]
-            for r, i in enumerate(idxs):
-                out[i] = float(acc[r])
-        return pd.Series(out, dtype="float64")
-
-    # guide §4.4: a filter on a UDF-derived column gets pushed below the
-    # projection and the optimizer then evaluates the UDF TWICE (verified:
-    # two ArrowEvalPython nodes in the cosine-verify plan). The function is
-    # pure — asNondeterministic() only tells Catalyst not to duplicate or
-    # reorder it, halving every verify stage.
-    return dd.asNondeterministic()
+def cosine(a: Column, a_nrm: Column, b: Column, b_nrm: Column) -> Column:
+    """The oracle-pinned pairwise cosine: ``round(a·b / (|a|·|b|), 6)``,
+    the dot folded by ``_fold`` and the norms precomputed by ``norm``."""
+    return F.round(_fold(a.cast("array<double>"), b.cast("array<double>"))
+                   / (a_nrm * b_nrm), 6)
 
 
 def cosine_to_const(vec: Column, query: Sequence[float]) -> Column:
@@ -149,22 +110,6 @@ def bucket_of(query: Sequence[float], planes: List[List[float]]) -> str:
     return "".join(
         "1" if sum(q * c for q, c in zip(query, p)) > 0 else "0" for p in planes)
 
-
-#: Crossover switches for the Arrow dot kernel (dot_pair_udf) vs the
-#: interpreted fold, measured on this 64-dim surface (local[32], best-of-2,
-#: filter+count over synthesized pairs): 0.1M rows expr 0.47 s / kernel
-#: 0.68 s; 1M rows 0.50 / 1.38; 4M rows 4.30 / 3.35. The kernel ships both
-#: 64-dim vectors through Arrow per row (~1 KB/row), so it pays only once
-#: the fold count amortizes the transfer + Python stage dispatch —
-#: unlike the 256-plane signature fold (banded_sig_udf), where the
-#: expression does 256 folds/row and the kernel wins ~20×. Verify joins
-#: evaluate one fold per CANDIDATE PAIR (≈ corpus_n × mean bucket
-#: occupancy ≫ corpus_n), so the corpus census crossing 100k vectors
-#: implies pair volumes well past the 4M-row crossover; assignment
-#: evaluates n_cells folds per vector, so a large codebook is the
-#: amortizer there.
-DOT_KERNEL_MIN_ROWS = 100_000   # corpus census, cosine_pairs_above auto path
-DOT_KERNEL_MIN_CELLS = 64       # codebook size, argmax assignment
 
 IVF_CELLS = 16
 IVF_NPROBE = 2
@@ -212,7 +157,6 @@ def train_kmeans(df: DataFrame, n_cells: int = IVF_CELLS,
     + one hash aggregation; the centroid table is localCheckpoint'd per
     iteration so the plan stays flat over any iteration count. The base
     (v, nrm, fx) projection is computed once and cached."""
-    from pyspark.sql import Window
     base = stage_cache.persist(
         "ivf_kmeans_base",
         df.select(F.col(id_col).alias("id"),
@@ -231,7 +175,6 @@ def train_kmeans(df: DataFrame, n_cells: int = IVF_CELLS,
 
 def _train_kmeans_loop(base: DataFrame, n_cells: int, iters: int,
                        dim: int) -> DataFrame:
-    from pyspark.sql import Window
     hk = F.md5(F.col("id").cast("string"))
     seed = (base.select("id", "v").withColumn("hk", hk)
             .orderBy("hk", "id").limit(n_cells))
@@ -244,8 +187,7 @@ def _train_kmeans_loop(base: DataFrame, n_cells: int, iters: int,
     mean = F.array(*[F.col(f"s{d}") / (F.col("cnt") * float(KMEANS_SCALE))
                      for d in range(dim)])
     for _ in range(iters):
-        assigned = _assign_cells(base, cent,
-                                 kernel=n_cells >= DOT_KERNEL_MIN_CELLS)
+        assigned = _assign_cells(base, cent)
         newc = (assigned.groupBy("cell")
                 .agg(F.count("*").alias("cnt"), *sums)
                 .select("cell", mean.alias("cv")))
@@ -258,8 +200,7 @@ def _train_kmeans_loop(base: DataFrame, n_cells: int, iters: int,
 
 def _assign_cells(base: DataFrame, cent: DataFrame,
                   keep_score: bool = False,
-                  nprobe: int = 1,
-                  kernel: bool = False) -> DataFrame:
+                  nprobe: int = 1) -> DataFrame:
     """argmax-cosine assignment of a (id, v, nrm[, fx]) base against a
     (cell, cv) centroid table — the shared kernel of ivf_assignments and
     every k-means iteration. Broadcast crossJoin: n_cells rows per input
@@ -267,23 +208,10 @@ def _assign_cells(base: DataFrame, cent: DataFrame,
     retains the winning ``ccos`` (semdedup ranks members by it);
     ``nprobe>1`` keeps the top-nprobe cells per vector (one output row
     per (vector, probed cell) — semdedup's cluster-boundary closure)."""
-    from pyspark.sql import Window
     c = cent.select("cell", "cv").withColumn("cnrm", norm(F.col("cv")))
-    # ``kernel=True`` swaps the interpreted fold for the Arrow twin
-    # (bitwise-equal; see dot_pair_udf) — a win only once the evaluation
-    # row count (vectors x cells) amortizes the Python stage dispatch;
-    # measured a net REGRESSION at the sf0.1 bench scale, so small-N
-    # callers keep the expression (OPTIMIZATION_r07.md has the numbers)
-    dotprod = (dot_pair_udf()(F.col("v").cast("array<double>"),
-                              F.col("cv").cast("array<double>"))
-               if kernel else F.aggregate(
-                   F.zip_with(F.col("v").cast("array<double>"),
-                              F.col("cv").cast("array<double>"),
-                              lambda x, y: x * y),
-                   F.lit(0.0), lambda acc, x: acc + x))
     scored = (base.crossJoin(F.broadcast(c))
-              .withColumn("ccos", F.round(
-                  dotprod / (F.col("nrm") * F.col("cnrm")), 6)))
+              .withColumn("ccos", cosine(F.col("v"), F.col("nrm"),
+                                         F.col("cv"), F.col("cnrm"))))
     w = Window.partitionBy("id").orderBy(F.col("ccos").desc(), F.col("cell"))
     drop = ["rk", "cv", "cnrm"] + ([] if keep_score else ["ccos"])
     return (scored.withColumn("rk", F.row_number().over(w))
@@ -304,9 +232,7 @@ def ivf_assignments(df: DataFrame, id_col: str = "vec_id",
         _default_centroids(df, id_col, vec_col, n_cells)
     base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
                      norm(F.col(vec_col)).alias("nrm"))
-    return (_assign_cells(base, cent,
-                          kernel=n_cells >= DOT_KERNEL_MIN_CELLS)
-            .select("id", "cell"))
+    return _assign_cells(base, cent).select("id", "cell")
 
 
 def semdedup_losers(df: DataFrame, threshold: float = 0.95,
@@ -348,13 +274,11 @@ def semdedup_losers(df: DataFrame, threshold: float = 0.95,
     unchanged. Cost multiplies the pair join by ~nprobe²; the driver
     query pins nprobe=1.
     """
-    from pyspark.sql import Window
     cent = centroids if centroids is not None else train_kmeans(
         df, n_cells=n_cells, id_col=id_col, vec_col=vec_col)
     base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
                      norm(F.col(vec_col)).alias("nrm"))
-    asg = _assign_cells(base, cent, keep_score=True, nprobe=nprobe,
-                        kernel=n_cells >= DOT_KERNEL_MIN_CELLS)
+    asg = _assign_cells(base, cent, keep_score=True, nprobe=nprobe)
     if max_cluster is not None:
         sizes = asg.groupBy("cell").agg(F.count("*").alias("_csz"))
         asg = (asg.join(F.broadcast(sizes.filter(F.col("_csz") > max_cluster)
@@ -362,24 +286,30 @@ def semdedup_losers(df: DataFrame, threshold: float = 0.95,
     # global keep order = (primary-cell ccos ASC, id): within one cell it
     # reduces to the per-cell rank (the oracle's spelling); across probed
     # cells it is the consistent order that makes mutual drops impossible
-    pv = Window.partitionBy("id")
-    ranked = asg.withColumn("pcos", F.max("ccos").over(pv))
-    a, b = ranked.alias("a"), ranked.alias("b")
+    ranked = asg.withColumn("pcos",
+                            F.max("ccos").over(Window.partitionBy("id")))
+    return _shadow_losers(ranked, ranked, threshold)
+
+
+def _shadow_losers(shadowers: DataFrame, losers: DataFrame,
+                   threshold: float) -> DataFrame:
+    """THE SemDeDup drop rule, shared by ``semdedup_losers`` and the
+    incremental probes (embed_incremental): a ``losers`` row is dropped
+    iff a same-cell ``shadowers`` row precedes it in the global keep
+    order (pcos ASC, id ASC) with pairwise cosine ≥ threshold. Both sides
+    are (id, cell, pcos, v, nrm); returns (id, cell, kept_id, cosine)
+    with kept_id = the first shadower in keep order. The probes' exactness
+    against a full recompute rests on this being the only spelling."""
+    a, b = shadowers.alias("a"), losers.alias("b")
     precedes = ((F.col("a.pcos") < F.col("b.pcos"))
                 | ((F.col("a.pcos") == F.col("b.pcos"))
                    & (F.col("a.id") < F.col("b.id"))))
-    pair_cos = F.round(
-        F.aggregate(
-            F.zip_with(F.col("a.v").cast("array<double>"),
-                       F.col("b.v").cast("array<double>"),
-                       lambda x, y: x * y),
-            F.lit(0.0), lambda acc, x: acc + x)
-        / (F.col("a.nrm") * F.col("b.nrm")), 6)
     pairs = (a.join(b, (F.col("a.cell") == F.col("b.cell")) & precedes)
              .select(F.col("b.id").alias("id"), F.col("b.cell").alias("cell"),
                      F.col("a.id").alias("kept_id"),
                      F.col("a.pcos").alias("kp"),
-                     pair_cos.alias("cosine"))
+                     cosine(F.col("a.v"), F.col("a.nrm"),
+                            F.col("b.v"), F.col("b.nrm")).alias("cosine"))
              .filter(F.col("cosine") >= threshold))
     first = Window.partitionBy("id").orderBy("kp", "kept_id", "cell")
     return (pairs.withColumn("_p", F.row_number().over(first))
@@ -397,13 +327,10 @@ def ivf_topk(df: DataFrame, query: Sequence[float], k: int = 10,
     Probe-cell ranking is a DataFrame orderBy/limit + broadcast semi-join
     — NO driver collect of the codebook (VERDICT r4: the old collect was
     fine at 16 cells but wrong for a 10^5-cell trained codebook)."""
-    import math
     cent = centroids if centroids is not None else \
         _default_centroids(df, id_col, vec_col, n_cells)
-    qn = math.sqrt(sum(v * v for v in query))
     probes = (cent.select("cell", F.round(
-                  dot(F.col("cv"), query) / (norm(F.col("cv")) * F.lit(qn)),
-                  6).alias("qcos"))
+                  cosine_to_const(F.col("cv"), query), 6).alias("qcos"))
               .orderBy(F.col("qcos").desc(), "cell").limit(nprobe)
               .select("cell"))
     assigns = ivf_assignments(df, id_col, vec_col, n_cells, centroids=cent)
@@ -639,22 +566,13 @@ def cosine_pairs_above(df: DataFrame, threshold: float = 0.95,
     """
     from .dedup import _ensure_parallelism
 
-    def verify(pairs_ab, kernel=False):
-        # exact-cosine verify, shared by both paths. kernel=True swaps the
-        # interpreted fold for its bitwise-equal Arrow twin (dot_pair_udf)
-        # — identical values by the fuzz pin, chosen per corpus size below.
-        dotprod = (dot_pair_udf()(F.col("a.v").cast("array<double>"),
-                                  F.col("b.v").cast("array<double>"))
-                   if kernel else F.aggregate(
-                       F.zip_with(F.col("a.v").cast("array<double>"),
-                                  F.col("b.v").cast("array<double>"),
-                                  lambda x, y: x * y),
-                       F.lit(0.0), lambda acc, x: acc + x))
+    def verify(pairs_ab):
+        # exact-cosine verify, shared by both paths
         return (pairs_ab
                 .select(F.col("a.id").alias("id_a"),
                         F.col("b.id").alias("id_b"),
-                        F.round(dotprod / (F.col("a.nrm") * F.col("b.nrm")),
-                                6).alias("cosine"))
+                        cosine(F.col("a.v"), F.col("a.nrm"),
+                               F.col("b.v"), F.col("b.nrm")).alias("cosine"))
                 .filter(F.col("cosine") >= threshold))
 
     if not bucketed:
@@ -664,7 +582,6 @@ def cosine_pairs_above(df: DataFrame, threshold: float = 0.95,
         a, b = base.alias("a"), base.alias("b")
         return verify(a.join(b, F.col("a.id") < F.col("b.id")))
 
-    use_kernel = False
     if rows is None:
         # self-scaling layout: ONE metadata count (parquet footer statistics
         # — no scan) picks rows ≈ log₂(N / target bucket population); the
@@ -673,14 +590,9 @@ def cosine_pairs_above(df: DataFrame, threshold: float = 0.95,
         import logging
         n = df.count()
         rows = auto_rows(n)
-        # the same census picks the verify spelling: past the crossover the
-        # interpreted fold dominates the verify join and the Arrow twin
-        # wins; below it the Python stage dispatch costs more than it saves
-        # (measured — see DOT_KERNEL_MIN_ROWS)
-        use_kernel = n >= DOT_KERNEL_MIN_ROWS
         logging.getLogger(__name__).info(
-            "cosine_pairs_above auto layout: n=%d -> bands=%d rows=%d "
-            "kernel=%s", n, bands, rows, use_kernel)
+            "cosine_pairs_above auto layout: n=%d -> bands=%d rows=%d",
+            n, bands, rows)
 
     # sign bits for all bands·rows planes computed once; cached because the
     # candidate join consumes the banded table twice and the verify join
@@ -694,4 +606,4 @@ def cosine_pairs_above(df: DataFrame, threshold: float = 0.95,
     b = base.select(F.col("id"), F.col("v"), F.col("nrm")).alias("b")
     pairs_ab = (cand.join(a, cand.id_a == F.col("a.id"))
                     .join(b, cand.id_b == F.col("b.id")))
-    return verify(pairs_ab, kernel=use_kernel)
+    return verify(pairs_ab)

@@ -82,6 +82,18 @@ def extract_df(df: DataFrame, n_buckets: int = DEFAULT_BUCKETS,
         lambda it: extract_batches(it, n_buckets), schema=EXTRACTED_SCHEMA)
 
 
+def _is_missing_table(exc: Exception) -> bool:
+    """True iff ``exc`` says the table does not exist yet — the ONLY read
+    failure a resume may treat as "empty". Any other error must abort the
+    run: treating a transient error as an empty table would reprocess and
+    APPEND duplicates (output) or backfill every bucket again (lineage)."""
+    from pyspark.errors import AnalysisException
+    msg = str(exc)
+    return isinstance(exc, AnalysisException) and (
+        "PATH_NOT_FOUND" in msg or "Path does not exist" in msg
+        or "TABLE_OR_VIEW_NOT_FOUND" in msg)
+
+
 def completed_buckets(spark: SparkSession, out_sink) -> DataFrame:
     """Distinct conv_buckets already committed to the OUTPUT table.
 
@@ -92,17 +104,11 @@ def completed_buckets(spark: SparkSession, out_sink) -> DataFrame:
     is all-or-nothing per wave: parquet job-commit / Iceberg snapshot), and
     reading just the partition column is a directory/manifest listing, not
     a data scan."""
-    from pyspark.errors import AnalysisException
     try:
         out = out_sink.read(EXTRACTED_SCHEMA)
         return out.select("conv_bucket").distinct()
-    except AnalysisException as exc:
-        # ONLY "no output yet" means no completed buckets; any other read
-        # failure must abort the run — treating a transient error as an
-        # empty manifest would reprocess and APPEND duplicates.
-        msg = str(exc)
-        if ("PATH_NOT_FOUND" in msg or "Path does not exist" in msg
-                or "TABLE_OR_VIEW_NOT_FOUND" in msg):
+    except Exception as exc:
+        if _is_missing_table(exc):
             return spark.createDataFrame([], "conv_bucket int")
         raise
 
@@ -145,9 +151,11 @@ def run_pipeline(spark: SparkSession, input_path: str, output_dir: str,
     # the manifest from the output (wave=-1 marks backfilled rows)
     if done_count:
         try:
-            lin_buckets = (lineage_sink.read()
+            lin_buckets = (lineage_sink.read(LINEAGE_SCHEMA)
                            .select("conv_bucket").distinct())
-        except Exception:
+        except Exception as exc:
+            if not _is_missing_table(exc):
+                raise
             lin_buckets = spark.createDataFrame([], "conv_bucket int")
         orphans = done.join(F.broadcast(lin_buckets), "conv_bucket", "left_anti")
         if orphans.count():
@@ -165,7 +173,11 @@ def run_pipeline(spark: SparkSession, input_path: str, output_dir: str,
                         .withColumn("completed_at",
                                     F.lit(datetime.now(timezone.utc))
                                     .cast("timestamp"))
-                        .select([f.name for f in LINEAGE_SCHEMA.fields]))
+                        # the wave writes' types (wall_ms is int64 there):
+                        # a narrower file makes lineage reads that infer
+                        # the schema fail with a column type mismatch
+                        .select([F.col(f.name).cast(f.dataType)
+                                 for f in LINEAGE_SCHEMA.fields]))
             lineage_sink.append(backfill)
 
     total_processed = 0

@@ -132,10 +132,10 @@ def compact_parquet(spark: SparkSession, path: str,
 
     Rewrites the table to ``ceil(total_bytes / target_bytes)`` files
     (at least one per partition value when ``partition_col`` is given,
-    so partition pruning keeps working), via an atomic
-    write-to-temp + swap: the live directory is replaced only after the
-    rewrite commits, and the pre-compaction data is moved aside, not
-    deleted, until the swap succeeds. Returns a stats dict
+    so partition pruning keeps working), published by ``atomic_rewrite``:
+    the live directory is replaced only after the rewrite commits, and a
+    crash inside the swap is restored by ``recover_rewrite`` (here, before
+    the size census, and on any later rewrite). Returns a stats dict
     (files/bytes before and after).
 
     Scale note: on a real cluster this is Iceberg's rewrite_data_files
@@ -145,36 +145,25 @@ def compact_parquet(spark: SparkSession, path: str,
     partition column.
     """
     import math
-    import shutil
-    import uuid
     from pathlib import Path
 
-    root = Path(path)
-    files = [p for p in root.rglob("*.parquet") if p.is_file()]
+    recover_rewrite(path)  # a stranded root would census as empty
+    files = [p for p in Path(path).rglob("*.parquet") if p.is_file()]
     if not files:
         raise ValueError(f"no parquet files under {path}")
-    before_bytes = sum(p.stat().st_size for p in files)
-    n_out = max(1, math.ceil(before_bytes / target_bytes))
-    df = spark.read.parquet(str(root))
-    tmp = root.with_name(f"{root.name}.compact-{uuid.uuid4().hex[:8]}")
-    old = root.with_name(f"{root.name}.precompact-{uuid.uuid4().hex[:8]}")
-    if partition_col:
-        (df.repartition(n_out, F.col(partition_col))
-           .write.mode("overwrite").partitionBy(partition_col)
-           .parquet(str(tmp)))
-    else:
-        df.repartition(n_out).write.mode("overwrite").parquet(str(tmp))
-    shutil.move(str(root), str(old))
-    try:
-        shutil.move(str(tmp), str(root))
-    except Exception:
-        shutil.move(str(old), str(root))  # roll back — original intact
-        raise
-    shutil.rmtree(str(old))
-    after = [p for p in root.rglob("*.parquet") if p.is_file()]
-    return {"files_before": len(files), "files_after": len(after),
-            "bytes_before": before_bytes,
-            "bytes_after": sum(p.stat().st_size for p in after)}
+    n_out = max(1, math.ceil(
+        sum(p.stat().st_size for p in files) / target_bytes))
+    df = spark.read.parquet(path)
+
+    def _write(tmp: str) -> None:
+        if partition_col:
+            (df.repartition(n_out, F.col(partition_col))
+               .write.mode("overwrite").partitionBy(partition_col)
+               .parquet(tmp))
+        else:
+            df.repartition(n_out).write.mode("overwrite").parquet(tmp)
+
+    return atomic_rewrite(path, _write)
 
 
 def recover_rewrite(path: str) -> bool:
@@ -258,6 +247,7 @@ def compact_sorted_parquet(spark: SparkSession, path: str,
     import math
     from pathlib import Path
 
+    recover_rewrite(path)  # a stranded root would census as empty
     root = Path(path)
     files = [p for p in root.rglob("*.parquet") if p.is_file()]
     if not files:

@@ -311,16 +311,15 @@ def test_retroactive_losers_equal_full_minus_old(spark, idx_path):
     assert all(k in wave_ids for _, _, k, _ in got)
 
 
-def test_dot_pair_udf_bitwise_equals_expression(spark):
-    """The Arrow dot kernel must reproduce the interpreted
-    aggregate(zip_with(a, b, x*y), 0.0, acc+x) fold EXACTLY — same IEEE
-    order, same null algebra — across random float32/float64 pairs, tiny
-    magnitudes, zero vectors (exact 0.0), NULL sides, unequal lengths and
-    empty arrays. (Known, documented divergence NOT tested here: NaN
-    input ELEMENTS — no declared surface stores them.)"""
+def test_shared_fold_bitwise_equals_python_loop(spark):
+    """similarity._fold — the one dot product behind dot, norm and cosine —
+    must be the left-to-right double fold ``acc = acc + a[d]*b[d]`` the
+    oracle's list fold performs, bit for bit, across random float32/float64
+    pairs and tiny magnitudes; and keep its null algebra: NULL side → NULL,
+    unequal lengths → NULL, two empty arrays → 0.0, zero vector → 0.0."""
     import numpy as np
 
-    from engine.datawork.similarity import dot_pair_udf
+    from engine.datawork.similarity import _fold
 
     rs = np.random.RandomState(321)
     rows = []
@@ -332,6 +331,12 @@ def test_dot_pair_udf_bitwise_equals_expression(spark):
         if i % 11 == 0:
             b = b * 1e-12
         rows.append((i, [float(x) for x in a], [float(x) for x in b]))
+    expected = {}
+    for i, a, b in rows:
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc = acc + x * y
+        expected[i] = acc
     rows += [
         (1000, [0.0] * DIM, [1.0] * DIM),   # exact 0.0 fold
         (1001, None, [1.0] * DIM),          # NULL side
@@ -342,16 +347,11 @@ def test_dot_pair_udf_bitwise_equals_expression(spark):
     ]
     df = spark.createDataFrame(
         rows, "vec_id: long, a: array<double>, b: array<double>")
-    expr = F.aggregate(
-        F.zip_with(F.col("a").cast("array<double>"),
-                   F.col("b").cast("array<double>"), lambda x, y: x * y),
-        F.lit(0.0), lambda acc, x: acc + x)
-    both = df.select(
-        "vec_id", expr.alias("e"),
-        dot_pair_udf()(F.col("a"), F.col("b")).alias("u"))
-    bad = both.filter(~(F.col("e").eqNullSafe(F.col("u")))).collect()
+    z = {r.vec_id: r.d for r in df.select(
+        "vec_id", _fold(F.col("a"), F.col("b")).alias("d")).collect()}
+    bad = [(i, z[i], e) for i, e in expected.items()
+           if z[i] is None or z[i].hex() != e.hex()]
     assert bad == [], bad[:5]
-    z = {r.vec_id: r.u for r in both.collect()}
     assert z[1000] == 0.0 and z[1004] == 0.0
     assert z[1001] is None and z[1002] is None and z[1003] is None
     assert z[1005] == 11.0

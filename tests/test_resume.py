@@ -52,8 +52,15 @@ def test_resume_is_idempotent(spark, paths):
 def test_crash_between_output_and_lineage_commit(spark, paths, tmp_path):
     """The resume authority is the OUTPUT table: output committed but lineage
     missing (crash in the window between the two commits) must not be
-    reprocessed — and the manifest is backfilled from the output."""
+    reprocessed — and the manifest is backfilled from the output, with the
+    wave writes' column types (an int32 wall_ms beside int64 files breaks
+    every schema-inferring lineage read)."""
     import shutil
+    from pathlib import Path
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
 
     from engine.spark.pipeline import run_pipeline
 
@@ -62,6 +69,26 @@ def test_crash_between_output_and_lineage_commit(spark, paths, tmp_path):
     n_src = spark.read.parquet(src).count()
 
     run_pipeline(spark, src, out, run_id="runC", waves=2, n_buckets=64)
+    # crash after wave 1's output commit: only that wave's lineage is lost
+    lin_files = sorted(Path(f"{out}/lineage").glob("*.parquet"))
+    wave1 = [f for f in lin_files
+             if set(pq.read_table(f, columns=["wave"])["wave"].to_pylist())
+             == {1}]
+    assert len(wave1) == 1 and len(lin_files) == 2
+    wave1[0].unlink()
+
+    redo = run_pipeline(spark, src, out, run_id="runC1", waves=2, n_buckets=64)
+    assert redo.turns_processed == 0
+    lin_files = sorted(Path(f"{out}/lineage").glob("*.parquet"))
+    assert [pq.read_schema(f).field("wall_ms").type for f in lin_files] \
+        == [pa.int64()] * len(lin_files)
+    lineage = spark.read.parquet(f"{out}/lineage")
+    assert lineage.agg(F.sum("wall_ms")).collect()[0][0] >= 0
+    rows = lineage.collect()
+    assert {r["wave"] for r in rows} == {0, -1}
+    assert all(r["conv_bucket"] % 2 == (r["wave"] == -1) for r in rows)
+    assert sum(r["turns_processed"] for r in rows) == n_src
+
     shutil.rmtree(f"{out}/lineage")  # simulate the crash window
 
     redo = run_pipeline(spark, src, out, run_id="runC2", waves=2, n_buckets=64)
@@ -73,6 +100,36 @@ def test_crash_between_output_and_lineage_commit(spark, paths, tmp_path):
     rows = lineage.collect()
     assert all(r["wave"] == -1 for r in rows)  # backfilled
     assert sum(r["turns_processed"] for r in rows) == n_src
+
+
+def test_lineage_read_error_aborts_instead_of_backfilling(
+        spark, paths, tmp_path, monkeypatch):
+    """Only "no lineage yet" may read as an empty manifest: any other
+    lineage read failure must abort the run, not backfill every committed
+    bucket a second time."""
+    from engine.spark.pipeline import run_pipeline
+    from engine.spark.sinks import TableSink
+
+    src, _ = paths
+    out = str(tmp_path / "out")
+    run_pipeline(spark, src, out, run_id="runE", waves=2, n_buckets=64)
+    n_lineage = spark.read.parquet(f"{out}/lineage").count()
+
+    read = TableSink.read
+
+    def failing_read(self, schema=None):
+        if self.target.endswith("lineage"):
+            raise RuntimeError("simulated lineage read failure")
+        return read(self, schema)
+
+    monkeypatch.setattr(TableSink, "read", failing_read)
+    with pytest.raises(RuntimeError, match="simulated lineage read failure"):
+        run_pipeline(spark, src, out, run_id="runE2", waves=2, n_buckets=64)
+    monkeypatch.undo()
+
+    lineage = spark.read.parquet(f"{out}/lineage")
+    assert lineage.count() == n_lineage
+    assert lineage.filter("wave = -1").count() == 0
 
 
 def test_bucket_is_process_stable(spark, paths):
@@ -144,10 +201,12 @@ def test_compact_parquet_preserves_content_and_partitions(spark, tmp_path):
 def test_atomic_rewrite_crash_recovery(tmp_path, spark):
     """A crash between atomic_rewrite's two renames leaves the data in
     .prerewrite-* with nothing published; recover_rewrite restores it,
-    and the next atomic_rewrite call self-recovers too (ADVICE r6 #1)."""
+    and the next atomic_rewrite or compact_parquet call self-recovers too
+    (ADVICE r6 #1)."""
     import shutil
 
-    from engine.spark.sinks import atomic_rewrite, recover_rewrite
+    from engine.spark.sinks import (atomic_rewrite, compact_parquet,
+                                    recover_rewrite)
 
     root = tmp_path / "idx"
     spark.range(10).write.parquet(str(root))
@@ -166,3 +225,9 @@ def test_atomic_rewrite_crash_recovery(tmp_path, spark):
         .write.mode("overwrite").parquet(tmp))
     assert out["files_after"] >= 1
     assert spark.read.parquet(str(root)).count() == 10
+
+    # compact_parquet publishes through the same swap, so it recovers too
+    shutil.move(str(root), str(tmp_path / "idx.prerewrite-cafe0002"))
+    compact_parquet(spark, str(root), target_bytes=10**9)
+    assert spark.read.parquet(str(root)).count() == 10
+    assert not list(tmp_path.glob("idx.prerewrite-*"))
