@@ -8,16 +8,17 @@ full corpus. Same lineage as the extraction pipeline's
 output-authoritative resume state (reference: batch_pdf_processor.py's
 completed-stem skip) — persisted derived state stands in for recompute.
 
-Index layout under ``<path>/``:
+Index layout under ``<path>/`` (the table rules — sorted tables, count
+partials, compaction — live in engine/datawork/index_store.py):
 
 * ``vectors/`` — (id, v, bucket): the corpus vectors keyed by their
   sign-LSH bucket (``similarity.bucket_expr`` over the frozen
-  deterministic planes), written range-partitioned + sorted by bucket so
-  a probe's ``bucket IN (...)`` filter prunes parquet row groups via
-  min/max statistics instead of scanning the corpus.
-* ``stats/``   — (bucket, cnt) ADDITIVE partials (appends write partial
-  rows, readers SUM) — occupancy observability for the skew question
-  "did a bucket degenerate?" without touching ``vectors/``.
+  deterministic planes), a sorted table by bucket so a probe's
+  ``bucket IN (...)`` filter prunes parquet row groups via min/max
+  statistics instead of scanning the corpus.
+* ``stats/``   — (bucket, cnt), the count partials of ``vectors/`` —
+  occupancy observability for the skew question "did a bucket
+  degenerate?" without touching ``vectors/``.
 
 Scale contract:
 
@@ -34,21 +35,17 @@ Scale contract:
 
 from __future__ import annotations
 
-import os
 from typing import List, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from . import stage_cache
+from . import index_store, stage_cache
+from .index_store import broadcast_hint, fold_counts, sub, write_sorted
 from .similarity import (bucket_expr, cosine, cosine_topk, lsh_planes, norm,
                          probe_buckets)
 
 VECTORS = "vectors"
 STATS = "stats"
-
-
-def _sub(path: str, name: str) -> str:
-    return os.path.join(path, name)
 
 
 def _bucketed(emb: DataFrame, id_col: str, vec_col: str,
@@ -62,14 +59,9 @@ def write_ann_index(emb: DataFrame, path: str, id_col: str = "vec_id",
                     vec_col: str = "embedding",
                     planes: Optional[List[List[float]]] = None) -> None:
     """Build the persisted index from scratch (mode=overwrite)."""
-    spark = emb.sparkSession
-    planes = planes or lsh_planes()
-    b = _bucketed(emb, id_col, vec_col, planes)
-    (b.repartitionByRange("bucket").sortWithinPartitions("bucket")
-      .write.mode("overwrite").parquet(_sub(path, VECTORS)))
-    (spark.read.parquet(_sub(path, VECTORS))
-        .groupBy("bucket").agg(F.count("*").alias("cnt"))
-        .write.mode("overwrite").parquet(_sub(path, STATS)))
+    write_sorted(_bucketed(emb, id_col, vec_col, planes or lsh_planes()),
+                 ["bucket"], sub(path, VECTORS), "overwrite",
+                 counts=sub(path, STATS))
 
 
 def append_to_ann_index(new_emb: DataFrame, path: str,
@@ -78,12 +70,9 @@ def append_to_ann_index(new_emb: DataFrame, path: str,
     """Fold a wave in: O(wave) — each appended file is sorted within
     itself, so row-group pruning keeps working per file; stats rows are
     appended as partials (readers SUM), never merged in place."""
-    planes = planes or lsh_planes()
-    b = _bucketed(new_emb, id_col, vec_col, planes)
-    (b.repartitionByRange("bucket").sortWithinPartitions("bucket")
-      .write.mode("append").parquet(_sub(path, VECTORS)))
-    (b.groupBy("bucket").agg(F.count("*").alias("cnt"))
-      .write.mode("append").parquet(_sub(path, STATS)))
+    write_sorted(_bucketed(new_emb, id_col, vec_col, planes or lsh_planes()),
+                 ["bucket"], sub(path, VECTORS), "append",
+                 counts=sub(path, STATS))
 
 
 def compact_ann_index(spark: SparkSession, path: str,
@@ -92,25 +81,13 @@ def compact_ann_index(spark: SparkSession, path: str,
     single global bucket-sorted ``vectors/`` layout (per-wave appends
     keep pruning only per-file) and folds ``stats/`` partials to one row
     per bucket. Atomic per table; results identical before/after."""
-    from engine.spark.sinks import atomic_rewrite, compact_sorted_parquet
-
-    out = {}
-    out[VECTORS] = compact_sorted_parquet(
-        spark, _sub(path, VECTORS), ["bucket"], target_bytes)
-    folded = (spark.read.parquet(_sub(path, STATS))
-              .groupBy("bucket").agg(F.sum("cnt").cast("bigint").alias("cnt")))
-    out[STATS] = atomic_rewrite(
-        _sub(path, STATS),
-        lambda tmp: (folded.repartitionByRange(1, "bucket")
-                     .sortWithinPartitions("bucket")
-                     .write.mode("overwrite").parquet(tmp)))
-    return out
+    return index_store.compact(spark, path, {VECTORS: ["bucket"]},
+                               {STATS: ["bucket"]}, target_bytes)
 
 
 def index_occupancy(spark: SparkSession, path: str) -> DataFrame:
     """(bucket, cnt) with partials summed — the skew census."""
-    return (spark.read.parquet(_sub(path, STATS))
-            .groupBy("bucket").agg(F.sum("cnt").cast("bigint").alias("cnt")))
+    return fold_counts(spark.read.parquet(sub(path, STATS)), ["bucket"])
 
 
 def probe_index(spark: SparkSession, path: str, query: Sequence[float],
@@ -123,7 +100,7 @@ def probe_index(spark: SparkSession, path: str, query: Sequence[float],
     and nothing shuffles: pushed-down IN filter, local top-k merge."""
     planes = planes or lsh_planes()
     probes = probe_buckets(query, planes, probe_bits)
-    cand = (spark.read.parquet(_sub(path, VECTORS))
+    cand = (spark.read.parquet(sub(path, VECTORS))
             .filter(F.col("bucket").isin(probes)))
     return cosine_topk(cand, query, k, id_col="id", vec_col="v")
 
@@ -162,9 +139,9 @@ def probe_index_batch(spark: SparkSession, path: str, queries: DataFrame,
         .withColumn("qnrm", norm(F.col("qv"))))
     # census = the persist's count (counting the raw query lineage would
     # evaluate it twice — once for the census, once in the join)
-    bcast_ok = stage_cache.rows("ann_probe_qb", spark) <= max_broadcast_queries
-    hint = F.broadcast if bcast_ok else (lambda df: df)
-    idx = (spark.read.parquet(_sub(path, VECTORS))
+    hint = broadcast_hint(
+        stage_cache.rows("ann_probe_qb", spark) <= max_broadcast_queries)
+    idx = (spark.read.parquet(sub(path, VECTORS))
            .withColumn("nrm", norm(F.col("v"))))
     j = idx.join(hint(qb),
                  (F.col("bucket") == F.col("qbucket"))

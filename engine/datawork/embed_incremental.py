@@ -6,14 +6,16 @@ vectors (reference lineage: the output-authoritative resume scans of
 batch_pdf_processor.py:2562-2625 — persisted derived state stands in for
 recompute).
 
-Index layout under ``<path>/``:
+Index layout under ``<path>/`` (the table rules — sorted tables, count
+partials, compaction, the guard and the banded probe — live in
+engine/datawork/index_store.py):
 
-* ``vectors/`` — (id, v, nrm, sig): the only vector-derived state, written
-  range-partitioned + sorted by id so the candidate-id semi-join on the
-  verify side prunes parquet row groups.
+* ``vectors/`` — (id, v, nrm, sig): the only vector-derived state, a sorted
+  table by id so the candidate-id semi-join on the verify side prunes
+  parquet row groups.
 * ``buckets/`` — (id, band, bucket): ``bands`` rows per vector, sorted by
   (band, bucket) for the wave's touched-bucket probe.
-* ``stats/``   — (band, bucket, cnt) ADDITIVE partials (readers SUM).
+* ``stats/``   — (band, bucket, cnt), the count partials of ``buckets/``.
 * ``layout/``  — one row (bands, rows): the signature layout is FROZEN at
   write time; append/probe read it back, so a caller cannot silently
   probe a 24×4 index with a 16×8 wave.
@@ -33,12 +35,12 @@ broadcasts are censused and fall back to shuffle joins past
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from . import stage_cache
+from . import index_store, stage_cache
 from .incremental import MAX_BROADCAST_ROWS
+from .index_store import (BAND_KEYS, broadcast_hint, drop_hot, sub,
+                          write_sorted, write_sorted_once)
 from .similarity import (LSH_BANDS, LSH_ROWS, _assign_cells, _explode_bands,
                          _shadow_losers, banded_sig_udf, cosine, norm,
                          semdedup_losers)
@@ -47,10 +49,6 @@ VECTORS = "vectors"
 BUCKETS = "buckets"
 STATS = "stats"
 LAYOUT = "layout"
-
-
-def _sub(path: str, name: str) -> str:
-    return os.path.join(path, name)
 
 
 def _base(emb: DataFrame, id_col: str, vec_col: str, bands: int,
@@ -64,29 +62,8 @@ def _base(emb: DataFrame, id_col: str, vec_col: str, bands: int,
         banded_sig_udf(bands, rows)(F.col(vec_col)).alias("sig"))
 
 
-def _write_sorted_once(df: DataFrame, writes: list) -> None:
-    """Materialize an expensive projection ONCE (persist + count), then
-    run each (project, sort_cols, path, mode) range-write off the cache.
-
-    Why: ``repartitionByRange`` runs a boundary-sampling job over its
-    child and then the real exchange — an unpersisted child pays the
-    projection 2-3×. For the 256-plane signature this was measured at
-    88k vectors: plain write 136 s, naive range write 375 s; cached
-    range write pays the projection once. The cache is released before
-    returning."""
-    df = df.persist()
-    df.count()  # materializes every column into the cache exactly once
-    try:
-        for project, sort_cols, path, mode in writes:
-            (project(df).repartitionByRange(*sort_cols)
-             .sortWithinPartitions(*sort_cols)
-             .write.mode(mode).parquet(path))
-    finally:
-        df.unpersist()
-
-
 def read_layout(spark: SparkSession, path: str) -> tuple[int, int]:
-    row = spark.read.parquet(_sub(path, LAYOUT)).collect()[0]
+    row = spark.read.parquet(sub(path, LAYOUT)).collect()[0]
     return int(row["bands"]), int(row["rows"])
 
 
@@ -99,19 +76,14 @@ def write_embedding_index(emb: DataFrame, path: str,
     read back to derive buckets/stats — the sign computation (bands·rows
     plane dots per vector) runs exactly once."""
     spark = emb.sparkSession
-    base = _base(emb, id_col, vec_col, bands, rows)
-    _write_sorted_once(base, [
-        (lambda d: d, ["id"], _sub(path, VECTORS), "overwrite")])
-    base_r = spark.read.parquet(_sub(path, VECTORS))
-    buckets = _explode_bands(base_r, bands, rows)
-    (buckets.repartitionByRange("band", "bucket")
-            .sortWithinPartitions("band", "bucket")
-            .write.mode("overwrite").parquet(_sub(path, BUCKETS)))
-    (spark.read.parquet(_sub(path, BUCKETS))
-        .groupBy("band", "bucket").agg(F.count("*").alias("cnt"))
-        .write.mode("overwrite").parquet(_sub(path, STATS)))
+    write_sorted_once(_base(emb, id_col, vec_col, bands, rows), [
+        (lambda d: d, ["id"], sub(path, VECTORS), "overwrite")])
+    write_sorted(_explode_bands(spark.read.parquet(sub(path, VECTORS)),
+                                bands, rows),
+                 BAND_KEYS, sub(path, BUCKETS), "overwrite",
+                 counts=sub(path, STATS))
     (spark.createDataFrame([(bands, rows)], "`bands` int, `rows` int")
-        .coalesce(1).write.mode("overwrite").parquet(_sub(path, LAYOUT)))
+        .coalesce(1).write.mode("overwrite").parquet(sub(path, LAYOUT)))
 
 
 def append_to_embedding_index(new_emb: DataFrame, path: str,
@@ -119,42 +91,20 @@ def append_to_embedding_index(new_emb: DataFrame, path: str,
                               vec_col: str = "embedding") -> None:
     """Fold an ingested wave in (cost ∝ wave); layout comes from the
     index — a mismatched wave cannot be appended."""
-    spark = new_emb.sparkSession
-    bands, rows = read_layout(spark, path)
-    base = _base(new_emb, id_col, vec_col, bands, rows).persist()
-    try:
-        base.count()  # one signature pass for all three appends
-        (base.repartitionByRange("id").sortWithinPartitions("id")
-             .write.mode("append").parquet(_sub(path, VECTORS)))
-        buckets = _explode_bands(base, bands, rows)
-        (buckets.repartitionByRange("band", "bucket")
-                .sortWithinPartitions("band", "bucket")
-                .write.mode("append").parquet(_sub(path, BUCKETS)))
-        (buckets.groupBy("band", "bucket").agg(F.count("*").alias("cnt"))
-            .write.mode("append").parquet(_sub(path, STATS)))
-    finally:
-        base.unpersist()
+    bands, rows = read_layout(new_emb.sparkSession, path)
+    # one signature pass for all three appends
+    write_sorted_once(_base(new_emb, id_col, vec_col, bands, rows), [
+        (lambda d: d, ["id"], sub(path, VECTORS), "append"),
+        (lambda d: _explode_bands(d, bands, rows), BAND_KEYS,
+         sub(path, BUCKETS), "append", sub(path, STATS))])
 
 
 def compact_embedding_index(spark: SparkSession, path: str,
                             target_bytes: int = 128 * 1024 * 1024) -> dict:
     """Same maintenance contract as incremental.compact_index."""
-    from engine.spark.sinks import atomic_rewrite, compact_sorted_parquet
-
-    out = {}
-    out[VECTORS] = compact_sorted_parquet(
-        spark, _sub(path, VECTORS), ["id"], target_bytes)
-    out[BUCKETS] = compact_sorted_parquet(
-        spark, _sub(path, BUCKETS), ["band", "bucket"], target_bytes)
-    folded = (spark.read.parquet(_sub(path, STATS))
-              .groupBy("band", "bucket")
-              .agg(F.sum("cnt").cast("bigint").alias("cnt")))
-    out[STATS] = atomic_rewrite(
-        _sub(path, STATS),
-        lambda tmp: (folded.repartitionByRange(1, "band", "bucket")
-                     .sortWithinPartitions("band", "bucket")
-                     .write.mode("overwrite").parquet(tmp)))
-    return out
+    return index_store.compact(
+        spark, path, {VECTORS: ["id"], BUCKETS: BAND_KEYS},
+        {STATS: BAND_KEYS}, target_bytes)
 
 
 # ---------------------------------------------------------------------------
@@ -171,6 +121,8 @@ MEMBERS = "members"  # (id, cell, pcos) — sorted by cell (touched-cell probe)
 CSTATS = "cstats"    # (cell, cnt) additive partials (combined max_cluster)
 LOSERS = "losers"    # (id) — corpus docs already SemDeDup-dropped (see
                      # write_semantic_index; retroactive probes exclude them)
+LOSERS_AT = "losers_at"  # one row (threshold): losers/'s threshold, NULL
+                         # when the index keeps no losers/
 
 
 def _semantic_assign(emb: DataFrame, cent: DataFrame, id_col: str,
@@ -181,6 +133,18 @@ def _semantic_assign(emb: DataFrame, cent: DataFrame, id_col: str,
     base = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
                       norm(F.col(vec_col)).alias("nrm"))
     return _assign_cells(base, cent, keep_score=True)
+
+
+def _write_assigned(asg: DataFrame, path: str, mode: str) -> None:
+    write_sorted_once(asg, [
+        (lambda d: d.select("id", "cell", F.col("ccos").alias("pcos")),
+         ["cell"], sub(path, MEMBERS), mode, sub(path, CSTATS)),
+        (lambda d: d.select("id", "v", "nrm"),
+         ["id"], sub(path, VECTORS), mode)])
+
+
+def _losers_threshold(spark: SparkSession, path: str) -> float | None:
+    return spark.read.parquet(sub(path, LOSERS_AT)).first()["threshold"]
 
 
 def write_semantic_index(emb: DataFrame, path: str, centroids: DataFrame,
@@ -195,46 +159,45 @@ def write_semantic_index(emb: DataFrame, path: str, centroids: DataFrame,
     at build time and persists the dropped ids as ``losers/`` — the
     exclusion set ``retroactive_wave_losers`` needs (a corpus doc that
     already lost cannot "newly" lose to a wave). One-time build cost, the
-    natural byproduct of deduping a corpus before shipping it."""
+    natural byproduct of deduping a corpus before shipping it. The
+    threshold is frozen into the index (``losers_at/``), the way
+    ``layout/`` freezes the LSH layout: appends keep ``losers/`` at it."""
     spark = emb.sparkSession
     (centroids.select("cell", "cv").coalesce(1)
-              .write.mode("overwrite").parquet(_sub(path, CELLS)))
-    cent = spark.read.parquet(_sub(path, CELLS))
-    asg = _semantic_assign(emb, cent, id_col, vec_col)
-    _write_sorted_once(asg, [
-        (lambda d: d.select("id", "cell", F.col("ccos").alias("pcos")),
-         ["cell"], _sub(path, MEMBERS), "overwrite"),
-        (lambda d: d.select("id", "v", "nrm"),
-         ["id"], _sub(path, VECTORS), "overwrite")])
-    (spark.read.parquet(_sub(path, MEMBERS))
-        .groupBy("cell").agg(F.count("*").alias("cnt"))
-        .write.mode("overwrite").parquet(_sub(path, CSTATS)))
+              .write.mode("overwrite").parquet(sub(path, CELLS)))
+    cent = spark.read.parquet(sub(path, CELLS))
+    _write_assigned(_semantic_assign(emb, cent, id_col, vec_col), path,
+                    "overwrite")
+    (spark.createDataFrame([(losers_threshold,)], "threshold double")
+        .coalesce(1).write.mode("overwrite").parquet(sub(path, LOSERS_AT)))
     if losers_threshold is not None:
         (semdedup_losers(emb, threshold=losers_threshold, centroids=cent,
                          id_col=id_col, vec_col=vec_col)
-         .select("id").write.mode("overwrite").parquet(_sub(path, LOSERS)))
+         .select("id").write.mode("overwrite").parquet(sub(path, LOSERS)))
 
 
 def append_to_semantic_index(new_emb: DataFrame, path: str,
                              id_col: str = "vec_id",
                              vec_col: str = "embedding") -> None:
     """Fold a processed wave in (cost ∝ wave); assignment uses the FROZEN
-    codebook — appending never re-trains."""
+    codebook — appending never re-trains.
+
+    When the index keeps ``losers/``, the wave's own losers and the corpus
+    docs it newly outranks — both probed against the index BEFORE the
+    fold, at the frozen threshold — are appended to it, so ``losers/``
+    stays ``losers(corpus ∪ wave)`` (a SemDeDup loser keeps its shadower,
+    so the set only grows)."""
     spark = new_emb.sparkSession
-    cent = spark.read.parquet(_sub(path, CELLS))
-    asg = _semantic_assign(new_emb, cent, id_col, vec_col).persist()
-    try:
-        asg.count()  # one assignment pass for all three appends
-        (asg.select("id", "cell", F.col("ccos").alias("pcos"))
-            .repartitionByRange("cell").sortWithinPartitions("cell")
-            .write.mode("append").parquet(_sub(path, MEMBERS)))
-        (asg.select("id", "v", "nrm")
-            .repartitionByRange("id").sortWithinPartitions("id")
-            .write.mode("append").parquet(_sub(path, VECTORS)))
-        (asg.groupBy("cell").agg(F.count("*").alias("cnt"))
-            .write.mode("append").parquet(_sub(path, CSTATS)))
-    finally:
-        asg.unpersist()
+    threshold = _losers_threshold(spark, path)
+    if threshold is not None:
+        args = (new_emb, path, threshold, id_col, vec_col)
+        (semdedup_wave_losers(*args).select("id")
+         .unionByName(retroactive_wave_losers(*args).select("id"))
+         .write.mode("append").parquet(sub(path, LOSERS)))
+    cent = spark.read.parquet(sub(path, CELLS))
+    # one assignment pass for all three appends
+    _write_assigned(_semantic_assign(new_emb, cent, id_col, vec_col), path,
+                    "append")
 
 
 def _open_wave_probe(new_emb: DataFrame, index_path: str, id_col: str,
@@ -250,18 +213,18 @@ def _open_wave_probe(new_emb: DataFrame, index_path: str, id_col: str,
     Returns (wave_side, corpus_side), both (id, cell, pcos, v, nrm) —
     the shape ``similarity._shadow_losers`` joins."""
     spark = new_emb.sparkSession
-    cent = spark.read.parquet(_sub(index_path, CELLS))
+    cent = spark.read.parquet(sub(index_path, CELLS))
     wave = stage_cache.checkpoint(
         "sem_wave", _semantic_assign(new_emb, cent, id_col, vec_col))
     n_wave = wave.count()
-    hint = F.broadcast if n_wave <= max_broadcast_rows else (lambda df: df)
+    hint = broadcast_hint(n_wave <= max_broadcast_rows)
 
     touched = wave.select("cell").distinct()
-    cmem = (spark.read.parquet(_sub(index_path, MEMBERS))
+    cmem = (spark.read.parquet(sub(index_path, MEMBERS))
             .join(hint(touched), "cell", "left_semi"))
     if restrict is not None:
         wave, cmem = restrict(wave, cmem, hint)
-    cvec = (spark.read.parquet(_sub(index_path, VECTORS))
+    cvec = (spark.read.parquet(sub(index_path, VECTORS))
             .join(hint(cmem.select("id")), "id", "left_semi"))
     corpus_side = (cmem.join(cvec, "id")
                    .select("id", "cell", "pcos", "v", "nrm"))
@@ -292,17 +255,8 @@ def semdedup_wave_losers(new_emb: DataFrame, index_path: str,
     counts), mirroring the LSH hot-bucket guard. Wave-side broadcasts are
     censused with the same fallback as incremental_embedding_pairs."""
     def drop_big(wave, cmem, hint):
-        touched = wave.select("cell").distinct()
-        old_cnt = (wave.sparkSession.read.parquet(_sub(index_path, CSTATS))
-                   .join(hint(touched), "cell", "left_semi")
-                   .groupBy("cell").agg(F.sum("cnt").alias("old_cnt")))
-        new_cnt = wave.groupBy("cell").agg(F.count("*").alias("new_cnt"))
-        big = (new_cnt.join(old_cnt, "cell", "left_outer")
-               .withColumn("cnt", F.coalesce("old_cnt", F.lit(0))
-                           + F.col("new_cnt"))
-               .filter(F.col("cnt") > max_cluster).select("cell"))
-        return (wave.join(hint(big), "cell", "left_anti"),
-                cmem.join(hint(big), "cell", "left_anti"))
+        return drop_hot(wave, cmem, sub(index_path, CSTATS), ["cell"],
+                        max_cluster, hint)
 
     wave_side, corpus_side = _open_wave_probe(
         new_emb, index_path, id_col, vec_col, max_broadcast_rows,
@@ -330,11 +284,20 @@ def retroactive_wave_losers(new_emb: DataFrame, index_path: str,
     shadower this probe sees. Contract:
     ``retroactive == (losers(old ∪ new) − losers(old)) ∩ corpus`` with
     identical (kept_id, cosine) — equivalence test + oracle pin it.
+
     Requires the index to have been built with ``losers_threshold`` equal
-    to this ``threshold``."""
+    to this ``threshold`` (``ValueError`` otherwise). The contract holds
+    across appends: ``append_to_semantic_index`` folds each wave's losers
+    and the corpus docs it newly outranked into ``losers/``, so the
+    exclusion set is always ``losers(<everything indexed>)``."""
+    stored = _losers_threshold(new_emb.sparkSession, index_path)
+    if stored != threshold:
+        raise ValueError(f"index losers/ was built at threshold {stored}, "
+                         f"probe asked for {threshold}")
+
     def drop_old_losers(wave, cmem, hint):
         return wave, cmem.join(
-            wave.sparkSession.read.parquet(_sub(index_path, LOSERS)),
+            wave.sparkSession.read.parquet(sub(index_path, LOSERS)),
             "id", "left_anti")
 
     wave_side, corpus_side = _open_wave_probe(
@@ -360,79 +323,10 @@ def incremental_embedding_pairs(new_emb: DataFrame, index_path: str,
     persisted + wave population exceeds it is dropped from candidate
     generation on BOTH sides — exactly what the full recompute's guard
     would do, so exactness survives the cap."""
-    spark = new_emb.sparkSession
-    bands, rows = read_layout(spark, index_path)
+    bands, rows = read_layout(new_emb.sparkSession, index_path)
     wave = stage_cache.checkpoint(
         "embincr_wave", _base(new_emb, id_col, vec_col, bands, rows))
-    # pre-partitioned by (band, bucket) so the occupancy aggregate and both
-    # candidate joins reuse the cache's partitioning (no extra Exchange)
-    b_new = stage_cache.persist(
-        "embincr_b_new",
-        _explode_bands(wave, bands, rows).repartition("band", "bucket"))
-
-    # the persist's count: _explode_bands emits exactly ``bands`` rows/vector,
-    # so it IS n_wave·bands — the broadcast-size variable
-    bcast_ok = stage_cache.rows("embincr_b_new", spark) <= max_broadcast_rows
-    hint = F.broadcast if bcast_ok else (lambda df: df)
-
-    touched = b_new.select("band", "bucket").distinct()
-    corpus_buckets = (spark.read.parquet(_sub(index_path, BUCKETS))
-                      .join(hint(touched), ["band", "bucket"], "left_semi"))
-
-    if max_bucket is not None:
-        corpus_stats = (spark.read.parquet(_sub(index_path, STATS))
-                        .join(hint(touched), ["band", "bucket"], "left_semi")
-                        .groupBy("band", "bucket")
-                        .agg(F.sum("cnt").alias("old_cnt")))
-        new_cnt = (b_new.groupBy("band", "bucket")
-                   .agg(F.count("*").alias("new_cnt")))
-        hot = (new_cnt.join(corpus_stats, ["band", "bucket"], "left_outer")
-               .withColumn("cnt", F.coalesce("old_cnt", F.lit(0))
-                           + F.col("new_cnt"))
-               .filter(F.col("cnt") > max_bucket).select("band", "bucket"))
-        b_new = b_new.join(hint(hot), ["band", "bucket"], "left_anti")
-        corpus_buckets = corpus_buckets.join(hint(hot), ["band", "bucket"],
-                                             "left_anti")
-
-    nn = (b_new.alias("a")
-          .join(b_new.alias("b"),
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bucket") == F.col("b.bucket"))
-                & (F.col("a.id") < F.col("b.id")))
-          .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")))
-    no = (b_new.alias("w")
-          .join(corpus_buckets.alias("c"),
-                (F.col("w.band") == F.col("c.band"))
-                & (F.col("w.bucket") == F.col("c.bucket")))
-          .select(F.least(F.col("w.id"), F.col("c.id")).alias("id_a"),
-                  F.greatest(F.col("w.id"), F.col("c.id")).alias("id_b")))
-    cand = nn.unionByName(no).distinct()
-    # cand feeds five subtrees of the verify plan (both verify joins plus
-    # both arms of the id semi-join) — store the wave-proportional set so
-    # AQE materializes the nn/no/distinct lineage once, not per consumer
-    # (the incremental.py probe lesson)
-    cand = stage_cache.checkpoint("embincr_cand", cand)
-
-    # exact-cosine verify: corpus vectors read ONLY for candidate ids
-    # (id-sorted layout → row-group pruning); wave membership rides the
-    # union as a column, so origin tagging costs zero extra joins
-    cand_ids = (cand.select(F.col("id_a").alias("id"))
-                .unionByName(cand.select(F.col("id_b").alias("id")))
-                .distinct())
-    corpus_vecs = (spark.read.parquet(_sub(index_path, VECTORS))
-                   .join(hint(cand_ids), "id", "left_semi"))
-    vecs = (wave.select("id", "v", "nrm").withColumn("_new", F.lit(True))
-            .unionByName(corpus_vecs.select("id", "v", "nrm")
-                         .withColumn("_new", F.lit(False))))
-    va = vecs.select(F.col("id").alias("id_a"), F.col("v").alias("va"),
-                     F.col("nrm").alias("na"), F.col("_new").alias("a_new"))
-    vb = vecs.select(F.col("id").alias("id_b"), F.col("v").alias("vb"),
-                     F.col("nrm").alias("nb"), F.col("_new").alias("b_new"))
-    return (cand.join(va, "id_a").join(vb, "id_b")
-            .select("id_a", "id_b",
-                    cosine(F.col("va"), F.col("na"), F.col("vb"), F.col("nb"))
-                     .alias("cosine"),
-                    F.when(F.col("a_new") & F.col("b_new"),
-                           F.lit("new_new")).otherwise(F.lit("new_old"))
-                     .alias("origin"))
-            .filter(F.col("cosine") >= threshold))
+    return index_store.banded_wave_probe(
+        wave, lambda w: _explode_bands(w, bands, rows), index_path, VECTORS,
+        ["v", "nrm"], "embincr", max_bucket, max_broadcast_rows, "cosine",
+        lambda a, b: cosine(a("v"), a("nrm"), b("v"), b("nrm")), threshold)

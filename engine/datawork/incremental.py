@@ -8,17 +8,18 @@ analogue of the extraction pipeline's output-authoritative resume scans
 persisted signature/bucket index is the "completed" state and each wave
 joins against it instead of recomputing).
 
-Index layout under ``<path>/``:
+Index layout under ``<path>/`` (the table rules — sorted tables, count
+partials, compaction, the guard and the banded probe — live in
+engine/datawork/index_store.py):
 
 * ``sigs/``    — (id, mh0..mh{k-1}), one row per corpus doc. The only text
   -derived state; a wave never touches corpus text again.
-* ``buckets/`` — (id, band, bucket), ``bands`` rows per doc, written
-  range-partitioned + sorted by (band, bucket) so a wave's probe (a join
-  against the wave's touched buckets) prunes parquet row groups by min/max
-  statistics instead of scanning the full index.
-* ``stats/``   — (band, bucket, cnt) ADDITIVE partial counts (appends write
-  partial rows; readers aggregate). Only the wave's touched buckets are
-  ever aggregated, after a broadcast semi-join.
+* ``buckets/`` — (id, band, bucket), ``bands`` rows per doc, a sorted table
+  by (band, bucket) so a wave's probe (a join against the wave's touched
+  buckets) prunes parquet row groups instead of scanning the full index.
+* ``stats/``   — (band, bucket, cnt), the count partials of ``buckets/``.
+  Only the wave's touched buckets are ever aggregated, after a broadcast
+  semi-join.
 
 Scale contract (the point of the design): per-wave cost is proportional to
 the WAVE, not the corpus —
@@ -45,17 +46,14 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from . import stage_cache
+from . import index_store, stage_cache
 from .dedup import (MINHASH_BANDS, MINHASH_K, _band_explode,
                     minhash_signatures)
+from .index_store import BAND_KEYS, sub, write_sorted
 
 SIGS = "sigs"
 BUCKETS = "buckets"
 STATS = "stats"
-
-
-def _sub(path: str, name: str) -> str:
-    return os.path.join(path, name)
 
 
 def write_minhash_index(docs: DataFrame, path: str, id_col: str = "doc_id",
@@ -70,19 +68,12 @@ def write_minhash_index(docs: DataFrame, path: str, id_col: str = "doc_id",
     a recomputed lineage."""
     spark = docs.sparkSession
     sigs = minhash_signatures(docs, id_col, text_col, n, k)
-    sigs.write.mode("overwrite").parquet(_sub(path, SIGS))
-    sigs_r = spark.read.parquet(_sub(path, SIGS))
-    buckets = _band_explode(sigs_r, k, bands)
-    # range-partition + sort by (band, bucket): parquet min/max row-group
-    # statistics then prune a wave's touched-bucket probe to the few row
-    # groups that can hold those keys (the persisted analogue of the
-    # in-memory co-partitioned bucket cache, dedup._minhash_bucket_slot)
-    (buckets.repartitionByRange("band", "bucket")
-            .sortWithinPartitions("band", "bucket")
-            .write.mode("overwrite").parquet(_sub(path, BUCKETS)))
-    (spark.read.parquet(_sub(path, BUCKETS))
-        .groupBy("band", "bucket").agg(F.count("*").alias("cnt"))
-        .write.mode("overwrite").parquet(_sub(path, STATS)))
+    sigs.write.mode("overwrite").parquet(sub(path, SIGS))
+    # the sorted (band, bucket) layout is the persisted analogue of the
+    # in-memory co-partitioned bucket cache, dedup._minhash_bucket_slot
+    write_sorted(_band_explode(spark.read.parquet(sub(path, SIGS)), k, bands),
+                 BAND_KEYS, sub(path, BUCKETS), "overwrite",
+                 counts=sub(path, STATS))
 
 
 def append_to_index(new_docs: DataFrame, path: str, id_col: str = "doc_id",
@@ -102,18 +93,13 @@ def append_to_index(new_docs: DataFrame, path: str, id_col: str = "doc_id",
     over the wave text (VERDICT r6 #7). Must be exactly
     ``minhash_signatures(new_docs, ...)`` rows — the signature is a
     deterministic function of the text, so a persisted copy qualifies."""
-    spark = new_docs.sparkSession
     sigs = sigs_df if sigs_df is not None \
         else minhash_signatures(new_docs, id_col, text_col, n, k)
-    sigs.write.mode("append").parquet(_sub(path, SIGS))
-    # re-read ONLY this wave's ids to derive its buckets: cheaper to recompute
-    # from the wave's in-memory lineage (1 row/doc) than to rescan the table
-    buckets = _band_explode(sigs, k, bands)
-    (buckets.repartitionByRange("band", "bucket")
-            .sortWithinPartitions("band", "bucket")
-            .write.mode("append").parquet(_sub(path, BUCKETS)))
-    (buckets.groupBy("band", "bucket").agg(F.count("*").alias("cnt"))
-        .write.mode("append").parquet(_sub(path, STATS)))
+    sigs.write.mode("append").parquet(sub(path, SIGS))
+    # derive the wave's buckets from its in-memory lineage (1 row/doc):
+    # cheaper than rescanning the table for this wave's ids
+    write_sorted(_band_explode(sigs, k, bands), BAND_KEYS,
+                 sub(path, BUCKETS), "append", counts=sub(path, STATS))
 
 
 def stream_dedup_ingest(stream_docs: DataFrame, index_path: str,
@@ -175,8 +161,8 @@ def compact_index(spark: SparkSession, path: str,
     ``append_to_index`` adds its own (internally sorted) files, so
     ``buckets/`` row-group pruning degrades to per-appended-file and
     ``stats/`` accumulates partial rows forever. This rewrites, atomically
-    per table (engine/spark/sinks.atomic_rewrite — the parquet analogue
-    of Iceberg's rewrite_data_files):
+    per table (index_store.compact — the parquet analogue of Iceberg's
+    rewrite_data_files):
 
     * ``buckets/`` → one global (band,bucket) range-sorted layout;
     * ``sigs/``    → range-sorted by id (the candidate-id semi-join now
@@ -186,22 +172,9 @@ def compact_index(spark: SparkSession, path: str,
     Query results are identical before/after (compaction test pins it);
     only file counts, layout, and stats row counts change. Returns
     per-table {files,bytes}×{before,after}."""
-    from engine.spark.sinks import atomic_rewrite, compact_sorted_parquet
-
-    out = {}
-    out[BUCKETS] = compact_sorted_parquet(
-        spark, _sub(path, BUCKETS), ["band", "bucket"], target_bytes)
-    out[SIGS] = compact_sorted_parquet(
-        spark, _sub(path, SIGS), ["id"], target_bytes)
-    folded = (spark.read.parquet(_sub(path, STATS))
-              .groupBy("band", "bucket")
-              .agg(F.sum("cnt").cast("bigint").alias("cnt")))
-    out[STATS] = atomic_rewrite(
-        _sub(path, STATS),
-        lambda tmp: (folded.repartitionByRange(1, "band", "bucket")
-                     .sortWithinPartitions("band", "bucket")
-                     .write.mode("overwrite").parquet(tmp)))
-    return out
+    return index_store.compact(
+        spark, path, {BUCKETS: BAND_KEYS, SIGS: ["id"]}, {STATS: BAND_KEYS},
+        target_bytes)
 
 
 #: Above this many wave-derived rows (wave docs × bands), the wave-side
@@ -251,108 +224,18 @@ def incremental_verified_pairs(new_docs: DataFrame, index_path: str,
     joins run without the hint — identical pair set (the equivalence
     tests run both paths), bounded memory, and AQE may still broadcast
     at runtime if the actual relation turns out small."""
-    spark = new_docs.sparkSession
     # ``presigned`` = the wave's ALREADY-persisted signature table (must be
     # minhash_signatures(new_docs, ...) rows) — the probe-then-fold loop
     # signs the wave once and shares it with append_to_index (r6 #7)
     sig_new = presigned if presigned is not None else stage_cache.checkpoint(
         "incr_sig_new", minhash_signatures(new_docs, id_col, text_col, n, k))
-    # repartitioned by (band, bucket) BEFORE the persist (the
-    # _minhash_bucket_slot trick): touched/distinct, the wave occupancy
-    # aggregate, and both candidate joins all key on (band, bucket), so
-    # they read the cache's outputPartitioning instead of each adding an
-    # Exchange of the wave buckets
-    b_new = stage_cache.persist(
-        "incr_b_new",
-        _band_explode(sig_new, k, bands).repartition("band", "bucket"))
 
-    # census: the persist's own count — _band_explode emits exactly
-    # ``bands`` rows/doc, so it IS the broadcast-size variable
-    # (n_wave·bands): the broadcast decision comes from the wave's REAL
-    # size, not a hope
-    bcast_ok = stage_cache.rows("incr_b_new", spark) <= max_broadcast_rows
-    hint = F.broadcast if bcast_ok else (lambda df: df)
+    def est_jaccard(a, b):
+        matches = sum(F.when(a(f"mh{i}") == b(f"mh{i}"), 1).otherwise(0)
+                      for i in range(k))
+        return F.round(matches / F.lit(float(k)), 6)
 
-    # the wave's probe set — ≤ bands rows/doc, broadcast while small
-    touched = b_new.select("band", "bucket").distinct()
-
-    # corpus side: scans filtered by wave-driven semi-joins (no corpus
-    # shuffle on the broadcast path; on the fallback path the corpus side
-    # shuffles by (band,bucket) — still never by corpus text/signature)
-    corpus_buckets = (spark.read.parquet(_sub(index_path, BUCKETS))
-                      .join(hint(touched), ["band", "bucket"],
-                            "left_semi"))
-    corpus_stats = (spark.read.parquet(_sub(index_path, STATS))
-                    .join(hint(touched), ["band", "bucket"],
-                          "left_semi")
-                    .groupBy("band", "bucket")
-                    .agg(F.sum("cnt").alias("old_cnt")))
-
-    # combined occupancy = persisted corpus count + wave count — the same
-    # totals a full recompute over old ∪ new counts, restricted to touched
-    # buckets (untouched buckets cannot produce wave pairs)
-    new_cnt = b_new.groupBy("band", "bucket").agg(F.count("*").alias("new_cnt"))
-    hot = (new_cnt.join(corpus_stats, ["band", "bucket"], "left_outer")
-           .withColumn("cnt", F.coalesce("old_cnt", F.lit(0)) + F.col("new_cnt"))
-           .filter(F.col("cnt") > max_bucket).select("band", "bucket"))
-
-    b_new_cold = b_new.join(hint(hot), ["band", "bucket"], "left_anti")
-    corpus_cold = corpus_buckets.join(hint(hot), ["band", "bucket"],
-                                      "left_anti")
-
-    nn = (b_new_cold.alias("a")
-          .join(b_new_cold.alias("b"),
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bucket") == F.col("b.bucket"))
-                & (F.col("a.id") < F.col("b.id")))
-          .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")))
-    no = (b_new_cold.alias("w")
-          .join(corpus_cold.alias("c"),
-                (F.col("w.band") == F.col("c.band"))
-                & (F.col("w.bucket") == F.col("c.bucket")))
-          .select(F.least(F.col("w.id"), F.col("c.id")).alias("id_a"),
-                  F.greatest(F.col("w.id"), F.col("c.id")).alias("id_b")))
-    cand = nn.unionByName(no).distinct()
-    # the candidate set feeds FIVE subtrees of the verify plan (both verify
-    # joins, plus both arms of the candidate-id semi-join) — left lazy,
-    # Catalyst replans and AQE re-materializes the whole nn/no/distinct
-    # lineage once per consumer (measured at sf0.1: a 228-job probe, ~60
-    # redundant shuffle stages and seconds of driver planning). cand is
-    # wave-proportional by construction, so the checkpoint is bounded by
-    # the same contract as the broadcasts above, and it keeps the verify
-    # join's analyzed tree small. Its plan reads the index, so an append
-    # or compaction of the index rebuilds it.
-    cand = stage_cache.checkpoint("incr_cand", cand)
-
-    # verify via the signature estimate — corpus signatures are read ONLY
-    # for candidate ids (semi-join; candidate volume ∝ wave, so the same
-    # census decision governs the hint)
-    cand_ids = (cand.select(F.col("id_a").alias("id"))
-                .unionByName(cand.select(F.col("id_b").alias("id")))
-                .distinct())
-    sig_old = (spark.read.parquet(_sub(index_path, SIGS))
-               .join(hint(cand_ids), "id", "left_semi"))
-    # wave membership rides the union as a column — origin tagging then
-    # costs ZERO extra joins (r5 verdict nit: the old spelling broadcast
-    # the wave-id table twice just to mark each side)
-    sig_all = (sig_new.withColumn("_new", F.lit(True))
-               .unionByName(sig_old.withColumn("_new", F.lit(False))))
-    sa = sig_all.select(F.col("id").alias("id_a"),
-                        F.col("_new").alias("a_new"),
-                        *[F.col(f"mh{i}").alias(f"a{i}") for i in range(k)])
-    sb = sig_all.select(F.col("id").alias("id_b"),
-                        F.col("_new").alias("b_new"),
-                        *[F.col(f"mh{i}").alias(f"b{i}") for i in range(k)])
-    matches = sum(F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-                  for i in range(k))
-    # origin is a function of wave membership, not of which candidate
-    # branch produced the pair (both-in-wave pairs can also surface via
-    # the wave×corpus join when ids overlap buckets — distinct() merged them)
-    return (cand.join(sa, "id_a").join(sb, "id_b")
-            .select("id_a", "id_b",
-                    F.round(matches / F.lit(float(k)), 6)
-                     .alias("est_jaccard"),
-                    F.when(F.col("a_new") & F.col("b_new"),
-                           F.lit("new_new")).otherwise(F.lit("new_old"))
-                     .alias("origin"))
-            .filter(F.col("est_jaccard") >= threshold))
+    return index_store.banded_wave_probe(
+        sig_new, lambda s: _band_explode(s, k, bands), index_path, SIGS,
+        [f"mh{i}" for i in range(k)], "incr", max_bucket, max_broadcast_rows,
+        "est_jaccard", est_jaccard, threshold)

@@ -7,89 +7,52 @@ user can write
 
 Every UDF is an Arrow-batched ``pandas_udf`` in the ``Iterator[pd.Series]``
 form (one Python worker per partition, compiled regexes reused across
-batches; no per-row Python round-trips). Names are prefixed ``x_`` to avoid
-colliding with builtins.
+batches; no per-row Python round-trips), built by one factory from the
+table below: (name, return type, kernel, result on NULL). Names are
+prefixed ``x_`` to avoid colliding with builtins.
 """
 
 from __future__ import annotations
 
+import json
 from typing import Iterator
 
 import pandas as pd
 
 from pyspark.sql.functions import pandas_udf
 
+from engine.core.cleaner import clean_markdown
+from engine.core.grounding import grounded_to_markdown, strip_eos
+from engine.core.html_clean import clean_html
+from engine.core.jsonparse import extract_json
+from engine.core.metadata import detect_language, extract_title
+from engine.core.pages import word_count
 
-@pandas_udf("string")
-def x_clean_markdown(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    from engine.core.cleaner import clean_markdown
-    for s in batches:
-        yield s.map(lambda t: clean_markdown(t)[0] if isinstance(t, str) else None)
-
-
-@pandas_udf("string")
-def x_clean_html(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    from engine.core.html_clean import clean_html
-    for s in batches:
-        yield s.map(lambda t: clean_html(t)[0] if isinstance(t, str) else None)
-
-
-@pandas_udf("string")
-def x_grounded_to_markdown(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    from engine.core.grounding import grounded_to_markdown
-    for s in batches:
-        yield s.map(lambda t: grounded_to_markdown(t)[0] if isinstance(t, str) else None)
-
-
-@pandas_udf("string")
-def x_strip_eos(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    from engine.core.grounding import strip_eos
-    for s in batches:
-        yield s.map(lambda t: strip_eos(t) if isinstance(t, str) else None)
+_TABLE = [
+    ("x_clean_markdown", "string", lambda t: clean_markdown(t)[0], None),
+    ("x_clean_html", "string", lambda t: clean_html(t)[0], None),
+    ("x_grounded_to_markdown", "string",
+     lambda t: grounded_to_markdown(t)[0], None),
+    ("x_strip_eos", "string", strip_eos, None),
+    ("x_word_count", "int", word_count, 0),
+    ("x_detect_language", "string", detect_language, "en"),
+    ("x_extract_title", "string", extract_title, None),
+    ("x_extract_json", "string",
+     lambda t: json.dumps(extract_json(t), ensure_ascii=False,
+                          sort_keys=True), None),
+]
 
 
-@pandas_udf("int")
-def x_word_count(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    from engine.core.pages import word_count
-    for s in batches:
-        yield s.map(lambda t: word_count(t) if isinstance(t, str) else 0)
+def _udf(ret: str, kernel, on_null):
+    @pandas_udf(ret)
+    def fn(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        for s in batches:
+            yield s.map(lambda t: kernel(t) if isinstance(t, str) else on_null)
+    return fn
 
 
-@pandas_udf("string")
-def x_detect_language(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    from engine.core.metadata import detect_language
-    for s in batches:
-        yield s.map(lambda t: detect_language(t) if isinstance(t, str) else "en")
-
-
-@pandas_udf("string")
-def x_extract_title(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    from engine.core.metadata import extract_title
-    for s in batches:
-        yield s.map(lambda t: extract_title(t) if isinstance(t, str) else None)
-
-
-@pandas_udf("string")
-def x_extract_json(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    import json
-
-    from engine.core.jsonparse import extract_json
-    for s in batches:
-        yield s.map(lambda t: json.dumps(extract_json(t), ensure_ascii=False,
-                                         sort_keys=True)
-                    if isinstance(t, str) else None)
-
-
-ALL = {
-    "x_clean_markdown": x_clean_markdown,
-    "x_clean_html": x_clean_html,
-    "x_grounded_to_markdown": x_grounded_to_markdown,
-    "x_strip_eos": x_strip_eos,
-    "x_word_count": x_word_count,
-    "x_detect_language": x_detect_language,
-    "x_extract_title": x_extract_title,
-    "x_extract_json": x_extract_json,
-}
+ALL = {name: _udf(ret, kernel, on_null)
+       for name, ret, kernel, on_null in _TABLE}
 
 
 def register_all(spark) -> None:

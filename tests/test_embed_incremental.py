@@ -355,3 +355,31 @@ def test_shared_fold_bitwise_equals_python_loop(spark):
     assert z[1000] == 0.0 and z[1004] == 0.0
     assert z[1001] is None and z[1002] is None and z[1003] is None
     assert z[1005] == 11.0
+
+
+def test_retroactive_after_append_skips_docs_that_already_lost(spark,
+                                                               idx_path):
+    """Three identical vectors in one cell: id 0 is the corpus, id 2 is
+    appended as wave 1, id 1 is probed as wave 2. Id 2 already lost to
+    id 0, so ``(losers(old ∪ new) − losers(old)) ∩ corpus`` is empty: the
+    append must fold id 2 into ``losers/``. A probe at a threshold other
+    than the one ``losers/`` was built at is refused."""
+    from engine.datawork.embed_incremental import (append_to_semantic_index,
+                                                   retroactive_wave_losers,
+                                                   write_semantic_index)
+    v = _unit(random.Random(3))
+
+    def emb(*ids):
+        return spark.createDataFrame([(i, v) for i in ids],
+                                     "vec_id: long, embedding: array<double>")
+
+    cent = spark.createDataFrame([(0, v)], "cell: int, cv: array<double>")
+    write_semantic_index(emb(0), idx_path, centroids=cent,
+                         losers_threshold=THRESH)
+    append_to_semantic_index(emb(2), idx_path)
+    assert _semantic_wave(retroactive_wave_losers(emb(1), idx_path,
+                                                  threshold=THRESH)) == []
+    assert [r.id for r in spark.read.parquet(f"{idx_path}/losers")
+            .collect()] == [2]
+    with pytest.raises(ValueError):
+        retroactive_wave_losers(emb(1), idx_path, threshold=0.9)

@@ -362,3 +362,44 @@ def test_stream_dedup_ingest_partitions_full_pair_set(spark, idx_path,
     probe = spark.createDataFrame([(99_999, "nothing like the corpus x")],
                                   "doc_id: long, text: string")
     incremental_verified_pairs(probe, idx_path).count()  # must not raise
+
+
+@pytest.mark.parametrize("family", ["minhash", "embedding", "ann"])
+def test_compactor_recovers_stranded_stats(spark, tmp_path, family):
+    """A crash inside atomic_rewrite's swap leaves ``stats.prerewrite-*``
+    and no ``stats/``: each index compactor must restore the table before
+    folding it (as compact_parquet does), ending with one row per key and
+    the same totals."""
+    import math
+    from pathlib import Path
+
+    from engine.datawork import ann_index, embed_incremental, incremental
+
+    path = str(tmp_path / "idx")
+    vecs = spark.createDataFrame(
+        [(i, [math.cos(i * 0.3 + d * 1.7) for d in range(64)])
+         for i in range(60)], "vec_id: long, embedding: array<double>")
+    if family == "minhash":
+        incremental.write_minhash_index(_mk_docs(spark, n=40), path)
+        compact = incremental.compact_index
+    elif family == "embedding":
+        embed_incremental.write_embedding_index(vecs, path)
+        compact = embed_incremental.compact_embedding_index
+    else:
+        ann_index.write_ann_index(vecs, path)
+        compact = ann_index.compact_ann_index
+
+    stats = Path(path) / "stats"
+    pre = spark.read.parquet(str(stats))
+    keys = [c for c in pre.columns if c != "cnt"]
+    want = sorted(tuple(r) for r in pre.groupBy(*keys)
+                  .agg(F.sum("cnt").alias("cnt")).collect())
+    stats.rename(stats.with_name("stats.prerewrite-deadbeef"))
+
+    report = compact(spark, path)
+    assert stats.exists()
+    assert not list(stats.parent.glob("stats.prerewrite-*"))
+    got = sorted(tuple(r) for r in spark.read.parquet(str(stats)).collect())
+    assert got == want
+    assert report["stats"]["files_after"] == \
+        len(list(stats.rglob("*.parquet")))
