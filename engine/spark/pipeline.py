@@ -1,5 +1,6 @@
-"""The extraction pipeline: read → resume anti-join → salted repartition →
-Arrow-batch extract → cluster → write, with per-wave checkpointing.
+"""The extraction pipeline: read → resume bucket filter → salted
+repartition → Arrow-batch extract → cluster → write, with per-wave
+checkpointing.
 
 Physical design for 10^12 turns (SURVEY.md §4):
 
@@ -12,10 +13,13 @@ Physical design for 10^12 turns (SURVEY.md §4):
   conversation run).
 * Conversations are bucketed by a platform-stable md5 bucket (NOT Python
   ``hash``): the bucket is both the output partition key and the resume unit.
-* Resume = left-anti join of the input against completed buckets in the
-  lineage manifest (mirrors the reference's skip-completed scans,
-  batch_pdf_processor.py:2562-2625) — at cluster scale the manifest is tiny
-  (≤ n_buckets rows/run) so the anti-join broadcasts.
+* Resume = skip the buckets already committed to the output (mirrors the
+  reference's skip-completed scans, batch_pdf_processor.py:2562-2625). The
+  committed set is ≤ n_buckets ints, so the driver holds it and each wave
+  reads only its not-yet-done buckets through an ``isin`` filter.
+* Bookkeeping frames (the committed-bucket set, the lineage manifest) are
+  built driver-side or from Arrow, never as Python RDDs: a Python-RDD frame
+  costs a Python task per slice, in a worker pool that runs no engine code.
 * Resume scope is an immutable input snapshot: a bucket present in the
   output is considered fully done, so rows ADDED to the source after a
   bucket committed would be skipped — incremental ingestion goes through
@@ -39,6 +43,7 @@ from datetime import datetime, timezone
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from .schema import EXTRACTED_SCHEMA, LINEAGE_SCHEMA
 from .udfs import bucket_col, extract_batches
@@ -94,6 +99,28 @@ def _is_missing_table(exc: Exception) -> bool:
         or "TABLE_OR_VIEW_NOT_FOUND" in msg)
 
 
+def _arrow_frame(spark: SparkSession, rows: list, schema: StructType
+                 ) -> DataFrame:
+    """A frame over driver-held rows (dicts), shipped to the JVM as one Arrow
+    table: a local relation that runs no Python task, where a Python-list
+    source runs one per slice."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    return spark.createDataFrame(
+        pa.Table.from_pylist(rows, schema=to_arrow_schema(schema)), schema)
+
+
+def _bucket_manifest(extracted: DataFrame) -> DataFrame:
+    """Per-bucket lineage counts over committed output rows (partition_id
+    kept as a representative for debugging)."""
+    return (extracted.groupBy("conv_bucket")
+            .agg(F.min("partition_id").alias("partition_id"),
+                 F.count("*").alias("turns_processed"),
+                 F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0))
+                  .alias("extraction_failures"),
+                 F.sum("bytes_in").alias("bytes_parsed")))
+
+
 def completed_buckets(spark: SparkSession, out_sink) -> DataFrame:
     """Distinct conv_buckets already committed to the OUTPUT table.
 
@@ -109,7 +136,8 @@ def completed_buckets(spark: SparkSession, out_sink) -> DataFrame:
         return out.select("conv_bucket").distinct()
     except Exception as exc:
         if _is_missing_table(exc):
-            return spark.createDataFrame([], "conv_bucket int")
+            return _arrow_frame(
+                spark, [], StructType([EXTRACTED_SCHEMA["conv_bucket"]]))
         raise
 
 
@@ -136,37 +164,32 @@ def run_pipeline(spark: SparkSession, input_path: str, output_dir: str,
     src = spark.read.parquet(input_path).withColumn("conv_bucket", bucket_col(n_buckets))
 
     t_phase = time.monotonic()
-    done = completed_buckets(spark, out_sink)
     # the committed-bucket set is ≤ n_buckets ints — collect it once so the
     # driver can skip fully-committed waves without launching a job (a no-op
-    # resume otherwise pays one full input scan PER WAVE)
-    done_values = {r["conv_bucket"] for r in done.collect()}
-    done_count = len(done_values)
+    # resume otherwise pays one full input scan PER WAVE) and filter each
+    # wave to its not-yet-done buckets with ``isin`` (bucket_col is never
+    # null, so ``isin`` is exact: no three-valued logic to mind)
+    done_values = {r["conv_bucket"]
+                   for r in completed_buckets(spark, out_sink).collect()}
     phases["resume_scan"] += time.monotonic() - t_phase
-    # resume anti-join — broadcast: the manifest is ≤ n_buckets rows
-    todo = src.join(F.broadcast(done), "conv_bucket", "left_anti")
 
     # lineage backfill: a crash between a wave's output commit and its
     # lineage commit leaves committed buckets with no manifest rows — repair
     # the manifest from the output (wave=-1 marks backfilled rows)
-    if done_count:
+    if done_values:
         try:
-            lin_buckets = (lineage_sink.read(LINEAGE_SCHEMA)
-                           .select("conv_bucket").distinct())
+            lin_values = {r["conv_bucket"] for r in
+                          lineage_sink.read(LINEAGE_SCHEMA)
+                          .select("conv_bucket").distinct().collect()}
         except Exception as exc:
             if not _is_missing_table(exc):
                 raise
-            lin_buckets = spark.createDataFrame([], "conv_bucket int")
-        orphans = done.join(F.broadcast(lin_buckets), "conv_bucket", "left_anti")
-        if orphans.count():
-            backfill = (out_sink.read(EXTRACTED_SCHEMA)
-                        .join(F.broadcast(orphans), "conv_bucket", "left_semi")
-                        .groupBy("conv_bucket")
-                        .agg(F.min("partition_id").alias("partition_id"),
-                             F.count("*").alias("turns_processed"),
-                             F.sum(F.when(F.col("error").isNotNull(), 1)
-                                   .otherwise(0)).alias("extraction_failures"),
-                             F.sum("bytes_in").alias("bytes_parsed"))
+            lin_values = set()
+        orphans = sorted(done_values - lin_values)
+        if orphans:
+            backfill = (_bucket_manifest(
+                            out_sink.read(EXTRACTED_SCHEMA)
+                            .filter(F.col("conv_bucket").isin(orphans)))
                         .withColumn("run_id", F.lit(run_id))
                         .withColumn("wave", F.lit(-1))
                         .withColumn("wall_ms", F.lit(0))
@@ -189,7 +212,7 @@ def run_pipeline(spark: SparkSession, input_path: str, output_dir: str,
         if not wave_buckets:  # wave fully committed by a prior attempt
             waves_run += 1
             continue
-        wave_df = todo.filter(F.col("conv_bucket") % waves == wave)
+        wave_df = src.filter(F.col("conv_bucket").isin(wave_buckets))
         # repartition BY THE BUCKET: each bucket lands in exactly one task, so
         # partitionBy(conv_bucket) writes one file per bucket per wave instead
         # of (tasks × buckets) tiny files — the classic partitionBy file
@@ -225,44 +248,30 @@ def run_pipeline(spark: SparkSession, input_path: str, output_dir: str,
         # write, so these dirs hold exactly this wave's rows — no
         # prior-attempt anti-join needed.
         wave_out = out_sink.read_partitions(wave_buckets, EXTRACTED_SCHEMA)
-        if wave_out is None:  # a wave whose buckets had zero input rows
-            wave_out = spark.createDataFrame([], EXTRACTED_SCHEMA)
-        # bucket-granular manifest (≤ n_buckets/waves rows per wave;
-        # partition_id kept as a representative for debugging)
-        lineage = (wave_out.groupBy("conv_bucket")
-                   .agg(F.min("partition_id").alias("partition_id"),
-                        F.count("*").alias("turns_processed"),
-                        F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0))
-                         .alias("extraction_failures"),
-                        F.sum("bytes_in").alias("bytes_parsed"))
-                   .withColumn("run_id", F.lit(run_id))
-                   .withColumn("wave", F.lit(wave))
-                   .withColumn("wall_ms", F.lit(wall_ms))
-                   .withColumn("completed_at",
-                               F.lit(datetime.now(timezone.utc)).cast("timestamp"))
-                   .select([f.name for f in LINEAGE_SCHEMA.fields]))
         # one aggregation pass: the manifest is ≤ n_buckets/waves rows, so
         # collect it (scalar-scale), sum locally, write it back from the
-        # driver — not a driver-side loop over data, a loop over the manifest
-        lin_rows = lineage.collect()
+        # driver — not a driver-side loop over data, a loop over the
+        # manifest. A wave whose buckets had zero input rows has no
+        # partition dirs (wave_out is None) and an empty manifest.
+        completed_at = datetime.now(timezone.utc)
+        lin_rows = [] if wave_out is None else [
+            dict(r.asDict(), run_id=run_id, wave=wave, wall_ms=wall_ms,
+                 completed_at=completed_at)
+            for r in _bucket_manifest(wave_out).collect()]
         phases["lineage_read_agg"] += time.monotonic() - t_phase
         t_phase = time.monotonic()
         n_wave = sum(r["turns_processed"] for r in lin_rows)
-        # ONE slice up front, not createDataFrame(...).coalesce(1): local
-        # Python rows default to defaultParallelism pickled slices, and a
-        # coalesced write task drains them SERIALLY through per-partition
-        # Python-worker rounds — measured 5-6 s per wave for a ≤32-row
-        # manifest vs 0.3 s for the single-slice parallelize (found via the
-        # phases split: lineage_write was 14 s of a 45 s two-wave run)
-        lineage_sink.append(spark.createDataFrame(
-            spark.sparkContext.parallelize(lin_rows, 1), LINEAGE_SCHEMA))
+        # coalesce(1): one manifest file per wave
+        lineage_sink.append(
+            _arrow_frame(spark, lin_rows, LINEAGE_SCHEMA).coalesce(1))
         phases["lineage_write"] += time.monotonic() - t_phase
         total_processed += int(n_wave)
         waves_run += 1
 
-    if done_count:
+    if done_values:
         t_phase = time.monotonic()
-        skipped = src.join(F.broadcast(done), "conv_bucket", "left_semi").count()
+        skipped = src.filter(
+            F.col("conv_bucket").isin(sorted(done_values))).count()
         phases["resume_scan"] += time.monotonic() - t_phase
 
     global LAST_RUN_STATS

@@ -14,7 +14,6 @@ reference's per-file error isolation, batch_pdf_processor.py:2754-2759).
 
 from __future__ import annotations
 
-import time
 from typing import Iterator
 
 import pandas as pd
@@ -37,15 +36,11 @@ def extract_batches(batches: Iterator[pd.DataFrame], n_buckets: int = 1024
     reused across batches within a worker (Iterator form keeps one Python
     worker per partition).
     """
-    try:
-        from pyspark import TaskContext
-        ctx = TaskContext.get()
-        partition_id = ctx.partitionId() if ctx is not None else -1
-    except Exception:
-        partition_id = -1
+    from pyspark import TaskContext
+    ctx = TaskContext.get()  # None outside a task (a driver-side call)
+    partition_id = ctx.partitionId() if ctx is not None else -1
 
     for pdf in batches:
-        t0 = time.monotonic()
         n = len(pdf)
         if n == 0:
             continue
@@ -75,15 +70,15 @@ def extract_batches(batches: Iterator[pd.DataFrame], n_buckets: int = 1024
             stable_bucket(c, n_buckets) for c in pdf["conv_id"]]
         out["partition_id"] = partition_id
         out["bytes_in"] = [len(t) if isinstance(t, str) else 0 for t in pdf["text"]]
-        _ = time.monotonic() - t0  # timing folded into lineage downstream
         yield out
 
 
 def stable_bucket(conv_id: str, n_buckets: int) -> int:
     """Deterministic, platform-stable bucket id (NOT Python hash(), which is
     salted per process). Matches the SQL side's xxhash64-free variant below —
-    both sides must agree for resume anti-joins, so the bucket is md5-based
-    and computed identically in the kernel and in ``bucket_col``."""
+    both sides must agree for the resume bucket filter, so the bucket is
+    md5-based and computed identically in the kernel and in
+    ``bucket_col``."""
     import hashlib
     key = conv_id if isinstance(conv_id, str) else ""
     return int.from_bytes(hashlib.md5(key.encode()).digest()[:4], "big") % n_buckets
