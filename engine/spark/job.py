@@ -7,6 +7,10 @@
 
 Also runnable as ``python -m engine.spark.job`` for local smoke (builds its
 own local[*] session). Package with ``python tools/package.py`` → engine.zip.
+
+In client-mode spark-submit the driver JVM is up before ``build_session``
+runs, so pass ``--conf spark.driver.defaultJavaOptions=-XX:TieredStopAtLevel=1``
+on the command line to get its C1-only driver; executors keep the JVM default.
 """
 
 from __future__ import annotations
@@ -25,7 +29,17 @@ def build_session(master: str | None = None, app: str = "transcript-extract",
          .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
          .config("spark.sql.adaptive.skewJoin.enabled", "true")
          .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-         .config("spark.sql.parquet.compression.codec", "zstd"))
+         .config("spark.sql.parquet.compression.codec", "zstd")
+         # C1-only JIT for the driver JVM (the whole engine under local[*]):
+         # its hot code is short per-job bursts (closure cleaning, task
+         # serialization, parquet writers) that C2 rarely repays. On 4 cores
+         # the compiler threads took 2.4-5.9 s of a warm 2k-turn pipeline
+         # run's 4.3-8.6 s of CPU, 0.3-0.8 s with C1 only. Long warm
+         # sessions pay in wall time (a warm 20k-turn, 64-bucket run: ~1.6 s
+         # more). The launcher puts defaultJavaOptions before
+         # --driver-java-options, so -XX:TieredStopAtLevel=4 there restores
+         # C2. Executors keep the JVM default.
+         .config("spark.driver.defaultJavaOptions", "-XX:TieredStopAtLevel=1"))
     if master:
         b = b.master(master)
     return b.getOrCreate()

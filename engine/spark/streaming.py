@@ -136,11 +136,16 @@ def stage_partitioned_batches(df, wave_col, n_waves: int,
             parts = ([p for p in os.listdir(wave_dir)
                       if p.endswith(".parquet")]
                      if os.path.isdir(wave_dir) else [])
+            # one file per wave: each distinct __wave value owns one
+            # post-repartition partition, hence one written file (unless
+            # the session caps spark.sql.files.maxRecordsPerFile)
+            if len(parts) > 1:
+                raise RuntimeError(
+                    f"stage_partitioned_batches: wave {i} wrote "
+                    f"{len(parts)} parquet files in {wave_dir}, expected "
+                    f"one: {sorted(parts)}")
             if parts:
-                # one file per wave: each distinct __wave value owns one
-                # post-repartition partition, hence one written file
-                [part] = parts
-                shutil.move(os.path.join(wave_dir, part), dst)
+                shutil.move(os.path.join(wave_dir, parts[0]), dst)
             else:  # empty wave — stage an empty file with the full schema
                 empty_dir = tempfile.mkdtemp(prefix="stage_empty_")
                 (df.filter(F.lit(False)).coalesce(1)

@@ -316,3 +316,24 @@ def test_stream_stream_join_matches_across_microbatches(spark, tmp_path):
     got = sorted((r["c_id"], r["p_id"])
                  for r in spark.table("ss_join_test_sink").collect())
     assert got == [(1, 4), (1, 5), (2, 3)]
+
+
+def test_stage_partitioned_batches_rejects_split_wave(spark, tmp_path):
+    """A wave directory holding two parquet files cannot become one staged
+    batch; the error names the wave and the files instead of a bare
+    unpack failure."""
+    from pyspark.sql import functions as F
+
+    from engine.spark.streaming import stage_partitioned_batches
+
+    df = spark.range(4).withColumn("v", F.col("id") * 10)
+    key = "spark.sql.files.maxRecordsPerFile"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1")  # wave 0 (ids 0 and 2) writes two files
+    try:
+        with pytest.raises(RuntimeError, match=r"wave 0 wrote 2 parquet "
+                                               r"files.*part-.*part-"):
+            stage_partitioned_batches(df, F.col("id") % 2, 2,
+                                      str(tmp_path / "stage"))
+    finally:
+        spark.conf.set(key, old)
