@@ -30,7 +30,7 @@ from . import stage_cache
 
 #: propagation rounds used by the most recent duplicate_clusters call in
 #: this process — scale-soak telemetry (convergence must stay well under
-#: max_iterations; see tools/dedup_stress.py)
+#: max_iterations; see tools/soak.py)
 LAST_ITERATIONS: int = 0
 
 

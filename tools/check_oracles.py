@@ -6,7 +6,9 @@ compare row count + sorted-by-name columns + order-insensitive values.
 row per queries() entry ({rows_match, schema_match, hash_match, spark_rows,
 oracle_rows, err}) — the gate emits the artifact itself, so a driver
 snapshot can never silently omit queries (round-3 VERDICT #2: the r3
-snapshot missed 2 of 52 green queries).
+snapshot missed 2 of 52 green queries). Each row also carries ``t_spark``,
+the query's Spark seconds (collect included; null on a Spark error): the
+per-query leaf timings at the gate's local[8].
 
 Usage: python tools/check_oracles.py [--sf /root/testdata/sf0.01]
                                      [--only name] [--json CORRECTNESS.json]
@@ -63,16 +65,12 @@ def main() -> int:
                          "silently under-report coverage)")
 
     import duckdb
-    from pyspark.sql import SparkSession
 
-    sys.path.insert(0, str(REPO))
     import __spark_entry__ as entry
+    from engine.spark.job import build_session
 
-    spark = (SparkSession.builder.master("local[8]")
-             .appName("oracle-check")
-             .config("spark.sql.shuffle.partitions", "16")
-             .config("spark.ui.enabled", "false")
-             .getOrCreate())
+    spark = build_session("local[8]", app="oracle-check",
+                          shuffle_partitions=16)
 
     con = duckdb.connect()
     for t in TABLES:
@@ -96,7 +94,8 @@ def main() -> int:
         if only is not None and name not in only:
             continue
         rec = {"rows_match": None, "schema_match": None, "hash_match": None,
-               "spark_rows": None, "oracle_rows": None, "err": None}
+               "spark_rows": None, "oracle_rows": None, "err": None,
+               "t_spark": None}
         snapshot[name] = rec
         t0 = time.monotonic()
         try:
@@ -109,7 +108,7 @@ def main() -> int:
             rec["err"] = f"spark: {str(exc)[:200]}"
             continue
         t_spark = time.monotonic() - t0
-        rec["spark_rows"] = len(srows)
+        rec.update(spark_rows=len(srows), t_spark=round(t_spark, 2))
         if name not in oracles:
             print(f"{name:28s} rows-only   n={len(srows):6d}   ({t_spark:.1f}s)")
             rec["err"] = "no_oracle"

@@ -30,19 +30,15 @@ def main() -> int:
     ap.add_argument("--json", action="store_true")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from engine.datawork.dedup import (MINHASH_BANDS, MINHASH_K,
                                        minhash_lsh_candidates,
                                        ngram_jaccard_pairs)
     from engine.datawork.similarity import (LSH_BANDS, LSH_ROWS,
                                             cosine_pairs_above)
+    from engine.spark.job import build_session
 
-    spark = (SparkSession.builder.master("local[8]")
-             .appName("recall-report")
-             .config("spark.sql.shuffle.partitions", "16")
-             .config("spark.ui.enabled", "false")
-             .getOrCreate())
+    spark = build_session("local[8]", app="recall-report",
+                          shuffle_partitions=16)
 
     out: dict = {"sf": args.sf}
 
