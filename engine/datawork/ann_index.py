@@ -8,17 +8,15 @@ full corpus. Same lineage as the extraction pipeline's
 output-authoritative resume state (reference: batch_pdf_processor.py's
 completed-stem skip) — persisted derived state stands in for recompute.
 
-Index layout under ``<path>/`` (the table rules — sorted tables, count
-partials, compaction — live in engine/datawork/index_store.py):
+Index layout under ``<path>/`` (the sorted-table and count rules live in
+engine/datawork/index_store.py):
 
 * ``vectors/`` — (id, v, bucket): the corpus vectors keyed by their
   sign-LSH bucket (``similarity.bucket_expr`` over the frozen
   deterministic planes), a sorted table by bucket so a probe's
   ``bucket IN (...)`` filter prunes parquet row groups via min/max
   statistics instead of scanning the corpus.
-* ``stats/``   — (bucket, cnt), the count partials of ``vectors/`` —
-  occupancy observability for the skew question "did a bucket
-  degenerate?" without touching ``vectors/``.
+* ``stats/``   — (bucket, cnt), the per-bucket counts of ``vectors/``.
 
 Scale contract:
 
@@ -29,8 +27,6 @@ Scale contract:
   to the bucket-pruned corpus scan, so the corpus is never shuffled;
   only the candidate set (bucket-collision pairs) flows into the
   per-query top-k window.
-* ``append_to_ann_index``: folding a new wave in costs O(wave) — bucket
-  the wave, append its (sorted-within-file) vectors and stats partials.
 """
 
 from __future__ import annotations
@@ -39,8 +35,8 @@ from typing import List, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from . import index_store, stage_cache
-from .index_store import broadcast_hint, fold_counts, sub, write_sorted
+from . import stage_cache
+from .index_store import broadcast_hint, sub, write_sorted
 from .similarity import (bucket_expr, cosine, cosine_topk, lsh_planes, norm,
                          probe_buckets)
 
@@ -62,32 +58,6 @@ def write_ann_index(emb: DataFrame, path: str, id_col: str = "vec_id",
     write_sorted(_bucketed(emb, id_col, vec_col, planes or lsh_planes()),
                  ["bucket"], sub(path, VECTORS), "overwrite",
                  counts=sub(path, STATS))
-
-
-def append_to_ann_index(new_emb: DataFrame, path: str,
-                        id_col: str = "vec_id", vec_col: str = "embedding",
-                        planes: Optional[List[List[float]]] = None) -> None:
-    """Fold a wave in: O(wave) — each appended file is sorted within
-    itself, so row-group pruning keeps working per file; stats rows are
-    appended as partials (readers SUM), never merged in place."""
-    write_sorted(_bucketed(new_emb, id_col, vec_col, planes or lsh_planes()),
-                 ["bucket"], sub(path, VECTORS), "append",
-                 counts=sub(path, STATS))
-
-
-def compact_ann_index(spark: SparkSession, path: str,
-                      target_bytes: int = 128 * 1024 * 1024) -> dict:
-    """Maintenance after K appended waves (VERDICT r5 #5): restores the
-    single global bucket-sorted ``vectors/`` layout (per-wave appends
-    keep pruning only per-file) and folds ``stats/`` partials to one row
-    per bucket. Atomic per table; results identical before/after."""
-    return index_store.compact(spark, path, {VECTORS: ["bucket"]},
-                               {STATS: ["bucket"]}, target_bytes)
-
-
-def index_occupancy(spark: SparkSession, path: str) -> DataFrame:
-    """(bucket, cnt) with partials summed — the skew census."""
-    return fold_counts(spark.read.parquet(sub(path, STATS)), ["bucket"])
 
 
 def probe_index(spark: SparkSession, path: str, query: Sequence[float],

@@ -31,6 +31,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from engine.spark.schema import arrow_frame
+
 from . import stage_cache
 
 #: md5-hash bucket in [0, 1e6) — the corpus.hash_sample idiom at ppm
@@ -350,8 +352,8 @@ def curate_funnel(docs: DataFrame, bench: DataFrame, budget: int,
             (2, "dedup", deduped.count()),
             (3, "decontaminated", n_clean),
             (4, "sampled", sampled.count())]
-    return spark.createDataFrame(
-        rows, "stage_idx int, stage string, n_docs bigint")
+    return arrow_frame(spark, rows,
+                       "stage_idx int, stage string, n_docs bigint")
 
 
 def mixture_sample(docs: DataFrame, budget: int, weights: dict,
@@ -384,9 +386,8 @@ def mixture_sample(docs: DataFrame, budget: int, weights: dict,
     if sum_w <= 0:
         raise ValueError("at least one weight must be positive")
     spark = docs.sparkSession
-    wdf = spark.createDataFrame(
-        sorted((g, int(w)) for g, w in weights.items()),
-        f"{group_col} string, w bigint")
+    wdf = arrow_frame(spark, sorted((g, int(w)) for g, w in weights.items()),
+                      f"{group_col} string, w bigint")
     groups = (docs.groupBy(group_col)
               .agg(F.count("*").alias("n_group"))
               .join(F.broadcast(wdf), group_col)

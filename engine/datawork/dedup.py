@@ -234,18 +234,6 @@ def _band_explode(sig: DataFrame, k: int, bands: int) -> DataFrame:
             .select("id", "bb.band", "bb.bucket"))
 
 
-def minhash_band_buckets(df: DataFrame, id_col: str = "doc_id",
-                         text_col: str = "text", n: int = 3,
-                         k: int = MINHASH_K,
-                         bands: int = MINHASH_BANDS,
-                         shingles_df: DataFrame | None = None) -> DataFrame:
-    """(id, band, bucket) rows — the uncached plan (tests/oracle clarity);
-    the slot-backed operators share one signature aggregation via
-    ``_minhash_sig_slot`` instead."""
-    return _band_explode(
-        minhash_signatures(df, id_col, text_col, n, k, shingles_df), k, bands)
-
-
 def _minhash_sig_slot(df: DataFrame, id_col: str, text_col: str, n: int,
                       k: int = MINHASH_K) -> DataFrame:
     """The shared, cached signature table (id, mh0..mhk-1) — 1 row/doc,
@@ -480,7 +468,7 @@ def simhash_near_pairs(df: DataFrame, id_col: str = "doc_id",
                              simhash(df, id_col, text_col, bits))
     width = bits // bands
     mask = (1 << width) - 1
-    # ONE explode over band structs (same shape as minhash_band_buckets —
+    # ONE explode over band structs (same shape as _band_explode —
     # a bands-way union re-runs the signature lineage per branch). Pair
     # generation stays a self-JOIN here, deliberately NOT the grouped-array
     # shape minhash_lsh_candidates uses: simhash pieces have only

@@ -37,6 +37,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from engine.spark.schema import arrow_frame
+
 from . import index_store, stage_cache
 from .incremental import MAX_BROADCAST_ROWS
 from .index_store import (BAND_KEYS, broadcast_hint, drop_hot, sub,
@@ -82,7 +84,7 @@ def write_embedding_index(emb: DataFrame, path: str,
                                 bands, rows),
                  BAND_KEYS, sub(path, BUCKETS), "overwrite",
                  counts=sub(path, STATS))
-    (spark.createDataFrame([(bands, rows)], "`bands` int, `rows` int")
+    (arrow_frame(spark, [(bands, rows)], "`bands` int, `rows` int")
         .coalesce(1).write.mode("overwrite").parquet(sub(path, LAYOUT)))
 
 
@@ -118,7 +120,7 @@ def compact_embedding_index(spark: SparkSession, path: str,
 
 CELLS = "cells"      # (cell, cv) — the frozen codebook
 MEMBERS = "members"  # (id, cell, pcos) — sorted by cell (touched-cell probe)
-CSTATS = "cstats"    # (cell, cnt) additive partials (combined max_cluster)
+CSTATS = "cstats"    # (cell, cnt) member counts (combined max_cluster)
 LOSERS = "losers"    # (id) — corpus docs already SemDeDup-dropped (see
                      # write_semantic_index; retroactive probes exclude them)
 LOSERS_AT = "losers_at"  # one row (threshold): losers/'s threshold, NULL
@@ -133,14 +135,6 @@ def _semantic_assign(emb: DataFrame, cent: DataFrame, id_col: str,
     base = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
                       norm(F.col(vec_col)).alias("nrm"))
     return _assign_cells(base, cent, keep_score=True)
-
-
-def _write_assigned(asg: DataFrame, path: str, mode: str) -> None:
-    write_sorted_once(asg, [
-        (lambda d: d.select("id", "cell", F.col("ccos").alias("pcos")),
-         ["cell"], sub(path, MEMBERS), mode, sub(path, CSTATS)),
-        (lambda d: d.select("id", "v", "nrm"),
-         ["id"], sub(path, VECTORS), mode)])
 
 
 def _losers_threshold(spark: SparkSession, path: str) -> float | None:
@@ -161,43 +155,22 @@ def write_semantic_index(emb: DataFrame, path: str, centroids: DataFrame,
     already lost cannot "newly" lose to a wave). One-time build cost, the
     natural byproduct of deduping a corpus before shipping it. The
     threshold is frozen into the index (``losers_at/``), the way
-    ``layout/`` freezes the LSH layout: appends keep ``losers/`` at it."""
+    ``layout/`` freezes the LSH layout: probes are checked against it."""
     spark = emb.sparkSession
     (centroids.select("cell", "cv").coalesce(1)
               .write.mode("overwrite").parquet(sub(path, CELLS)))
     cent = spark.read.parquet(sub(path, CELLS))
-    _write_assigned(_semantic_assign(emb, cent, id_col, vec_col), path,
-                    "overwrite")
-    (spark.createDataFrame([(losers_threshold,)], "threshold double")
+    write_sorted_once(_semantic_assign(emb, cent, id_col, vec_col), [
+        (lambda d: d.select("id", "cell", F.col("ccos").alias("pcos")),
+         ["cell"], sub(path, MEMBERS), "overwrite", sub(path, CSTATS)),
+        (lambda d: d.select("id", "v", "nrm"),
+         ["id"], sub(path, VECTORS), "overwrite")])
+    (arrow_frame(spark, [(losers_threshold,)], "threshold double")
         .coalesce(1).write.mode("overwrite").parquet(sub(path, LOSERS_AT)))
     if losers_threshold is not None:
         (semdedup_losers(emb, threshold=losers_threshold, centroids=cent,
                          id_col=id_col, vec_col=vec_col)
          .select("id").write.mode("overwrite").parquet(sub(path, LOSERS)))
-
-
-def append_to_semantic_index(new_emb: DataFrame, path: str,
-                             id_col: str = "vec_id",
-                             vec_col: str = "embedding") -> None:
-    """Fold a processed wave in (cost ∝ wave); assignment uses the FROZEN
-    codebook — appending never re-trains.
-
-    When the index keeps ``losers/``, the wave's own losers and the corpus
-    docs it newly outranks — both probed against the index BEFORE the
-    fold, at the frozen threshold — are appended to it, so ``losers/``
-    stays ``losers(corpus ∪ wave)`` (a SemDeDup loser keeps its shadower,
-    so the set only grows)."""
-    spark = new_emb.sparkSession
-    threshold = _losers_threshold(spark, path)
-    if threshold is not None:
-        args = (new_emb, path, threshold, id_col, vec_col)
-        (semdedup_wave_losers(*args).select("id")
-         .unionByName(retroactive_wave_losers(*args).select("id"))
-         .write.mode("append").parquet(sub(path, LOSERS)))
-    cent = spark.read.parquet(sub(path, CELLS))
-    # one assignment pass for all three appends
-    _write_assigned(_semantic_assign(new_emb, cent, id_col, vec_col), path,
-                    "append")
 
 
 def _open_wave_probe(new_emb: DataFrame, index_path: str, id_col: str,
@@ -286,10 +259,7 @@ def retroactive_wave_losers(new_emb: DataFrame, index_path: str,
     identical (kept_id, cosine) — equivalence test + oracle pin it.
 
     Requires the index to have been built with ``losers_threshold`` equal
-    to this ``threshold`` (``ValueError`` otherwise). The contract holds
-    across appends: ``append_to_semantic_index`` folds each wave's losers
-    and the corpus docs it newly outranked into ``losers/``, so the
-    exclusion set is always ``losers(<everything indexed>)``."""
+    to this ``threshold`` (``ValueError`` otherwise)."""
     stored = _losers_threshold(new_emb.sparkSession, index_path)
     if stored != threshold:
         raise ValueError(f"index losers/ was built at threshold {stored}, "

@@ -187,19 +187,6 @@ def compact_index(spark: SparkSession, path: str,
 MAX_BROADCAST_ROWS = 5_000_000
 
 
-def wave_census(new_docs: DataFrame, id_col: str = "doc_id",
-                bands: int = MINHASH_BANDS) -> dict:
-    """Size the wave BEFORE probing (the house census pattern — see
-    dedup's bucket census / curation's line census): returns
-    ``{"n_docs", "bucket_rows", "broadcast_ok"}`` so the caller can see
-    which join strategy ``incremental_verified_pairs`` will pick and
-    whether the wave should be split."""
-    n_docs = new_docs.select(id_col).count()
-    rows = n_docs * bands
-    return {"n_docs": n_docs, "bucket_rows": rows,
-            "broadcast_ok": rows <= MAX_BROADCAST_ROWS}
-
-
 def incremental_verified_pairs(new_docs: DataFrame, index_path: str,
                                id_col: str = "doc_id",
                                text_col: str = "text", n: int = 3,

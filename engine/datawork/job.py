@@ -232,47 +232,47 @@ def run_op(spark, op: str, input_path: str, percent: int = 10,
               "embed-index-probe", "embed-index-compact"):
         if not index_path:
             raise SystemExit(f"--op {op} requires --index <dir>")
+        from engine.spark.schema import arrow_frame
+
+        def indexed():  # build/append: the docs folded in
+            return arrow_frame(spark, [(index_path, docs.count())],
+                               "`index` string, `docs` bigint")
+
+        def compacted(rep):  # files per table
+            return arrow_frame(
+                spark, [(t, r["files_before"], r["files_after"])
+                        for t, r in rep.items()],
+                "`table` string, `files_before` int, `files_after` int")
+
         if op == "index-build":
             from .incremental import write_minhash_index
             write_minhash_index(docs, index_path)
-            return spark.createDataFrame(
-                [(index_path, docs.count())], "`index` string, `docs` bigint")
+            return indexed()
         if op == "index-append":
             from .incremental import append_to_index
             append_to_index(docs, index_path)
-            return spark.createDataFrame(
-                [(index_path, docs.count())], "`index` string, `docs` bigint")
+            return indexed()
         if op == "index-probe":
             from .incremental import incremental_verified_pairs
             return incremental_verified_pairs(docs, index_path,
                                               threshold=threshold)
         if op == "index-compact":
             from .incremental import compact_index
-            rep = compact_index(spark, index_path)
-            return spark.createDataFrame(
-                [(t, r["files_before"], r["files_after"])
-                 for t, r in rep.items()],
-                "`table` string, `files_before` int, `files_after` int")
+            return compacted(compact_index(spark, index_path))
         if op == "embed-index-build":
             from .embed_incremental import write_embedding_index
             write_embedding_index(docs, index_path)
-            return spark.createDataFrame(
-                [(index_path, docs.count())], "`index` string, `docs` bigint")
+            return indexed()
         if op == "embed-index-append":
             from .embed_incremental import append_to_embedding_index
             append_to_embedding_index(docs, index_path)
-            return spark.createDataFrame(
-                [(index_path, docs.count())], "`index` string, `docs` bigint")
+            return indexed()
         if op == "embed-index-probe":
             from .embed_incremental import incremental_embedding_pairs
             return incremental_embedding_pairs(docs, index_path,
                                                threshold=threshold)
         from .embed_incremental import compact_embedding_index
-        rep = compact_embedding_index(spark, index_path)
-        return spark.createDataFrame(
-            [(t, r["files_before"], r["files_after"])
-             for t, r in rep.items()],
-            "`table` string, `files_before` int, `files_after` int")
+        return compacted(compact_embedding_index(spark, index_path))
     raise SystemExit(f"unknown --op {op!r}")
 
 

@@ -1,8 +1,8 @@
 """Multimodal columns: opaque binary payloads + typed metadata.
 
 Image/audio/video payloads are ``binary`` columns with a metadata struct;
-decode / feature-extract / resize / frame-sample run as Arrow-batched
-``mapInPandas`` stages. The actual codecs are NOT in this container, so the
+decode / feature-extract / resize run as Arrow-batched ``mapInPandas``
+stages. The actual codecs are NOT in this container, so the
 decode step is stubbed: ``decode_stub`` raises ``NotImplementedError`` where
 a real codec would run, and ``deterministic_features`` is the seeded fake
 used by tests — the Spark-side plumbing (schema, batch shape, partitioning,
@@ -10,9 +10,7 @@ never-throw error channel) is real and tested.
 
 Scale shape: the binary column stays columnar end-to-end (Arrow buffers, no
 base64 round-trips); feature extraction is a per-row map with no shuffle;
-partitioning follows the parent table. Frame sampling emits one row per
-sampled frame via an explode AFTER the cheap metadata probe, so the row
-blow-up happens post-filter.
+partitioning follows the parent table.
 """
 
 from __future__ import annotations
@@ -151,17 +149,6 @@ def extract_features(assets: DataFrame) -> DataFrame:
     """binary assets → fixed-dim feature rows (Arrow-batched map, no shuffle)."""
     return assets.select("asset_id", "kind", "payload").mapInPandas(
         _feature_batches, schema=FEATURE_SCHEMA)
-
-
-def sample_frames(assets: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling plumbing: one row per sampled timestamp, derived
-    from metadata BEFORE any decode (cheap), exploded JVM-side."""
-    from pyspark.sql import functions as F
-    vids = assets.filter(F.col("kind") == "video")
-    stamps = F.sequence(F.lit(0), F.greatest(F.col("duration_ms") - 1, F.lit(0)),
-                        F.lit(every_ms))
-    return (vids.withColumn("frame_ts_ms", F.explode(stamps))
-                .select("asset_id", "frame_ts_ms", "mime", "width", "height"))
 
 
 IMAGE_STATS_SCHEMA = StructType([

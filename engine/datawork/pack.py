@@ -33,6 +33,8 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from engine.spark.schema import arrow_frame
+
 from . import stage_cache
 
 
@@ -88,8 +90,8 @@ def pack_shards(docs: DataFrame, budget: int, id_col: str = "doc_id",
     for row in sorted(totals, key=lambda r: r["_pid"]):
         offsets.append((row["_pid"], acc))
         acc += row["t"]
-    off_df = spark.createDataFrame(offsets or [(0, 0)],
-                                   "`_pid` int, `_off` bigint")
+    off_df = arrow_frame(spark, offsets or [(0, 0)],
+                         "`_pid` int, `_off` bigint")
     start = F.col("_off") + F.col("_cum") - F.col("n_tokens")
     return (local.join(F.broadcast(off_df), "_pid")
             .select(F.col("id").alias(id_col), "n_tokens",

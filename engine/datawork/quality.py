@@ -33,6 +33,8 @@ import os
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from engine.spark.schema import arrow_frame
+
 QC_BUCKETS = 1024
 _REPO = os.path.dirname(os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))))
@@ -62,7 +64,7 @@ def load_qc_weights(spark: SparkSession,
         for line in f:
             b, w = line.rstrip("\n").split("\t")
             rows.append((int(b), float(w)))
-    return spark.createDataFrame(rows, "bucket int, weight double")
+    return arrow_frame(spark, rows, "bucket int, weight double")
 
 
 def classifier_scores(docs: DataFrame, weights: DataFrame,

@@ -12,7 +12,7 @@ for the final merge of that key, so the classic fix is to aggregate twice:
 
 Only aggregates with a decomposition into (partial, merge) can ride this:
 count → sum of counts, sum → sum, min/max → min/max. Averages must be
-carried as (sum, count) — ``salted_avg`` does that.
+carried as (sum, count) and divided after the merge.
 
 The results are EXACTLY the plain aggregation's (same floating-point sum
 tree shape is NOT guaranteed in either plan — Spark's partial aggregation
@@ -69,11 +69,3 @@ def salted_count_sum(df: DataFrame, keys: Sequence[str],
             .agg(F.sum(c_n).alias("n"),
                  F.sum(c_s).alias("total")))
 
-
-def salted_avg(df: DataFrame, keys: Sequence[str],
-               avg_col: str, salt: int = DEFAULT_SALT) -> DataFrame:
-    """Average via the (sum, count) carrier — avg is not directly
-    mergeable, its decomposition is."""
-    two = salted_count_sum(df, keys, avg_col, salt)
-    return two.select(*keys,
-                      (F.col("total") / F.col("n")).alias("avg"))

@@ -22,9 +22,8 @@ Physical design for 10^12 turns (SURVEY.md §4):
   costs a Python task per slice, in a worker pool that runs no engine code.
 * Resume scope is an immutable input snapshot: a bucket present in the
   output is considered fully done, so rows ADDED to the source after a
-  bucket committed would be skipped — incremental ingestion goes through
-  the streaming path (engine/spark/streaming.py, file-granular exactly-once)
-  or a new output dir per snapshot (on Iceberg: per input snapshot id).
+  bucket committed would be skipped — incremental ingestion takes a new
+  output dir per input snapshot (on Iceberg: per input snapshot id).
 * Waves: buckets are processed in ``waves`` sequential commit units; each
   wave's output + lineage rows commit together, so a killed run resumes at
   wave granularity with zero duplicate output rows. On Iceberg this is a
@@ -45,7 +44,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
-from .schema import EXTRACTED_SCHEMA, LINEAGE_SCHEMA
+from .schema import EXTRACTED_SCHEMA, LINEAGE_SCHEMA, arrow_frame
 from .udfs import bucket_col, extract_batches
 
 DEFAULT_BUCKETS = 1024
@@ -99,17 +98,6 @@ def _is_missing_table(exc: Exception) -> bool:
         or "TABLE_OR_VIEW_NOT_FOUND" in msg)
 
 
-def _arrow_frame(spark: SparkSession, rows: list, schema: StructType
-                 ) -> DataFrame:
-    """A frame over driver-held rows (dicts), shipped to the JVM as one Arrow
-    table: a local relation that runs no Python task, where a Python-list
-    source runs one per slice."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-    return spark.createDataFrame(
-        pa.Table.from_pylist(rows, schema=to_arrow_schema(schema)), schema)
-
-
 def _bucket_manifest(extracted: DataFrame) -> DataFrame:
     """Per-bucket lineage counts over committed output rows (partition_id
     kept as a representative for debugging)."""
@@ -136,7 +124,7 @@ def completed_buckets(spark: SparkSession, out_sink) -> DataFrame:
         return out.select("conv_bucket").distinct()
     except Exception as exc:
         if _is_missing_table(exc):
-            return _arrow_frame(
+            return arrow_frame(
                 spark, [], StructType([EXTRACTED_SCHEMA["conv_bucket"]]))
         raise
 
@@ -263,7 +251,7 @@ def run_pipeline(spark: SparkSession, input_path: str, output_dir: str,
         n_wave = sum(r["turns_processed"] for r in lin_rows)
         # coalesce(1): one manifest file per wave
         lineage_sink.append(
-            _arrow_frame(spark, lin_rows, LINEAGE_SCHEMA).coalesce(1))
+            arrow_frame(spark, lin_rows, LINEAGE_SCHEMA).coalesce(1))
         phases["lineage_write"] += time.monotonic() - t_phase
         total_processed += int(n_wave)
         waves_run += 1

@@ -3,11 +3,13 @@
 Mirrors FIXTURES.md §3 and SURVEY.md §1.2/§1.4. Table rows use
 ``array<map<string,string>>`` because the reference's table cells are
 heterogeneous (json schema.json:246-262) and Spark needs one type; typed
-values live in the numerics collection.
+values live in the numerics collection. ``arrow_frame`` builds a frame
+over driver-held rows of any schema.
 """
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (ArrayType, DoubleType, IntegerType, LongType,
                                MapType, StringType, StructField, StructType,
                                TimestampType)
@@ -128,3 +130,19 @@ LINEAGE_SCHEMA = StructType([
     StructField("wall_ms", LongType(), False),
     StructField("completed_at", TimestampType(), False),
 ])
+
+
+def arrow_frame(spark: SparkSession, rows: list,
+                schema: StructType | str) -> DataFrame:
+    """A frame over driver-held rows (dicts, or tuples in schema order),
+    shipped to the JVM as one Arrow table: a local relation that runs no
+    Python task, where a Python-list source runs one per slice. A DDL
+    string ``schema`` is parsed as ``createDataFrame`` parses it."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    rows = [r if isinstance(r, dict) else dict(zip(schema.names, r))
+            for r in rows]
+    return spark.createDataFrame(
+        pa.Table.from_pylist(rows, schema=to_arrow_schema(schema)), schema)

@@ -121,51 +121,6 @@ class TableSink:
         return r.parquet(*dirs)
 
 
-def compact_parquet(spark: SparkSession, path: str,
-                    target_bytes: int = 128 * 1024 * 1024,
-                    partition_col: str | None = None) -> dict:
-    """Small-file compaction for a parquet table directory — the
-    operational follow-up to wave-append commits: every resumed run
-    appends its own files, and a month of waves leaves thousands of
-    KB-sized files whose open/footer cost dominates scans long before
-    data volume does.
-
-    Rewrites the table to ``ceil(total_bytes / target_bytes)`` files
-    (at least one per partition value when ``partition_col`` is given,
-    so partition pruning keeps working), published by ``atomic_rewrite``:
-    the live directory is replaced only after the rewrite commits, and a
-    crash inside the swap is restored by ``recover_rewrite`` (here, before
-    the size census, and on any later rewrite). Returns a stats dict
-    (files/bytes before and after).
-
-    Scale note: on a real cluster this is Iceberg's rewrite_data_files
-    action (same math, snapshot-atomic); this is the parquet-directory
-    analogue with the same decision rule, and the pipeline's resume
-    reads are unaffected because compaction preserves content and the
-    partition column.
-    """
-    import math
-    from pathlib import Path
-
-    recover_rewrite(path)  # a stranded root would census as empty
-    files = [p for p in Path(path).rglob("*.parquet") if p.is_file()]
-    if not files:
-        raise ValueError(f"no parquet files under {path}")
-    n_out = max(1, math.ceil(
-        sum(p.stat().st_size for p in files) / target_bytes))
-    df = spark.read.parquet(path)
-
-    def _write(tmp: str) -> None:
-        if partition_col:
-            (df.repartition(n_out, F.col(partition_col))
-               .write.mode("overwrite").partitionBy(partition_col)
-               .parquet(tmp))
-        else:
-            df.repartition(n_out).write.mode("overwrite").parquet(tmp)
-
-    return atomic_rewrite(path, _write)
-
-
 def recover_rewrite(path: str) -> bool:
     """Crash recovery for ``atomic_rewrite`` (ADVICE r6 #1): a crash in
     the swap window leaves the data stranded in ``<name>.prerewrite-*``
@@ -204,9 +159,9 @@ def atomic_rewrite(path: str, write_fn) -> dict:
     the data in ``.prerewrite-*``; ``recover_rewrite`` restores it at
     startup.
 
-    Returns {files,bytes}×{before,after}. The generalized core of
-    ``compact_parquet`` for rewrites that also change LAYOUT or fold
-    partial rows (index compaction) rather than merely re-bucketing files."""
+    Returns {files,bytes}×{before,after}. ``compact_sorted_parquet``
+    publishes through it, for rewrites that change LAYOUT or fold partial
+    rows (index compaction)."""
     import shutil
     import uuid
     from pathlib import Path

@@ -1,27 +1,15 @@
-"""Structured Streaming variant of the extraction pipeline.
+"""Structured Streaming helpers for the declared streaming queries.
 
-The reference is pure batch (SURVEY.md §2.8) and the north rule needs batch
-over a static table, but a transcript firehose is the natural streaming
-source, and the extraction map is stateless per turn — so the SAME
-mapInPandas kernel runs under readStream/writeStream unchanged:
-
-    readStream(parquet dir) → extract (stateless Arrow map) → writeStream
-    (parquet sink, checkpointLocation) with Trigger.AvailableNow for
-    catch-up runs.
-
-Streaming checkpointing subsumes the batch lineage for exactly-once file
-sinks; watermarks/windows are NOT needed because there is no event-time
-aggregation in the per-turn map (a conversation-level streaming rollup would
-use a conv_id session window + watermark on ts — provided here as
-``streaming_conversation_counts`` to pin that pattern down).
+The extraction pipeline is batch over a static table (SURVEY.md §2.8);
+incremental ingestion takes a new output dir per input snapshot. What
+streams here are the event-table queries: a scale-adaptive state
+partition count, ordered micro-batch staging for bounded replays, and
+the custom stateful sessionizer behind ``events_stream_sessionize``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-
-from .schema import EXTRACTED_SCHEMA, TRANSCRIPT_SCHEMA
-from .udfs import extract_batches
+from pyspark.sql import DataFrame, SparkSession
 
 
 def scaled_stream_partitions(n_bytes: int, target_bytes: int = 64 << 20,
@@ -56,34 +44,6 @@ def stream_partition_scope(spark: SparkSession, n_partitions: int):
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", old)
     return scope()
-
-
-def read_transcript_stream(spark: SparkSession, input_dir: str,
-                           max_files_per_trigger: int = 16) -> DataFrame:
-    return (spark.readStream.schema(TRANSCRIPT_SCHEMA)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .parquet(input_dir))
-
-
-def extract_stream(stream: DataFrame) -> DataFrame:
-    """Same kernel, same schema — stateless, so it is streaming-safe."""
-    return stream.mapInPandas(lambda it: extract_batches(it),
-                              schema=EXTRACTED_SCHEMA)
-
-
-def run_stream_to_parquet(spark: SparkSession, input_dir: str,
-                          output_dir: str, checkpoint_dir: str,
-                          available_now: bool = True):
-    """Start (and with available_now=True, drain) the streaming job.
-    Returns the StreamingQuery."""
-    q = (extract_stream(read_transcript_stream(spark, input_dir))
-         .writeStream
-         .format("parquet")
-         .option("path", output_dir)
-         .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        q = q.trigger(availableNow=True)
-    return q.start()
 
 
 def stage_ordered_batches(dfs, stage_dir: str) -> None:
@@ -163,17 +123,9 @@ SESSION_OUT_SCHEMA = ("user_id int, session_id bigint, "
                       "n_events bigint, value_sum double")
 SESSION_STATE_SCHEMA = ("last_ts long, session_id long, "
                         "n_events long, value_sum double")
-# timeout mode emits one extra column: the session's first event-time epoch.
-# After an eviction the ordinal session_id restarts at 1, so (user_id,
-# session_id) alone is not a unique sink key there — (user_id,
-# session_start) is, and its presence doubles as the marker distinguishing
-# timeout-mode rows from sentinel-mode rows (ADVICE r4).
-SESSION_OUT_SCHEMA_TIMEOUT = SESSION_OUT_SCHEMA + ", session_start long"
-SESSION_STATE_SCHEMA_TIMEOUT = SESSION_STATE_SCHEMA + ", session_start long"
 
 
-def stateful_sessionize(stream: DataFrame, gap_s: int = 300,
-                        timeout_ms: int | None = None) -> DataFrame:
+def stateful_sessionize(stream: DataFrame, gap_s: int = 300) -> DataFrame:
     """Custom stateful operator via applyInPandasWithState: per-user
     sessions split on > ``gap_s`` event-time gaps, session state carried
     ACROSS micro-batches. An event with user_id IS NULL-safe value and
@@ -190,111 +142,48 @@ def stateful_sessionize(stream: DataFrame, gap_s: int = 300,
     (user_id, session_id) keys into the append-mode sink. The cost is that
     flushed users retain a row of state for the rest of the run — fine for
     the bounded replays this drives.
-
-    ``timeout_ms`` (VERDICT r3 #7) is the unbounded-deployment eviction
-    path: ProcessingTimeTimeout instead of NoTimeout. A user idle for
-    ``timeout_ms`` of processing time has the open session emitted ONCE
-    and the state row REMOVED — state is bounded by the active-user set,
-    not the all-time user set. The documented tradeoff vs sentinel mode:
-    eviction forgets the session counter, so a user reappearing after a
-    timeout restarts numbering at 1 — in timeout mode session_id is an
-    ordinal within an eviction epoch, not a globally unique key. Timeout
-    -mode rows therefore carry one EXTRA column, ``session_start`` (the
-    session's first event-time epoch, ADVICE r4): (user_id, session_start)
-    stays unique across evictions, and the extra column is the schema-level
-    marker telling sink consumers which semantics produced the rows.
-    Sentinel mode keeps the 4-column schema the batch oracle compares.
     """
     import pandas as pd
 
-    timeout = timeout_ms is not None
-    out_cols = ["user_id", "session_id", "n_events", "value_sum"] + (
-        ["session_start"] if timeout else [])
+    out_cols = ["user_id", "session_id", "n_events", "value_sum"]
 
     def fn(key, pdf_iter, state):
         (user_id,) = key
-
-        def row(session_id, n_events, value_sum, session_start):
-            base = (user_id, session_id, n_events, value_sum)
-            return base + (session_start,) if timeout else base
-
-        def unpack():
-            if not state.exists:
-                return None, 0, 0, 0.0, None
-            vals = state.get
-            return vals if timeout else vals + (None,)
-
-        if timeout and state.hasTimedOut:
-            # idle past the horizon: emit the open session once, evict
-            out = []
-            if state.exists:
-                last_ts, session_id, n_events, value_sum, start = unpack()
-                if n_events:
-                    out.append(row(session_id, n_events, value_sum, start))
-                state.remove()
-            if out:
-                yield pd.DataFrame(out, columns=out_cols)
-            return
         pdf = pd.concat(list(pdf_iter), ignore_index=True)
         pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
-        last_ts, session_id, n_events, value_sum, start = unpack()
+        last_ts, session_id, n_events, value_sum = (
+            state.get if state.exists else (None, 0, 0, 0.0))
         out = []
         for ts, event_id, value in zip(pdf["ts"], pdf["event_id"],
                                        pdf["value"]):
             if event_id < 0:  # sentinel: close the open session
                 if n_events:
-                    out.append(row(session_id, n_events, value_sum, start))
+                    out.append((user_id, session_id, n_events, value_sum))
                 last_ts, n_events, value_sum = None, 0, 0.0  # keep session_id
                 continue
             epoch = int(ts.value // 1_000_000_000)
             if last_ts is None:
                 session_id += 1
-                n_events, value_sum, start = 0, 0.0, epoch
+                n_events, value_sum = 0, 0.0
             elif epoch - last_ts > gap_s:
-                out.append(row(session_id, n_events, value_sum, start))
+                out.append((user_id, session_id, n_events, value_sum))
                 session_id += 1
-                n_events, value_sum, start = 0, 0.0, epoch
+                n_events, value_sum = 0, 0.0
             last_ts = epoch
             n_events += 1
             value_sum += float(value)
         if n_events:
-            vals = (last_ts, session_id, n_events, value_sum)
-            state.update(vals + (start,) if timeout else vals)
-            if timeout:
-                # the timeout timestamp is cleared on every invocation for
-                # the key — re-arm it whenever a session stays open
-                state.setTimeoutDuration(timeout_ms)
+            state.update((last_ts, session_id, n_events, value_sum))
         elif session_id:
             # closed by a sentinel: keep the counter so a later batch for
-            # this user continues numbering (no duplicate session keys) —
-            # in timeout mode there is nothing left to emit, so drop the
-            # row instead (numbering restart is timeout mode's documented
-            # contract, and keeping it would defeat the bounded-state point)
-            if not timeout:
-                state.update((None, session_id, 0, 0.0))
-            elif state.exists:
-                state.remove()
+            # this user continues numbering (no duplicate session keys)
+            state.update((None, session_id, 0, 0.0))
         elif state.exists:
             state.remove()
         if out:
             yield pd.DataFrame(out, columns=out_cols)
 
     return (stream.groupBy("user_id")
-            .applyInPandasWithState(
-                fn,
-                SESSION_OUT_SCHEMA_TIMEOUT if timeout else SESSION_OUT_SCHEMA,
-                SESSION_STATE_SCHEMA_TIMEOUT if timeout
-                else SESSION_STATE_SCHEMA,
-                "append",
-                "ProcessingTimeTimeout" if timeout else "NoTimeout"))
-
-
-def streaming_conversation_counts(stream: DataFrame,
-                                  watermark: str = "10 minutes") -> DataFrame:
-    """Event-time pattern exemplar: late-tolerant per-conversation turn
-    counts over 1-minute windows (watermark bounds state)."""
-    return (stream
-            .withWatermark("ts", watermark)
-            .groupBy(F.window("ts", "1 minute"), F.col("conv_id"))
-            .agg(F.count("*").alias("turns_in_window"),
-                 F.sum(F.length("text")).alias("bytes_in_window")))
+            .applyInPandasWithState(fn, SESSION_OUT_SCHEMA,
+                                    SESSION_STATE_SCHEMA, "append",
+                                    "NoTimeout"))

@@ -1,5 +1,5 @@
 """Persisted ANN index: probe equivalence to the in-memory path,
-append-fold equivalence, batch-probe model check, plan pins."""
+batch-probe model check, plan pins."""
 
 from __future__ import annotations
 
@@ -42,28 +42,6 @@ def test_probe_matches_in_memory_path(spark, emb, index_dir, probe_bits):
     want = [(r.vec_id, r.score) for r in
             lsh_bucket_topk(emb, q, k=10, probe_bits=probe_bits).collect()]
     assert got == want and len(got) > 0
-
-
-def test_append_equals_full_rebuild(spark, emb, tmp_path):
-    from engine.datawork.ann_index import (append_to_ann_index,
-                                           index_occupancy, probe_index,
-                                           write_ann_index)
-    a = emb.filter(F.col("vec_id") % 3 != 0)
-    b = emb.filter(F.col("vec_id") % 3 == 0)
-    inc, full = str(tmp_path / "inc"), str(tmp_path / "full")
-    write_ann_index(a, inc)
-    append_to_ann_index(b, inc)
-    write_ann_index(emb, full)
-    q = _qvec(emb, vid=7)
-    got = probe_index(spark, inc, q, k=8, probe_bits=1).collect()
-    want = probe_index(spark, full, q, k=8, probe_bits=1).collect()
-    assert [(r.id, r.score) for r in got] == [(r.id, r.score) for r in want]
-    # occupancy partials sum to the rebuild's exact counts
-    occ_inc = {r.bucket: r.cnt
-               for r in index_occupancy(spark, inc).collect()}
-    occ_full = {r.bucket: r.cnt
-                for r in index_occupancy(spark, full).collect()}
-    assert occ_inc == occ_full
 
 
 def test_batch_probe_matches_model(spark, emb, index_dir):

@@ -155,7 +155,10 @@ def test_mega_conversation_salted(spark, tmp_path):
     mega = (raw.withColumn("rn", F.row_number().over(w))
             .withColumn("turn_idx", (F.col("rn") - 1).cast("int"))
             .drop("rn").withColumn("conv_id", F.lit("mega")))
-    ext = extract_df(mega).persist()
+    # the unpartitioned window leaves every row in one partition: salt the
+    # extraction map so it runs on every core, not in one task
+    cores = spark.sparkContext.defaultParallelism
+    ext = extract_df(mega, salt_partitions=4 * cores).persist()
     try:
         # structural bound: no (conv_id, shard) pass-1 group exceeds chunk
         per_shard = (ext.groupBy("conv_id", shard_expr(chunk).alias("shard"))

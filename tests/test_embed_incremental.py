@@ -203,24 +203,6 @@ def test_semdedup_wave_equals_full_recompute(spark, idx_path):
     assert len(got) > 0  # planted near-dups must produce wave losers
 
 
-def test_semdedup_wave_after_append(spark, idx_path):
-    from engine.datawork.embed_incremental import (
-        append_to_semantic_index, semdedup_wave_losers,
-        write_semantic_index)
-    from engine.datawork.similarity import train_kmeans
-    emb = _mk_emb(spark, n=140, planted_every=4, seed=61)
-    cent = train_kmeans(emb, n_cells=8)
-    corpus = _split(emb, 0, 6)
-    wave1, wave2 = _split(emb, 6, 8), _split(emb, 8, 10)
-    wave2_ids = {r.vec_id for r in wave2.select("vec_id").collect()}
-
-    write_semantic_index(corpus, idx_path, centroids=cent)
-    append_to_semantic_index(wave1, idx_path)
-    got = _semantic_wave(semdedup_wave_losers(wave2, idx_path,
-                                              threshold=THRESH))
-    assert got == _semantic_full_losers(emb, cent, wave2_ids)
-
-
 def test_semdedup_wave_combined_max_cluster(spark, idx_path):
     """A cell under max_cluster in the corpus alone but over it combined
     is excluded on both sides — like the full recompute's guard."""
@@ -357,15 +339,14 @@ def test_shared_fold_bitwise_equals_python_loop(spark):
     assert z[1005] == 11.0
 
 
-def test_retroactive_after_append_skips_docs_that_already_lost(spark,
-                                                               idx_path):
-    """Three identical vectors in one cell: id 0 is the corpus, id 2 is
-    appended as wave 1, id 1 is probed as wave 2. Id 2 already lost to
-    id 0, so ``(losers(old ∪ new) − losers(old)) ∩ corpus`` is empty: the
-    append must fold id 2 into ``losers/``. A probe at a threshold other
-    than the one ``losers/`` was built at is refused."""
-    from engine.datawork.embed_incremental import (append_to_semantic_index,
-                                                   retroactive_wave_losers,
+def test_retroactive_skips_docs_that_already_lost(spark, idx_path):
+    """Three identical vectors in one cell: ids 0 and 2 are the corpus,
+    id 1 is the probed wave. Id 2 already lost to id 0, so
+    ``(losers(old ∪ new) − losers(old)) ∩ corpus`` is empty: the build
+    must put id 2 in ``losers/``, and the probe must exclude it. A probe
+    at a threshold other than the one ``losers/`` was built at is
+    refused."""
+    from engine.datawork.embed_incremental import (retroactive_wave_losers,
                                                    write_semantic_index)
     v = _unit(random.Random(3))
 
@@ -374,9 +355,8 @@ def test_retroactive_after_append_skips_docs_that_already_lost(spark,
                                      "vec_id: long, embedding: array<double>")
 
     cent = spark.createDataFrame([(0, v)], "cell: int, cv: array<double>")
-    write_semantic_index(emb(0), idx_path, centroids=cent,
+    write_semantic_index(emb(0, 2), idx_path, centroids=cent,
                          losers_threshold=THRESH)
-    append_to_semantic_index(emb(2), idx_path)
     assert _semantic_wave(retroactive_wave_losers(emb(1), idx_path,
                                                   threshold=THRESH)) == []
     assert [r.id for r in spark.read.parquet(f"{idx_path}/losers")

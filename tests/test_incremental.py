@@ -175,16 +175,10 @@ def test_broadcast_guard_fallback_equivalence(spark, idx_path):
     wave-side hint; the pair set (incl. origin tags) must be identical to
     the broadcast path — the guard changes the physical strategy only."""
     from engine.datawork.incremental import (incremental_verified_pairs,
-                                             wave_census,
                                              write_minhash_index)
     docs = _mk_docs(spark, seed=31)
     corpus, wave = _split(docs, 0, 8), _split(docs, 8, 10)
     write_minhash_index(corpus, idx_path)
-
-    census = wave_census(wave)
-    assert census["n_docs"] > 0
-    assert census["bucket_rows"] == census["n_docs"] * 16
-    assert census["broadcast_ok"]  # tiny wave fits comfortably
 
     fast = (incremental_verified_pairs(wave, idx_path)
             .orderBy("id_a", "id_b").collect())
@@ -266,50 +260,6 @@ def test_compact_index_preserves_results_and_shrinks_files(spark, idx_path):
            [(r.band, r.bucket, r.cnt) for r in stats_pre]
 
 
-def test_compact_ann_index_preserves_probe(spark, tmp_path):
-    import math
-    from pathlib import Path
-
-    from engine.datawork.ann_index import (append_to_ann_index,
-                                           compact_ann_index,
-                                           index_occupancy, probe_index,
-                                           write_ann_index)
-    from engine.datawork.similarity import lsh_planes
-
-    def vec(i):
-        return [math.cos(i * 0.3 + d * 1.7) for d in range(8)]
-
-    planes = lsh_planes(n_planes=6, dim=8)
-    emb = spark.createDataFrame([(i, vec(i)) for i in range(120)],
-                                "vec_id: long, embedding: array<double>")
-    path = str(tmp_path / "ann_idx")
-    write_ann_index(emb.filter(F.col("vec_id") < 60), path, planes=planes)
-    for lo in (60, 80, 100):
-        append_to_ann_index(
-            emb.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < lo + 20)),
-            path, planes=planes)
-
-    def nfiles(sub):
-        return len(list((Path(path) / sub).rglob("*.parquet")))
-
-    q = vec(7)
-    pre = probe_index(spark, path, q, k=5, probe_bits=1,
-                      planes=planes).collect()
-    occ_pre = sorted((r.bucket, r.cnt)
-                     for r in index_occupancy(spark, path).collect())
-    before = {s: nfiles(s) for s in ("vectors", "stats")}
-    compact_ann_index(spark, path)
-    after = {s: nfiles(s) for s in ("vectors", "stats")}
-    post = probe_index(spark, path, q, k=5, probe_bits=1,
-                       planes=planes).collect()
-    occ_post = sorted((r.bucket, r.cnt)
-                      for r in index_occupancy(spark, path).collect())
-    assert [tuple(r) for r in pre] == [tuple(r) for r in post]
-    assert occ_pre == occ_post
-    assert after["vectors"] < before["vectors"]
-    assert after["stats"] < before["stats"]
-
-
 def test_stream_dedup_ingest_partitions_full_pair_set(spark, idx_path,
                                                       tmp_path):
     """3 streamed waves from an EMPTY index: the union of per-batch pair
@@ -364,16 +314,15 @@ def test_stream_dedup_ingest_partitions_full_pair_set(spark, idx_path,
     incremental_verified_pairs(probe, idx_path).count()  # must not raise
 
 
-@pytest.mark.parametrize("family", ["minhash", "embedding", "ann"])
+@pytest.mark.parametrize("family", ["minhash", "embedding"])
 def test_compactor_recovers_stranded_stats(spark, tmp_path, family):
     """A crash inside atomic_rewrite's swap leaves ``stats.prerewrite-*``
     and no ``stats/``: each index compactor must restore the table before
-    folding it (as compact_parquet does), ending with one row per key and
-    the same totals."""
+    folding it, ending with one row per key and the same totals."""
     import math
     from pathlib import Path
 
-    from engine.datawork import ann_index, embed_incremental, incremental
+    from engine.datawork import embed_incremental, incremental
 
     path = str(tmp_path / "idx")
     vecs = spark.createDataFrame(
@@ -382,12 +331,9 @@ def test_compactor_recovers_stranded_stats(spark, tmp_path, family):
     if family == "minhash":
         incremental.write_minhash_index(_mk_docs(spark, n=40), path)
         compact = incremental.compact_index
-    elif family == "embedding":
+    else:
         embed_incremental.write_embedding_index(vecs, path)
         compact = embed_incremental.compact_embedding_index
-    else:
-        ann_index.write_ann_index(vecs, path)
-        compact = ann_index.compact_ann_index
 
     stats = Path(path) / "stats"
     pre = spark.read.parquet(str(stats))

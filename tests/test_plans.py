@@ -70,13 +70,15 @@ def test_minhash_candidates_equi_join_and_single_sig_agg(spark):
     """Band buckets come from ONE explode over the signature aggregate —
     the plan must not contain a per-band union re-running the aggregation
     (16 HashAggregate pairs), and the self-join must be an equi join."""
-    from engine.datawork.dedup import minhash_band_buckets
+    from engine.datawork.dedup import (MINHASH_BANDS, MINHASH_K,
+                                       _band_explode, minhash_signatures)
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     # live nodes only: when another op in the session persisted the
     # signature table, the cache manager substitutes an InMemoryTableScan
     # (MORE sharing, not less) — the cached build plan must not be
     # charged to this query
-    nodes = live_nodes(minhash_band_buckets(docs))
+    nodes = live_nodes(_band_explode(minhash_signatures(docs), MINHASH_K,
+                                     MINHASH_BANDS))
     assert nodes.count("HashAggregate") <= 2  # partial+final at most
     assert "Union" not in nodes
     assert "Generate" in nodes  # the explode

@@ -171,41 +171,14 @@ def test_parquet_sink_roundtrip(spark, tmp_path):
     assert sink.read().count() == 4
 
 
-def test_compact_parquet_preserves_content_and_partitions(spark, tmp_path):
-    """Compaction shrinks the file count, preserves every row, keeps the
-    partition layout usable, and a post-compaction resume still sees all
-    buckets as done (content-identical table)."""
-    import pyspark.sql.functions as F
-    from engine.spark.sinks import compact_parquet
-    out = str(tmp_path / "t")
-    df = spark.range(0, 2000).select(
-        F.col("id"), (F.col("id") % 4).cast("int").alias("part"))
-    # fragment: 40 appends of 50 rows each
-    for i in range(40):
-        (df.filter((F.col("id") >= i * 50) & (F.col("id") < (i + 1) * 50))
-           .write.mode("append").partitionBy("part").parquet(out))
-    before = spark.read.parquet(out)
-    rows_before = sorted((r["id"], r["part"]) for r in before.collect())
-    stats = compact_parquet(spark, out, target_bytes=10**9,
-                            partition_col="part")
-    assert stats["files_after"] < stats["files_before"]
-    after = spark.read.parquet(out)
-    assert sorted((r["id"], r["part"]) for r in after.collect()) == rows_before
-    # partition pruning still works (directory layout preserved)
-    assert after.filter(F.col("part") == 2).count() == 500
-    import pathlib
-    assert any(p.name.startswith("part=") for p in
-               pathlib.Path(out).iterdir())
-
-
 def test_atomic_rewrite_crash_recovery(tmp_path, spark):
     """A crash between atomic_rewrite's two renames leaves the data in
     .prerewrite-* with nothing published; recover_rewrite restores it,
-    and the next atomic_rewrite or compact_parquet call self-recovers too
-    (ADVICE r6 #1)."""
+    and the next atomic_rewrite or compact_sorted_parquet call
+    self-recovers too (ADVICE r6 #1)."""
     import shutil
 
-    from engine.spark.sinks import (atomic_rewrite, compact_parquet,
+    from engine.spark.sinks import (atomic_rewrite, compact_sorted_parquet,
                                     recover_rewrite)
 
     root = tmp_path / "idx"
@@ -226,8 +199,9 @@ def test_atomic_rewrite_crash_recovery(tmp_path, spark):
     assert out["files_after"] >= 1
     assert spark.read.parquet(str(root)).count() == 10
 
-    # compact_parquet publishes through the same swap, so it recovers too
+    # compact_sorted_parquet publishes through the same swap, so it
+    # recovers too
     shutil.move(str(root), str(tmp_path / "idx.prerewrite-cafe0002"))
-    compact_parquet(spark, str(root), target_bytes=10**9)
+    compact_sorted_parquet(spark, str(root), ["id"], target_bytes=10**9)
     assert spark.read.parquet(str(root)).count() == 10
     assert not list(tmp_path.glob("idx.prerewrite-*"))

@@ -1,88 +1,8 @@
-"""Streaming variant: same kernel under readStream/writeStream produces the
-same rows as the batch pipeline, exactly once, with checkpointed resume."""
+"""Streaming helpers: the stateful sessionizer carries state across
+micro-batches, the declared streaming queries drain exactly once, and
+partitioned staging keeps one file per wave."""
 
 import pytest
-
-from tools import synth
-
-
-@pytest.fixture(scope="module")
-def stream_dirs(tmp_path_factory):
-    base = tmp_path_factory.mktemp("stream")
-    src = base / "in"
-    src.mkdir()
-    synth.write_parquet(str(src / "part1.parquet"), 150)
-    return base, src
-
-
-def test_streaming_matches_batch(spark, stream_dirs):
-    from engine.spark.pipeline import extract_df
-    from engine.spark.streaming import run_stream_to_parquet
-
-    base, src = stream_dirs
-    out, ckpt = str(base / "out"), str(base / "ckpt")
-
-    q = run_stream_to_parquet(spark, str(src), out, ckpt)
-    q.awaitTermination(120)
-
-    got = spark.read.parquet(out)
-    batch = extract_df(spark.read.parquet(str(src)))
-    assert got.count() == batch.count()
-
-    g = {(r["conv_id"], r["turn_idx"]): r["cleaned_text"]
-         for r in got.collect()}
-    b = {(r["conv_id"], r["turn_idx"]): r["cleaned_text"]
-         for r in batch.collect()}
-    assert g == b
-
-
-def test_streaming_checkpoint_no_reprocess_and_new_files(spark, stream_dirs):
-    from engine.spark.streaming import run_stream_to_parquet
-
-    base, src = stream_dirs
-    out, ckpt = str(base / "out"), str(base / "ckpt")
-
-    n_before = spark.read.parquet(out).count()
-    # restart with no new files → nothing reprocessed
-    q = run_stream_to_parquet(spark, str(src), out, ckpt)
-    q.awaitTermination(120)
-    assert spark.read.parquet(out).count() == n_before
-
-    # new arrivals → only the delta is processed
-    synth.write_parquet(str(src / "part2.parquet"), 60)
-    extra = spark.read.parquet(str(src / "part2.parquet")).count()
-    q = run_stream_to_parquet(spark, str(src), out, ckpt)
-    q.awaitTermination(120)
-    after = spark.read.parquet(out)
-    assert after.count() == n_before + extra
-    keyed = after.select("conv_id", "turn_idx").distinct().count()
-    # part2 regenerates the same conversations (same seed) → duplicates by
-    # key are EXPECTED across files; exactly-once is per input file
-    assert keyed <= after.count()
-
-
-def test_windowed_conversation_counts_end_to_end(spark, stream_dirs):
-    """Event-time windowed agg with watermark, drained via availableNow into
-    a memory sink, compared against the equivalent batch aggregation."""
-    from pyspark.sql import functions as F
-
-    from engine.spark.streaming import (read_transcript_stream,
-                                        streaming_conversation_counts)
-    _, src = stream_dirs
-    agg = streaming_conversation_counts(read_transcript_stream(spark, str(src)))
-    assert agg.isStreaming
-    q = (agg.writeStream.format("memory").queryName("conv_counts")
-         .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-
-    got = {(r["conv_id"], r["window"]["start"]): r["turns_in_window"]
-           for r in spark.sql("select * from conv_counts").collect()}
-    batch = (spark.read.parquet(str(src))
-             .groupBy(F.window("ts", "1 minute"), F.col("conv_id"))
-             .agg(F.count("*").alias("n")))
-    exp = {(r["conv_id"], r["window"]["start"]): r["n"]
-           for r in batch.collect()}
-    assert got == exp and len(got) > 0
 
 
 def test_stateful_sessionize_carries_state_across_microbatches(spark, tmp_path):
@@ -162,91 +82,6 @@ def test_stateful_sessionize_numbering_survives_sentinel(spark, tmp_path):
     rows = {(r["user_id"], r["session_id"]): (r["n_events"], r["value_sum"])
             for r in spark.table("sess_sentinel_sink").collect()}
     assert rows == {(1, 1): (1, 1.0), (1, 2): (1, 3.0)}  # 2, not 1 again
-
-def test_stateful_sessionize_timeout_evicts_idle_sessions(spark, tmp_path):
-    """VERDICT r3 #7: the ProcessingTimeTimeout variant — the unbounded-
-    deployment eviction path, so the test runs it the unbounded way: ONE
-    continuously-running query (processing-time timeouts keep scheduling
-    no-data batches, so an availableNow drain would never terminate),
-    polled until the evictions land, then stopped. A user idle past the
-    horizon has the open session emitted EXACTLY ONCE and the state row
-    removed; a second staged file proves eviction keeps firing for later
-    arrivals within the same run."""
-    import os
-    import time
-
-    from pyspark.sql import functions as F
-
-    from engine.spark.streaming import stage_ordered_batches, stateful_sessionize
-
-    stage = str(tmp_path / "in")
-    ckpt = str(tmp_path / "ckpt")
-    out = str(tmp_path / "out")
-    schema = "user_id int, event_id int, ts timestamp, value double"
-
-    def batch(rows):
-        return spark.createDataFrame(
-            rows, "user_id int, event_id int, ts string, value double"
-        ).select("user_id", "event_id",
-                 F.col("ts").cast("timestamp").alias("ts"), "value")
-
-    def add_file(df, name):
-        tmp = str(tmp_path / ("stage_" + name))
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        [part] = [p for p in os.listdir(tmp) if p.endswith(".parquet")]
-        os.rename(os.path.join(tmp, part), os.path.join(stage, name))
-
-    def sink_rows():
-        got = spark.read.schema(
-            "user_id int, session_id bigint, n_events bigint, "
-            "value_sum double, session_start long").parquet(out)
-        return sorted((r["user_id"], r["session_id"], r["n_events"],
-                       r["value_sum"], r["session_start"])
-                      for r in got.collect())
-
-    def poll_until(pred, deadline_s=90):
-        t0 = time.monotonic()
-        while time.monotonic() - t0 < deadline_s:
-            if pred(sink_rows()):
-                return
-            time.sleep(0.5)
-        raise AssertionError(f"sink never satisfied: {sink_rows()}")
-
-    stage_ordered_batches([
-        batch([(1, 10, "2024-01-01 00:00:00", 1.0),
-               (2, 20, "2024-01-01 00:00:00", 5.0)])], stage)
-    stream = (spark.readStream.schema(schema)
-              .option("pathGlobFilter", "*.parquet").parquet(stage))
-    q = (stateful_sessionize(stream, gap_s=300, timeout_ms=50)
-         .writeStream.format("parquet").option("path", out)
-         .option("checkpointLocation", ckpt)
-         .outputMode("append").start())
-    try:
-        # both users idle past 50 ms → evicted, open sessions emitted
-        poll_until(lambda rows: len(rows) >= 2)
-        # a later arrival opens a fresh session and is evicted in turn
-        add_file(batch([(3, 30, "2024-01-01 00:00:00", 7.0)]),
-                 "batch-0001.parquet")
-        poll_until(lambda rows: len(rows) >= 3)
-        # user 1 REAPPEARS after eviction: numbering restarts at 1 (the
-        # documented timeout-mode contract), but session_start keeps the
-        # sink rows uniquely keyed (ADVICE r4)
-        add_file(batch([(1, 40, "2024-01-01 01:00:00", 9.0)]),
-                 "batch-0002.parquet")
-        poll_until(lambda rows: len(rows) >= 4)
-    finally:
-        q.stop()
-    rows = sink_rows()
-    # exactly once each (state removed on eviction → can never re-fire),
-    # correct aggregates, no duplicates
-    assert [r[:4] for r in rows] == [
-        (1, 1, 1, 1.0), (1, 1, 1, 9.0), (2, 1, 1, 5.0), (3, 1, 1, 7.0)]
-    # session_start disambiguates the duplicated (user_id, session_id) key
-    u1_starts = {r[4] for r in rows if r[0] == 1}
-    assert len(u1_starts) == 2 and all(s is not None for s in u1_starts)
-    # same-instant sessions share the start epoch across users
-    assert rows[0][4] == rows[2][4] == rows[3][4] == rows[1][4] - 3600
-
 
 def test_stream_dedup_drops_replayed_tail(spark):
     """The staged input feeds MORE rows than the events table (the replayed
