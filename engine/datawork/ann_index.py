@@ -8,7 +8,7 @@ full corpus. Same lineage as the extraction pipeline's
 output-authoritative resume state (reference: batch_pdf_processor.py's
 completed-stem skip) — persisted derived state stands in for recompute.
 
-Index layout under ``<path>/`` (the sorted-table and count rules live in
+Index layout under ``<path>/`` (the sorted-table rule lives in
 engine/datawork/index_store.py):
 
 * ``vectors/`` — (id, v, bucket): the corpus vectors keyed by their
@@ -16,7 +16,6 @@ engine/datawork/index_store.py):
   deterministic planes), a sorted table by bucket so a probe's
   ``bucket IN (...)`` filter prunes parquet row groups via min/max
   statistics instead of scanning the corpus.
-* ``stats/``   — (bucket, cnt), the per-bucket counts of ``vectors/``.
 
 Scale contract:
 
@@ -41,7 +40,6 @@ from .similarity import (bucket_expr, cosine, cosine_topk, lsh_planes, norm,
                          probe_buckets)
 
 VECTORS = "vectors"
-STATS = "stats"
 
 
 def _bucketed(emb: DataFrame, id_col: str, vec_col: str,
@@ -56,8 +54,7 @@ def write_ann_index(emb: DataFrame, path: str, id_col: str = "vec_id",
                     planes: Optional[List[List[float]]] = None) -> None:
     """Build the persisted index from scratch (mode=overwrite)."""
     write_sorted(_bucketed(emb, id_col, vec_col, planes or lsh_planes()),
-                 ["bucket"], sub(path, VECTORS), "overwrite",
-                 counts=sub(path, STATS))
+                 ["bucket"], sub(path, VECTORS), "overwrite")
 
 
 def probe_index(spark: SparkSession, path: str, query: Sequence[float],

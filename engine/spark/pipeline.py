@@ -17,6 +17,10 @@ Physical design for 10^12 turns (SURVEY.md §4):
   reference's skip-completed scans, batch_pdf_processor.py:2562-2625). The
   committed set is ≤ n_buckets ints, so the driver holds it and each wave
   reads only its not-yet-done buckets through an ``isin`` filter.
+* Lineage: a wave's manifest (per-bucket turns, failures, bytes) is summed
+  by the extraction map into an accumulator as it feeds the writer, so no
+  job reads the written wave back. Only the crash backfill aggregates the
+  committed output.
 * Bookkeeping frames (the committed-bucket set, the lineage manifest) are
   built driver-side or from Arrow, never as Python RDDs: a Python-RDD frame
   costs a Python task per slice, in a worker pool that runs no engine code.
@@ -41,11 +45,12 @@ from dataclasses import dataclass, field
 from datetime import datetime, timezone
 from typing import Optional
 
+from pyspark.accumulators import Accumulator
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
 from .schema import EXTRACTED_SCHEMA, LINEAGE_SCHEMA, arrow_frame
-from .udfs import bucket_col, extract_batches
+from .udfs import BucketTallies, bucket_col, extract_batches
 
 DEFAULT_BUCKETS = 1024
 
@@ -58,10 +63,11 @@ class RunStats:
     turns_skipped_resume: int
     wall_s: float
     # wall seconds per phase, summed across waves. "extract_write" is one
-    # fused action by design (the map feeds the writer; splitting it would
-    # cost a second extraction pass), so regressions localize to: resume
-    # scan vs the fused extract+write vs the wave-bounded lineage read-back
-    # vs the manifest write.
+    # fused action by design (the map feeds the writer and sums the wave's
+    # lineage counts; splitting it would cost a second extraction pass), so
+    # regressions localize to: resume scan vs the fused extract+write vs
+    # the manifest assembly from those counts ("lineage_read_agg", no job;
+    # the name predates it) vs the manifest write.
     phases: dict = field(default_factory=dict)
 
 
@@ -71,19 +77,22 @@ LAST_RUN_STATS: Optional[RunStats] = None
 
 
 def extract_df(df: DataFrame, n_buckets: int = DEFAULT_BUCKETS,
-               salt_partitions: Optional[int] = None) -> DataFrame:
+               salt_partitions: Optional[int] = None, *,
+               tallies: Optional[Accumulator] = None) -> DataFrame:
     """transcripts → extracted_turns (no write). The core operator.
 
     ``salt_partitions`` > 0 forces an even repartition by
     ``hash(conv_id, turn_idx)`` — full-width salt, safe because the
     extraction map is per-turn (north_rule's "salted repartitioning for
-    skewed long conversations").
+    skewed long conversations"). ``tallies`` (a ``BucketTallies``
+    accumulator) gets the per-bucket counts of every row the map yields.
     """
     src = df.select("conv_id", "turn_idx", "role", "text", "tool", "ts")
     if salt_partitions:
         src = src.repartition(salt_partitions, F.xxhash64("conv_id", "turn_idx"))
     return src.mapInPandas(
-        lambda it: extract_batches(it, n_buckets), schema=EXTRACTED_SCHEMA)
+        lambda it: extract_batches(it, n_buckets, tallies),
+        schema=EXTRACTED_SCHEMA)
 
 
 def _is_missing_table(exc: Exception) -> bool:
@@ -100,7 +109,7 @@ def _is_missing_table(exc: Exception) -> bool:
 
 def _bucket_manifest(extracted: DataFrame) -> DataFrame:
     """Per-bucket lineage counts over committed output rows (partition_id
-    kept as a representative for debugging)."""
+    kept as a representative for debugging); the crash backfill's source."""
     return (extracted.groupBy("conv_bucket")
             .agg(F.min("partition_id").alias("partition_id"),
                  F.count("*").alias("turns_processed"),
@@ -210,6 +219,15 @@ def run_pipeline(spark: SparkSession, input_path: str, output_dir: str,
             wave_df = wave_df.repartition(salt_partitions, F.col("conv_bucket"))
         else:
             wave_df = wave_df.repartition(F.col("conv_bucket"))
+        # the wave's manifest comes from the extraction map itself, with no
+        # job that reads the written wave back. Exact because the map runs
+        # in the write job's result stage (the repartition above is the last
+        # shuffle; the writer adds only a local sort): Spark merges a result
+        # task's accumulator update once per partition and only from a
+        # successful attempt (a PythonAccumulatorV2 drops failed attempts'
+        # values). A shuffle between the map and the writer would make it a
+        # map stage, whose re-runs can add twice.
+        tallies = spark.sparkContext.accumulator({}, BucketTallies())
         # sort BEFORE the extraction map, not after: the map is 1:1 and
         # order-preserving per partition, so the output clustering is
         # identical, but the sort moves the narrow transcript rows
@@ -220,32 +238,21 @@ def run_pipeline(spark: SparkSession, input_path: str, output_dir: str,
         extracted = extract_df(
             wave_df.drop("conv_bucket")
                    .sortWithinPartitions("conv_id", "turn_idx"),
-            n_buckets, None)
+            n_buckets, None, tallies=tallies)
         t_wave = time.monotonic()
         out_sink.append(extracted)
 
         wall_ms = int((time.monotonic() - t_wave) * 1000)
         phases["extract_write"] += wall_ms / 1000.0
         t_phase = time.monotonic()
-        # lineage from the committed output, listing ONLY this wave's
-        # not-yet-done partition directories (round 1 re-listed and
-        # re-scanned the whole output per wave — O(waves × output) listings
-        # across a run; a persist-through-the-write variant costs more than
-        # this 4-column scan of the freshly written files). A non-done
-        # bucket had no committed rows before this wave's all-or-nothing
-        # write, so these dirs hold exactly this wave's rows — no
-        # prior-attempt anti-join needed.
-        wave_out = out_sink.read_partitions(wave_buckets, EXTRACTED_SCHEMA)
-        # one aggregation pass: the manifest is ≤ n_buckets/waves rows, so
-        # collect it (scalar-scale), sum locally, write it back from the
-        # driver — not a driver-side loop over data, a loop over the
-        # manifest. A wave whose buckets had zero input rows has no
-        # partition dirs (wave_out is None) and an empty manifest.
         completed_at = datetime.now(timezone.utc)
-        lin_rows = [] if wave_out is None else [
-            dict(r.asDict(), run_id=run_id, wave=wave, wall_ms=wall_ms,
-                 completed_at=completed_at)
-            for r in _bucket_manifest(wave_out).collect()]
+        lin_rows = [
+            {"run_id": run_id, "wave": wave, "conv_bucket": b,
+             "partition_id": pid, "turns_processed": turns,
+             "extraction_failures": failures, "bytes_parsed": nbytes,
+             "wall_ms": wall_ms, "completed_at": completed_at}
+            for b, (turns, failures, nbytes, pid)
+            in sorted(tallies.value.items())]
         phases["lineage_read_agg"] += time.monotonic() - t_phase
         t_phase = time.monotonic()
         n_wave = sum(r["turns_processed"] for r in lin_rows)

@@ -83,43 +83,6 @@ class TableSink:
             return r.parquet(self.target)
         return self.spark.read.table(self.target)
 
-    def read_partitions(self, values, schema=None) -> DataFrame | None:
-        """Committed rows of the given partition values ONLY — for parquet
-        the file listing is bounded to those partition directories (one
-        listStatus on the table root; a whole-table read would re-list every
-        file ever committed, O(waves × output) across a run). Returns None
-        when none of the partitions exist yet. Iceberg prunes partitions
-        from table metadata, so the plain filtered read is already bounded."""
-        if self.format == "iceberg":
-            return self.read().filter(F.col(self.partition_col).isin(list(values)))
-        want = [f"{self.partition_col}={v}" for v in values]
-        local = self.target.split("file:")[-1] if "://" not in self.target \
-            else None
-        if local is not None:
-            # local fs: one listdir, zero py4j round-trips (a per-status
-            # py4j iteration costs ~ms each and dominated the wave commit)
-            import os
-            try:
-                names = set(os.listdir(local))
-            except FileNotFoundError:
-                return None
-            dirs = [f"{self.target}/{n}" for n in want if n in names]
-        else:
-            # remote fs: one exists() RPC per wanted partition — bounded by
-            # the wave size, never by the total committed output
-            jvm = self.spark._jvm
-            conf = self.spark._jsc.hadoopConfiguration()
-            fs = jvm.org.apache.hadoop.fs.Path(self.target).getFileSystem(conf)
-            dirs = [f"{self.target}/{n}" for n in want
-                    if fs.exists(jvm.org.apache.hadoop.fs.Path(
-                        f"{self.target}/{n}"))]
-        if not dirs:
-            return None
-        r = self.spark.read.option("basePath", self.target)
-        if schema is not None:
-            r = r.schema(schema)
-        return r.parquet(*dirs)
-
 
 def recover_rewrite(path: str) -> bool:
     """Crash recovery for ``atomic_rewrite`` (ADVICE r6 #1): a crash in

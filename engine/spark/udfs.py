@@ -14,9 +14,10 @@ reference's per-file error isolation, batch_pdf_processor.py:2754-2759).
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Iterator, Optional
 
 import pandas as pd
+from pyspark.accumulators import Accumulator, AccumulatorParam
 
 from engine.core.extract import extract_turn
 
@@ -28,13 +29,29 @@ _EXTRACT_COLS = [
 ]
 
 
-def extract_batches(batches: Iterator[pd.DataFrame], n_buckets: int = 1024
+class BucketTallies(AccumulatorParam):
+    """Per-bucket lineage counts of extracted rows: ``{conv_bucket: [turns,
+    failures, bytes_in, min partition_id]}``, merged sum/sum/sum/min."""
+
+    def zero(self, value):
+        return {}
+
+    def addInPlace(self, acc, more):
+        for bucket, (turns, failures, nbytes, pid) in more.items():
+            t = acc.setdefault(bucket, [0, 0, 0, pid])
+            t[:] = t[0] + turns, t[1] + failures, t[2] + nbytes, min(t[3], pid)
+        return acc
+
+
+def extract_batches(batches: Iterator[pd.DataFrame], n_buckets: int = 1024,
+                    tallies: Optional[Accumulator] = None
                     ) -> Iterator[pd.DataFrame]:
     """mapInPandas body: transcript rows → EXTRACTED_SCHEMA rows.
 
     Runs on executors. Imports stay at module level so compiled regexes are
     reused across batches within a worker (Iterator form keeps one Python
-    worker per partition).
+    worker per partition). ``tallies`` (a ``BucketTallies`` accumulator)
+    receives each batch's per-bucket counts of the rows it yields.
     """
     from pyspark import TaskContext
     ctx = TaskContext.get()  # None outside a task (a driver-side call)
@@ -66,10 +83,19 @@ def extract_batches(batches: Iterator[pd.DataFrame], n_buckets: int = 1024
         })
         for col in _EXTRACT_COLS:
             out[col] = [r[col] for r in records]
-        out["conv_bucket"] = [
-            stable_bucket(c, n_buckets) for c in pdf["conv_id"]]
+        buckets = [stable_bucket(c, n_buckets) for c in pdf["conv_id"]]
+        nbytes = [len(t) if isinstance(t, str) else 0 for t in pdf["text"]]
+        out["conv_bucket"] = buckets
         out["partition_id"] = partition_id
-        out["bytes_in"] = [len(t) if isinstance(t, str) else 0 for t in pdf["text"]]
+        out["bytes_in"] = nbytes
+        if tallies is not None:
+            part = {}
+            for bucket, rec, nb in zip(buckets, records, nbytes):
+                t = part.setdefault(bucket, [0, 0, 0, partition_id])
+                t[0] += 1
+                t[1] += rec["error"] is not None
+                t[2] += nb
+            tallies.add(part)
         yield out
 
 

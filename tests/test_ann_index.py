@@ -102,3 +102,11 @@ def test_probe_plans(spark, emb, index_dir):
     assert "BroadcastHashJoin" in p2 or "BroadcastNestedLoopJoin" in p2
     assert "CartesianProduct" not in p2
     assert p2.count("Exchange hashpartitioning") <= 1
+
+
+def test_build_writes_vectors_only(index_dir):
+    """A build writes the table the probes read and nothing else: no
+    per-bucket ``stats/`` counts that no code reads."""
+    from pathlib import Path
+    assert (Path(index_dir) / "vectors").is_dir()
+    assert not (Path(index_dir) / "stats").exists()

@@ -428,6 +428,11 @@ def curation(spark, sf, copies, out):
     timed(out, "curate_funnel", lambda: {
         r["stage"]: r["n_docs"]
         for r in curate_funnel(pool, bench, budget=budget).collect()})
+    # expected 1 at sf0.01 × 3 on 4 cores: the funnel's decontamination
+    # shingles its corpus side (contamination_report's shingles(docs, ...))
+    # from the curate_deduped checkpoint, a 1-partition LogicalRDD, and the
+    # reactive guard splits it. Not an under-split scan; the bench side's
+    # shingles over the filtered scan passes untouched.
     out["rebalance_triggers"] = dedup_mod.REBALANCE_TRIGGERS
 
 
