@@ -778,9 +778,9 @@ def q_dedup_incremental(spark, sf_dir):
     import tempfile
     from engine.datawork.incremental import (incremental_verified_pairs,
                                              write_minhash_index)
+    from engine.datawork.textstats import md5_u32
     docs = _t(spark, sf_dir, "documents")
-    bucket = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),
-                    16, 10).cast("long") % 10
+    bucket = md5_u32(F.col("doc_id").cast("string")) % 10
     corpus, wave = docs.filter(bucket < 8), docs.filter(bucket >= 8)
     idx = os.path.join(tempfile.gettempdir(),
                        f"spark_graft_incr_{_tag(sf_dir)}")
@@ -953,9 +953,9 @@ def q_embedding_incremental_pairs(spark, sf_dir):
     import tempfile
     from engine.datawork.embed_incremental import (
         incremental_embedding_pairs, write_embedding_index)
+    from engine.datawork.textstats import md5_u32
     emb = _t(spark, sf_dir, "embeddings")
-    bucket = F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 8),
-                    16, 10).cast("long") % 10
+    bucket = md5_u32(F.col("vec_id").cast("string")) % 10
     corpus, wave = emb.filter(bucket < 8), emb.filter(bucket >= 8)
     idx = os.path.join(tempfile.gettempdir(),
                        f"spark_graft_embidx_{_tag(sf_dir)}")
@@ -979,10 +979,10 @@ def q_semdedup_wave_losers(spark, sf_dir):
     import tempfile
     from engine.datawork.embed_incremental import (semdedup_wave_losers,
                                                    write_semantic_index)
+    from engine.datawork.textstats import md5_u32
     from engine.datawork.similarity import train_kmeans
     emb = _t(spark, sf_dir, "embeddings")
-    bucket = F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 8),
-                    16, 10).cast("long") % 10
+    bucket = md5_u32(F.col("vec_id").cast("string")) % 10
     corpus, wave = emb.filter(bucket < 8), emb.filter(bucket >= 8)
     idx = os.path.join(tempfile.gettempdir(),
                        f"spark_graft_semidx_{_tag(sf_dir)}")
@@ -1004,10 +1004,10 @@ def q_semdedup_retroactive_losers(spark, sf_dir):
     import tempfile
     from engine.datawork.embed_incremental import (retroactive_wave_losers,
                                                    write_semantic_index)
+    from engine.datawork.textstats import md5_u32
     from engine.datawork.similarity import train_kmeans
     emb = _t(spark, sf_dir, "embeddings")
-    bucket = F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 8),
-                    16, 10).cast("long") % 10
+    bucket = md5_u32(F.col("vec_id").cast("string")) % 10
     corpus, wave = emb.filter(bucket < 8), emb.filter(bucket >= 8)
     idx = os.path.join(tempfile.gettempdir(),
                        f"spark_graft_semretro_{_tag(sf_dir)}")
@@ -1175,17 +1175,22 @@ def q_winnow_similar_pairs(spark, sf_dir):
         min_shared=2)
 
 
+def _bench_split(spark, sf_dir):
+    """(corpus, bench): documents split at md5 bucket 5 of 100, the
+    held-out eval set of the decontamination and curation queries."""
+    from engine.datawork.textstats import md5_u32
+    docs = _t(spark, sf_dir, "documents")
+    bucket = md5_u32(F.col("doc_id").cast("string")) % 100
+    return docs.filter(bucket >= 5), docs.filter(bucket < 5)
+
+
 def q_corpus_decontaminate(spark, sf_dir):
     """Benchmark decontamination: corpus docs sharing >= 1 word 3-gram with
     a held-out eval split (md5 bucket < 5%) — the GPT-3-appendix
     train/test-overlap scan. Eval gram set broadcast; the corpus is never
     shuffled on gram strings. engine/datawork/curation.py."""
     from engine.datawork.curation import contamination_report
-    docs = _t(spark, sf_dir, "documents")
-    bucket = (F.conv(F.substring(F.md5(F.col("doc_id").cast("string")),
-                                 1, 8), 16, 10).cast("long") % 100)
-    return contamination_report(docs.filter(bucket >= 5),
-                                docs.filter(bucket < 5), n=3)
+    return contamination_report(*_bench_split(spark, sf_dir), n=3)
 
 
 def q_corpus_decontaminate_spans(spark, sf_dir):
@@ -1197,18 +1202,14 @@ def q_corpus_decontaminate_spans(spark, sf_dir):
     vocab collisions, are cut. Bench gram set broadcast; corpus never
     shuffles on grams. engine/datawork/substrings.py."""
     from engine.datawork.substrings import decontaminate_spans
-    docs = _t(spark, sf_dir, "documents")
-    bucket = (F.conv(F.substring(F.md5(F.col("doc_id").cast("string")),
-                                 1, 8), 16, 10).cast("long") % 100)
+    corpus, bench = _bench_split(spark, sf_dir)
     phrase = F.lit(" the quick eval answer is forty two exactly")
-    bench = (docs.filter(bucket < 5)
-             .select("doc_id",
-                     F.concat(F.col("text"), phrase).alias("text")))
-    corpus = (docs.filter(bucket >= 5)
-              .select("doc_id",
-                      F.when(F.col("doc_id") % 6 == 0,
-                             F.concat(F.col("text"), phrase))
-                      .otherwise(F.col("text")).alias("text")))
+    bench = bench.select("doc_id",
+                         F.concat(F.col("text"), phrase).alias("text"))
+    corpus = corpus.select("doc_id",
+                           F.when(F.col("doc_id") % 6 == 0,
+                                  F.concat(F.col("text"), phrase))
+                           .otherwise(F.col("text")).alias("text"))
     return decontaminate_spans(corpus, bench, n=6)
 
 
@@ -1453,13 +1454,6 @@ def q_doc_pii_redact(spark, sf_dir):
     return redact_pii(planted)
 
 
-def _curate_inputs(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
-    bucket = (F.conv(F.substring(F.md5(F.col("doc_id").cast("string")),
-                                 1, 8), 16, 10).cast("long") % 100)
-    return docs.filter(bucket >= 5), docs.filter(bucket < 5)
-
-
 def q_corpus_curate(spark, sf_dir):
     """The COMPOSED curation pipeline — quality gate → layered dedup →
     decontamination (vs the hash-split eval set) → temperature sampling —
@@ -1467,7 +1461,7 @@ def q_corpus_curate(spark, sf_dir):
     a single CTE chain, so value equality checks the composition, not
     just each stage. engine/datawork/curation.py."""
     from engine.datawork.curation import curate_corpus
-    corpus, bench = _curate_inputs(spark, sf_dir)
+    corpus, bench = _bench_split(spark, sf_dir)
     return curate_corpus(corpus, bench, budget=60)
 
 
@@ -1475,7 +1469,7 @@ def q_corpus_curate_funnel(spark, sf_dir):
     """Per-stage survivor counts of the composed curation pipeline —
     the per-wave ingest telemetry row. engine/datawork/curation.py."""
     from engine.datawork.curation import curate_funnel
-    corpus, bench = _curate_inputs(spark, sf_dir)
+    corpus, bench = _bench_split(spark, sf_dir)
     return curate_funnel(corpus, bench, budget=60).orderBy("stage_idx")
 
 

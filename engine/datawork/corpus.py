@@ -13,6 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .textstats import md5_u32, nonblank, words
+
 
 def deduplicated_corpus(docs: DataFrame, clusters: DataFrame,
                         id_col: str = "doc_id") -> DataFrame:
@@ -74,10 +76,9 @@ def token_vocabulary(docs: DataFrame, text_col: str = "text",
     by (count desc, token asc — deterministic tie-break). One shuffle with
     map-side combine; top-k is a TakeOrdered, not a global sort."""
     from .dedup import _ensure_parallelism
-    w = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
     tok = (_ensure_parallelism(docs)
-           .filter(F.trim(F.col(text_col)) != "")
-           .select(F.explode(w).alias("token")))
+           .filter(nonblank(F.col(text_col)))
+           .select(F.explode(words(F.col(text_col))).alias("token")))
     return (tok.groupBy("token").agg(F.count("*").alias("n"))
             .orderBy(F.col("n").desc(), F.col("token"))
             .limit(top_k))
@@ -89,9 +90,7 @@ def hash_sample(docs: DataFrame, percent: int = 10,
     (first 8 hex digits mod 100) falls below the cutoff. Deterministic
     across engines, runs, and partitionings — the property RNG-based
     df.sample lacks; the standard way to pin a train/eval split."""
-    bucket = F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 8),
-                    16, 10).cast("long") % 100
-    return docs.filter(bucket < percent)
+    return docs.filter(md5_u32(F.col(id_col).cast("string")) % 100 < percent)
 
 
 def stratified_sample(docs: DataFrame, per_group: int,
@@ -196,10 +195,10 @@ def tfidf_top_terms(docs: DataFrame, top_k: int = 5,
     stopword head would land on one task — the join is the shape that
     survives skew."""
     from .dedup import _ensure_parallelism
-    w = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
     tok = (_ensure_parallelism(docs)
-           .filter(F.trim(F.col(text_col)) != "")
-           .select(F.col(id_col).alias("id"), F.explode(w).alias("term")))
+           .filter(nonblank(F.col(text_col)))
+           .select(F.col(id_col).alias("id"),
+                   F.explode(words(F.col(text_col))).alias("term")))
     tf = tok.groupBy("id", "term").agg(F.count("*").alias("tf"))
     df = tf.groupBy("term").agg(F.count("*").alias("df"))
     n = docs.agg(F.count("*").alias("n_docs"))
@@ -233,9 +232,7 @@ def unigram_logprob(docs: DataFrame, id_col: str = "doc_id",
     Empty/whitespace docs score NULL (no tokens — no evidence either way).
     """
     from .dedup import _ensure_parallelism
-    w = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-    toks_arr = F.when(F.trim(F.coalesce(F.col(text_col), F.lit(""))) != "",
-                      w)
+    toks_arr = F.when(nonblank(F.col(text_col)), words(F.col(text_col)))
     # explode_outer: empty docs ride the same aggregate as a null-term
     # row (avg/count skip nulls), so restoring them needs no
     # corpus×corpus re-join on the doc key (the dsir/quality lesson)
@@ -311,6 +308,7 @@ def chunk_documents(docs: DataFrame, max_tokens: int = 128,
     if not 0 < stride <= max_tokens:
         raise ValueError(f"need 0 < stride <= max_tokens, got "
                          f"{stride}/{max_tokens}")
+    # case kept, not textstats.words: chunks carry the doc's own words
     w = F.split(F.trim(F.col(text_col)), r"\s+")
     n = F.size(w)
     n_extra = F.when(
@@ -326,7 +324,7 @@ def chunk_documents(docs: DataFrame, max_tokens: int = 128,
             F.least(F.lit(max_tokens), n - k * stride).cast("int")
              .alias("n_tokens")))
     return (docs
-            .filter(F.trim(F.coalesce(F.col(text_col), F.lit(""))) != "")
+            .filter(nonblank(F.col(text_col)))
             .select(F.col(id_col), F.explode(chunks).alias("c"))
             .select(id_col, "c.chunk_idx", "c.text", "c.n_tokens"))
 

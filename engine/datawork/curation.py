@@ -34,15 +34,12 @@ from pyspark.sql import DataFrame, functions as F
 from engine.spark.schema import arrow_frame
 
 from . import stage_cache
+from .textstats import md5_u32
 
-#: md5-hash bucket in [0, 1e6) — the corpus.hash_sample idiom at ppm
-#: resolution. Deterministic across engines (md5 of the decimal id string).
+#: ids hash to a ppm bucket ``md5_u32(id) % _PPM`` in [0, 1e6) — the
+#: corpus.hash_sample rule at ppm resolution. Deterministic across engines
+#: (md5 of the decimal id string).
 _PPM = 1_000_000
-
-
-def _ppm_bucket(col):
-    return (F.conv(F.substring(F.md5(col.cast("string")), 1, 8), 16, 10)
-            .cast("long") % _PPM)
 
 
 def dedup_lines(docs: DataFrame, min_count: int = 2,
@@ -208,7 +205,8 @@ def temperature_sample(docs: DataFrame, budget: int,
                                    f"(denom * n_group)")).alias("cut_ppm")))
     return (docs.select(id_col, group_col)
             .join(F.broadcast(cuts), group_col)
-            .filter(_ppm_bucket(F.col(id_col)) < F.col("cut_ppm"))
+            .filter(md5_u32(F.col(id_col).cast("string")) % _PPM
+                    < F.col("cut_ppm"))
             .select(id_col, group_col, "n_group", "cut_ppm"))
 
 
@@ -399,7 +397,8 @@ def mixture_sample(docs: DataFrame, budget: int, weights: dict,
                        f"({sum_w} * n_group)")).alias("cut_ppm"))
     return (docs.select(id_col, group_col)
             .join(F.broadcast(cuts), group_col)
-            .filter(_ppm_bucket(F.col(id_col)) < F.col("cut_ppm"))
+            .filter(md5_u32(F.col(id_col).cast("string")) % _PPM
+                    < F.col("cut_ppm"))
             .select(id_col, group_col, "n_group", "cut_ppm"))
 
 
@@ -418,7 +417,7 @@ def assign_splits(docs: DataFrame, train_pct: int = 98, val_pct: int = 1,
     if not (0 < train_pct < 100 and 0 <= val_pct
             and train_pct + val_pct <= 100):
         raise ValueError(f"bad split percentages: {train_pct}/{val_pct}")
-    b = _ppm_bucket(F.col(id_col))
+    b = md5_u32(F.col(id_col).cast("string")) % _PPM
     split = (F.when(b < train_pct * (_PPM // 100), F.lit("train"))
              .when(b < (train_pct + val_pct) * (_PPM // 100), F.lit("val"))
              .otherwise(F.lit("test")))

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from . import stage_cache
-from .textstats import fingerprint
+from .textstats import fingerprint, md5_u32, word_ngrams, words
 
 MINHASH_K = 64      # signature length (production-scale; 8 was demo-sized)
 MINHASH_BANDS = 16  # bands of 4 → s-curve midpoint (1/16)^(1/4) = 0.5;
@@ -74,14 +74,7 @@ def shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     measured ~8 GB and minutes of wall inside the 500k-doc guard census)
     for work a narrow array op does for free."""
     df = _ensure_parallelism(df)
-    w = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-    # guard: sequence(1, 0) would generate a DESCENDING [1, 0] in Spark, so
-    # short texts get an explicit empty gram list
-    grams = F.when(
-        F.size(w) >= n,
-        F.transform(F.sequence(F.lit(1), F.size(w) - (n - 1)),
-                    lambda i: F.concat_ws(" ", F.slice(w, i, n)))
-    ).otherwise(F.array().cast("array<string>"))
+    grams = word_ngrams(words(F.col(text_col)), n)
     return df.select(F.col(id_col).alias("id"),
                      F.explode(F.array_distinct(grams)).alias("shingle"))
 
@@ -208,6 +201,7 @@ def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
     already exploded the shingles reuse them."""
     sh = shingles_df if shingles_df is not None \
         else shingles(df, id_col, text_col, n)
+    # both 32-bit halves of one digest, not textstats.md5_u32's first half
     dig = F.md5("shingle")
     base = sh.select(
         "id",
@@ -443,10 +437,9 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     expressions codegen ~6× faster than the per-bit CASE votes this replaced
     (2.25 s → 0.36 s for the sf0.1 signature stage)."""
     df = _ensure_parallelism(df)
-    w = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-    tok = (df.select(F.col(id_col).alias("id"), F.explode(w).alias("token"))
-             .withColumn("h", F.conv(F.substring(F.md5("token"), 1, 8), 16, 10)
-                         .cast("long")))
+    tok = (df.select(F.col(id_col).alias("id"),
+                     F.explode(words(F.col(text_col))).alias("token"))
+             .withColumn("h", md5_u32(F.col("token"))))
     sums = [F.sum(F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1))).alias(f"s{b}")
             for b in range(bits)]
     agg = tok.groupBy("id").agg(F.count("*").alias("n"), *sums)

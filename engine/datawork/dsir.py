@@ -5,7 +5,8 @@ TARGET corpus, by importance weighting under two bag-of-hashed-ngrams
 unigram models.
 
 Per document x with hashed-gram occurrences g₁..gₘ (unigrams + bigrams,
-md5-hashed into B buckets):
+hashed into B buckets as ``textstats.md5_u32(g) % B``, the feature hash the
+quality classifier's ``qc_bucket`` uses too):
 
     logw(x) = Σᵢ [ ln((ct[b(gᵢ)]+1)/(Nt+B)) − ln((cr[b(gᵢ)]+1)/(Nr+B)) ]
 
@@ -30,31 +31,25 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from . import stage_cache
+from .textstats import md5_u32, nonblank, word_ngrams, words
 
 DSIR_BUCKETS = 4096
 
 
-def _gram_occurrences(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, gram) with OCCURRENCES kept (no per-doc distinct — DSIR's
+def _grams(text_col: str) -> Column:
+    """A doc's feature grams, OCCURRENCES kept (no per-doc distinct — DSIR's
     feature vector is a count vector): word unigrams + bigrams over
-    whitespace-split lowered text. Empty/whitespace docs emit nothing."""
-    w = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-    # sequence(1, 0) would descend — short texts get an explicit empty list
-    bi = F.when(
-        F.size(w) >= 2,
-        F.transform(F.sequence(F.lit(1), F.size(w) - 1),
-                    lambda i: F.concat_ws(" ", F.slice(w, i, 2)))
-    ).otherwise(F.array().cast("array<string>"))
-    return (df.filter(F.trim(F.coalesce(F.col(text_col), F.lit(""))) != "")
+    whitespace-split lowered text."""
+    w = words(F.col(text_col))
+    return F.concat(w, word_ngrams(w, 2))
+
+
+def _gram_occurrences(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, gram) per ``_grams`` occurrence. Empty/whitespace docs emit
+    nothing."""
+    return (df.filter(nonblank(F.col(text_col)))
             .select(F.col(id_col).alias("id"),
-                    F.explode(F.concat(w, bi)).alias("gram")))
-
-
-def _bucket(col: Column, buckets: int) -> Column:
-    """md5-based hash bucket in [0, buckets) — the engine-shared idiom
-    (first 8 hex chars of md5, parsed base-16)."""
-    return (F.conv(F.substring(F.md5(col), 1, 8), 16, 10)
-            .cast("long") % buckets)
+                    F.explode(_grams(text_col)).alias("gram")))
 
 
 def dsir_weights(raw: DataFrame, target: DataFrame,
@@ -78,30 +73,22 @@ def dsir_weights(raw: DataFrame, target: DataFrame,
     # ~buckets-per-doc× LARGER shuffle — strictly worse at corpus scale,
     # since this shape's shuffles are only the map-combined 4096-row
     # model counts and the per-doc aggregate.
-    w = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-    bi = F.when(
-        F.size(w) >= 2,
-        F.transform(F.sequence(F.lit(1), F.size(w) - 1),
-                    lambda i: F.concat_ws(" ", F.slice(w, i, 2)))
-    ).otherwise(F.array().cast("array<string>"))
     # OUTER explode: empty docs ride the scoring aggregate as a null-
     # bucket row — re-joining back to ``raw`` to restore them would cost
     # a corpus×corpus sort-merge join
-    grams = F.when(
-        F.trim(F.coalesce(F.col(text_col), F.lit(""))) != "",
-        F.concat(w, bi))
+    grams = F.when(nonblank(F.col(text_col)), _grams(text_col))
     bstream = stage_cache.persist(
         "dsir_raw_buckets",
         _ensure_parallelism(raw)
         .select(F.col(id_col).alias("id"),
                 F.explode_outer(grams).alias("gram"))
         .select("id", F.when(F.col("gram").isNotNull(),
-                             _bucket(F.col("gram"), buckets)).alias("b")))
+                             md5_u32(F.col("gram")) % buckets).alias("b")))
     live = bstream.filter(F.col("b").isNotNull())
     cr = live.groupBy("b").agg(F.count("*").alias("cr"))
     nr = live.agg(F.count("*").alias("nr"))
     btgt = (_gram_occurrences(target, id_col, text_col)
-            .select(_bucket(F.col("gram"), buckets).alias("b")))
+            .select((md5_u32(F.col("gram")) % buckets).alias("b")))
     ct = btgt.groupBy("b").agg(F.count("*").alias("ct"))
     nt = btgt.agg(F.count("*").alias("nt"))
     llr = (F.log((F.coalesce(F.col("ct"), F.lit(0)) + 1)

@@ -13,7 +13,8 @@ Per document with token occurrences t₁..tₙ (whitespace-split lowered):
     margin = round(bias + (Σᵢ w[bucket(tᵢ)]) / n, 6)
     score  = round(1 / (1 + exp(-margin)), 6)
 
-bucket() is the engine-shared md5 idiom. The weight sum is EXACT BIGINT
+bucket() is ``qc_bucket``: ``textstats.md5_u32(t) % 1024``, the feature
+hash DSIR buckets its grams with too. The weight sum is EXACT BIGINT
 arithmetic: weights are 6-decimal literals, so w·10⁶ rounds to an exact
 integer in every engine and the per-doc reduction is
 (bias_µ·n + Σ w_µ) / (n·10⁶) — one correctly-rounded double division,
@@ -35,6 +36,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from engine.spark.schema import arrow_frame
 
+from .textstats import md5_u32, nonblank, words
+
 QC_BUCKETS = 1024
 _REPO = os.path.dirname(os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))))
@@ -42,10 +45,9 @@ DEFAULT_QC_WEIGHTS = os.path.join(_REPO, "data", "qc_weights.tsv")
 
 
 def qc_bucket(col: Column, buckets: int = QC_BUCKETS) -> Column:
-    """md5-based token bucket in [0, buckets) — must match
-    tools/train_qc.py's feature hashing exactly."""
-    return (F.conv(F.substring(F.md5(col), 1, 8), 16, 10)
-            .cast("long") % buckets)
+    """Token bucket in [0, buckets) — must match tools/train_qc.py's
+    feature hashing exactly."""
+    return md5_u32(col) % buckets
 
 
 def load_qc_weights(spark: SparkSession,
@@ -78,9 +80,7 @@ def classifier_scores(docs: DataFrame, weights: DataFrame,
     family's older re-join-to-docs shape costs a corpus×corpus sort-merge
     join just to restore them, which is a whole extra shuffle at scale.
     The plan here is: scan → broadcast weight join → one hash aggregate."""
-    toks = F.when(
-        F.trim(F.coalesce(F.col(text_col), F.lit(""))) != "",
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+"))
+    toks = F.when(nonblank(F.col(text_col)), words(F.col(text_col)))
     tok = docs.select(F.col(id_col).alias("id"),
                       F.explode_outer(toks).alias("term"))
     micro = lambda c: F.round(c * 1000000).cast("long")  # noqa: E731

@@ -35,6 +35,8 @@ from typing import Dict, Iterable, Iterator
 
 from pyspark.sql import DataFrame, functions as F
 
+from .textstats import nonblank, words
+
 
 def misra_gries(tokens: Iterable[str], k: int) -> Dict[str, int]:
     """The k-counter Misra-Gries summary of a token stream. Guarantees:
@@ -93,10 +95,8 @@ def heavy_hitters(docs: DataFrame, k: int = 50,
     cands = (docs.select(text_col)
              .mapInPandas(_partition_candidates, "term string")
              .distinct())
-    tok = (docs.filter(F.trim(F.col(text_col)) != "")
-           .select(F.explode(
-               F.split(F.trim(F.lower(F.col(text_col))), r"\s+"))
-               .alias("term")))
+    tok = (docs.filter(nonblank(F.col(text_col)))
+           .select(F.explode(words(F.col(text_col))).alias("term")))
     total = tok.agg(F.count("*").alias("n_total"))
     return (tok.join(F.broadcast(cands), "term")
             .groupBy("term").agg(F.count("*").cast("bigint").alias("cnt"))

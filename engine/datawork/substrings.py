@@ -55,7 +55,9 @@ from . import stage_cache
 
 def _tokens(text_col: str):
     """Whitespace tokens with empties dropped — identical spelling to the
-    oracle's list_filter(string_split_regex(trim(...)))."""
+    oracle's list_filter(string_split_regex(trim(...))). Not
+    ``textstats.words``/``word_ngrams``: span positions address the
+    case-kept tokens, and each window is hashed, not joined."""
     return F.filter(
         F.split(F.trim(F.coalesce(F.col(text_col), F.lit(""))), r"\s+"),
         lambda t: t != "")

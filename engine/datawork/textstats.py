@@ -4,6 +4,11 @@ All built-in column expressions — these run inside whole-stage codegen and
 scale linearly with no shuffle (pure projections). The per-language stopword
 lists are module constants shared with the oracle-SQL generator in
 ``__spark_entry__``.
+
+It is also the one spelling of four rules the datawork ops share with the
+DuckDB oracle: ``words``, ``word_ngrams``, ``nonblank`` and ``md5_u32`` (the
+hash behind every md5 bucket, sample and hashed feature). A site that keeps
+its own spelling says why there.
 """
 
 from __future__ import annotations
@@ -25,7 +30,31 @@ CJK_RE = "[一-鿿]"
 
 
 def words(text: Column) -> Column:
+    """Lowered whitespace words. Blank text gives ``[""]``: callers that
+    must skip it test ``nonblank`` first."""
     return F.split(F.trim(F.lower(text)), WS_SPLIT_RE)
+
+
+def word_ngrams(w: Column, n: int) -> Column:
+    """The n-word windows of word array ``w``, each joined by one space."""
+    # guard: sequence(1, 0) would generate a DESCENDING [1, 0] in Spark, so
+    # arrays shorter than n get an explicit empty gram list
+    return F.when(
+        F.size(w) >= n,
+        F.transform(F.sequence(F.lit(1), F.size(w) - (n - 1)),
+                    lambda i: F.concat_ws(" ", F.slice(w, i, n)))
+    ).otherwise(F.array().cast("array<string>"))
+
+
+def nonblank(text: Column) -> Column:
+    """True where ``text`` holds a non-space character; NULL is blank."""
+    return F.trim(F.coalesce(text, F.lit(""))) != ""
+
+
+def md5_u32(c: Column) -> Column:
+    """The first 8 hex digits of md5(c) as a long in [0, 2^32); callers
+    take their own ``% n``."""
+    return F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("long")
 
 
 def token_count_ws(text: Column) -> Column:
@@ -173,12 +202,7 @@ def with_repetition(df: DataFrame, text_col: str = "text", n: int = 3) -> DataFr
     §2.6 G3): distinct-to-total n-gram ratio per doc. A model stuck in a
     loop repeats n-grams, driving the ratio toward 0; clean prose sits near
     1. Pure column expressions (transform over a word-window sequence)."""
-    w = F.split(F.trim(F.lower(F.col(text_col))), WS_SPLIT_RE)
-    grams = F.when(
-        F.size(w) >= n,
-        F.transform(F.sequence(F.lit(1), F.size(w) - (n - 1)),
-                    lambda i: F.concat_ws(" ", F.slice(w, i, n)))
-    ).otherwise(F.array().cast("array<string>"))
+    grams = word_ngrams(words(F.col(text_col)), n)
     total = F.size(grams)
     distinct = F.size(F.array_distinct(grams))
     return df.withColumn(

@@ -45,7 +45,7 @@ from dataclasses import dataclass, field
 from datetime import datetime, timezone
 from typing import Optional
 
-from pyspark.accumulators import Accumulator
+from pyspark.accumulators import Accumulator, _accumulatorRegistry
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
@@ -228,19 +228,26 @@ def run_pipeline(spark: SparkSession, input_path: str, output_dir: str,
         # values). A shuffle between the map and the writer would make it a
         # map stage, whose re-runs can add twice.
         tallies = spark.sparkContext.accumulator({}, BucketTallies())
-        # sort BEFORE the extraction map, not after: the map is 1:1 and
-        # order-preserving per partition, so the output clustering is
-        # identical, but the sort moves the narrow transcript rows
-        # (~bytes of text) instead of the wide extracted rows (nested
-        # passages/tables/spans) — at scale the post-extract sort buffers
-        # the heavy rows and spills first (guide §8: move heavy bytes
-        # once; decide order on the light side)
-        extracted = extract_df(
-            wave_df.drop("conv_bucket")
-                   .sortWithinPartitions("conv_id", "turn_idx"),
-            n_buckets, None, tallies=tallies)
-        t_wave = time.monotonic()
-        out_sink.append(extracted)
+        try:
+            # sort BEFORE the extraction map, not after: the map is 1:1 and
+            # order-preserving per partition, so the output clustering is
+            # identical, but the sort moves the narrow transcript rows
+            # (~bytes of text) instead of the wide extracted rows (nested
+            # passages/tables/spans) — at scale the post-extract sort
+            # buffers the heavy rows and spills first (guide §8: move heavy
+            # bytes once; decide order on the light side)
+            extracted = extract_df(
+                wave_df.drop("conv_bucket")
+                       .sortWithinPartitions("conv_id", "turn_idx"),
+                n_buckets, None, tallies=tallies)
+            t_wave = time.monotonic()
+            out_sink.append(extracted)
+            counts = tallies.value
+        finally:
+            # pyspark's driver registry keeps every accumulator for the
+            # life of the session. Nothing adds to this one after its job
+            # ends: the DAGScheduler ignores a finished job's late results
+            _accumulatorRegistry.pop(tallies.aid, None)
 
         wall_ms = int((time.monotonic() - t_wave) * 1000)
         phases["extract_write"] += wall_ms / 1000.0
@@ -251,8 +258,7 @@ def run_pipeline(spark: SparkSession, input_path: str, output_dir: str,
              "partition_id": pid, "turns_processed": turns,
              "extraction_failures": failures, "bytes_parsed": nbytes,
              "wall_ms": wall_ms, "completed_at": completed_at}
-            for b, (turns, failures, nbytes, pid)
-            in sorted(tallies.value.items())]
+            for b, (turns, failures, nbytes, pid) in sorted(counts.items())]
         phases["lineage_read_agg"] += time.monotonic() - t_phase
         t_phase = time.monotonic()
         n_wave = sum(r["turns_processed"] for r in lin_rows)

@@ -114,7 +114,10 @@ def bucket_col(n_buckets: int):
     """Column expression computing the same bucket as ``stable_bucket``.
 
     Uses substr(md5(conv_id),1,8) parsed as hex — identical bytes to the
-    kernel's md5[:4]."""
+    kernel's md5[:4]. Spelled here rather than through
+    ``engine.datawork.textstats.md5_u32`` (the same hash): it is the
+    resume-bucket contract with ``stable_bucket``, and ``engine.spark``
+    does not import ``engine.datawork``."""
     from pyspark.sql import functions as F
     key = F.coalesce(F.col("conv_id"), F.lit(""))  # null-safe, matches kernel
     return (F.conv(F.substring(F.md5(key), 1, 8), 16, 10)

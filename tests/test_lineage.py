@@ -87,6 +87,32 @@ def test_fresh_run_reads_no_output_back(spark, src, tmp_path, monkeypatch):
     assert stats.turns_processed == spark.read.parquet(src).count()
 
 
+def test_runs_leave_accumulator_registry_unchanged(spark, src, tmp_path,
+                                                   monkeypatch):
+    """pyspark keeps every driver-side accumulator in a module registry
+    for the life of the session: each wave drops its ``BucketTallies``
+    once read, and a wave that fails drops it too."""
+    from pyspark.accumulators import _accumulatorRegistry
+
+    import engine.spark.pipeline as pipeline
+
+    before = set(_accumulatorRegistry)
+    for i in range(3):
+        pipeline.run_pipeline(spark, src, str(tmp_path / f"o{i}"),
+                              run_id=f"r{i}", waves=WAVES,
+                              n_buckets=N_BUCKETS)
+    assert set(_accumulatorRegistry) == before
+
+    def failing(*args, **kwargs):
+        raise RuntimeError("wave fails")
+
+    monkeypatch.setattr(pipeline, "extract_df", failing)
+    with pytest.raises(RuntimeError, match="wave fails"):
+        pipeline.run_pipeline(spark, src, str(tmp_path / "failed"),
+                              run_id="x", waves=WAVES, n_buckets=N_BUCKETS)
+    assert set(_accumulatorRegistry) == before
+
+
 PROBE = """
 import json, sys
 from pathlib import Path

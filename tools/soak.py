@@ -74,8 +74,8 @@ def _hash_unit(s):
     """Uniform [0, 1) from the md5 of string column ``s`` (deterministic,
     no RNG)."""
     from pyspark.sql import functions as F
-    return (F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("double")
-            / F.lit(2.0 ** 32))
+    from engine.datawork.textstats import md5_u32
+    return md5_u32(s) / F.lit(2.0 ** 32)
 
 
 def _zipf_template(seed, k: int):
@@ -384,6 +384,7 @@ def curation(spark, sf, copies, out):
                                           curate_funnel, dedup_lines,
                                           redact_pii, temperature_sample)
     from engine.datawork.pack import pack_shards
+    from engine.datawork.textstats import md5_u32
 
     docs = curation_corpus(spark, sf, copies)
     out.update(copies=copies, n_docs=docs.count(), zipf_k=CURATION_ZIPF_K)
@@ -398,8 +399,7 @@ def curation(spark, sf, copies, out):
                 "lines_dropped": agg["dropped"]}
     timed(out, "line_dedup", run_line_dedup)
 
-    bucket = (F.conv(F.substring(F.md5(F.col("doc_id").cast("string")),
-                                 1, 8), 16, 10).cast("long") % 100)
+    bucket = md5_u32(F.col("doc_id").cast("string")) % 100
     bench, pool = docs.filter(bucket < 1), docs.filter(bucket >= 1)
     timed(out, "decontaminate_1pct_bench", lambda: {
         "contaminated_docs": contamination_report(pool, bench, n=3).count()})
