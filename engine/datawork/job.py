@@ -45,10 +45,11 @@ columns, passed through where the op allows]):
     curate-funnel   the per-stage survivor counts of the same funnel
 
 Also runnable as ``python -m engine.datawork.job`` for local smoke.
-Under client-mode spark-submit add
-``--conf spark.driver.defaultJavaOptions=-XX:TieredStopAtLevel=1`` for
-``build_session``'s C1-only driver JVM (it is up before the builder runs);
-executors keep the JVM default.
+Under client-mode spark-submit the driver JVM is up before the builder
+runs, so pass ``build_session``'s driver JVM policy on the command line;
+executors keep the JVM default::
+
+    --conf "spark.driver.defaultJavaOptions=-XX:TieredStopAtLevel=1 -XX:MetaspaceSize=256m"
 """
 
 from __future__ import annotations

@@ -9,8 +9,10 @@ Also runnable as ``python -m engine.spark.job`` for local smoke (builds its
 own local[*] session). Package with ``python tools/package.py`` → engine.zip.
 
 In client-mode spark-submit the driver JVM is up before ``build_session``
-runs, so pass ``--conf spark.driver.defaultJavaOptions=-XX:TieredStopAtLevel=1``
-on the command line to get its C1-only driver; executors keep the JVM default.
+runs, so pass its driver JVM policy (C1-only JIT, no metaspace-triggered
+GCs) on the command line; executors keep the JVM default::
+
+    --conf "spark.driver.defaultJavaOptions=-XX:TieredStopAtLevel=1 -XX:MetaspaceSize=256m"
 """
 
 from __future__ import annotations
@@ -39,7 +41,23 @@ def build_session(master: str | None = None, app: str = "transcript-extract",
          # more). The launcher puts defaultJavaOptions before
          # --driver-java-options, so -XX:TieredStopAtLevel=4 there restores
          # C2. Executors keep the JVM default.
-         .config("spark.driver.defaultJavaOptions", "-XX:TieredStopAtLevel=1"))
+         # MetaspaceSize: the JVM starts at a 21 MB metaspace high-water
+         # mark, and Spark's class loading (plus each plan's generated
+         # classes) passes it again and again in a session's first jobs;
+         # each pass forces a young GC and a G1 concurrent mark. On 4 cores
+         # those took 0.5-1.6 s of GC CPU in the first 2k-turn pipeline run,
+         # 0.2 s with the mark at 256 MB. It is a GC trigger, not a reserve.
+         .config("spark.driver.defaultJavaOptions",
+                 "-XX:TieredStopAtLevel=1 -XX:MetaspaceSize=256m")
+         # no Python call-site capture per Column call: with it on, every
+         # pyspark.sql.functions / Column call walks the stack, tries to
+         # import IPython and ipykernel, and makes four extra JVM round
+         # trips. A 9-call bucket_col expression took 9.1 ms to build with
+         # it, 4.9 ms without; the first call paid 0.35-0.5 s for the
+         # IPython import; a cold 2k-turn, 16-bucket pipeline run took
+         # 4.7 s instead of 5.4 s (4 cores). Errors lose only the Python
+         # file:line of the DataFrame call that built the failing plan.
+         .config("spark.python.sql.dataFrameDebugging.enabled", "false"))
     if master:
         b = b.master(master)
     return b.getOrCreate()
